@@ -5,6 +5,9 @@ tables the query surface reads, shaped like the sf0.01 tables the program
 is verified on: the same columns and Arrow types, key ranges and value
 distributions. One Parquet file per table, `<dir>/<name>.parquet`.
 
+`FIXED_SEED` names the tables of the queries that read inputs which do not
+depend on the run's seed (see `QueryMix.FixedInput` in the harness).
+
     python3 perfbench/gen_tables.py <dir> <seed>
 """
 import os
@@ -29,6 +32,8 @@ WORDS = ["a", "agg", "batch", "big", "column", "customer", "data", "fast", "filt
          "slow", "small", "sort", "spark", "stream", "table", "the", "value", "vector",
          "window"]
 LANGS = ["de", "es", "fr", "zh"]
+# q140's output differs from its oracle on this seed's embeddings
+FIXED_SEED = 34
 
 
 def cents(x):
@@ -39,13 +44,15 @@ def days(rng, start, n, span):
     return (np.datetime64(start, "us") + rng.integers(0, span, n).astype("timedelta64[D]"))
 
 
-def generate(out, seed):
+def generate(out, seed, only=None):
+    """Write every table, or only those named in `only`."""
     os.makedirs(out, exist_ok=True)
     root = np.random.SeedSequence([seed, 20261018])
     rngs = iter([np.random.default_rng(s) for s in root.spawn(16)])
 
     def save(name, cols):
-        pq.write_table(pa.table(cols), os.path.join(out, f"{name}.parquet"))
+        if only is None or name in only:
+            pq.write_table(pa.table(cols), os.path.join(out, f"{name}.parquet"))
 
     i32, i64, f64, s = pa.int32(), pa.int64(), pa.float64(), pa.string()
     ts = pa.timestamp("us")

@@ -2,15 +2,18 @@
 
 End to end (untraced run): set-up time, throughput, median op time, CPU per
 op and heap after a full GC. Per layer (traced run): the spans around the
-program's public functions and Spark's own counters. The value pairs are
-(value, unit).
+program's public functions and Spark's own counters; a workload reports
+the layers it reaches, and run.py prints 0 for the others. The value pairs
+are (value, unit).
 
 Wall times in the end-to-end metrics are corrected for host CPU steal: a
 wall time is multiplied by 1 - s, where s is the share of the CPU time the
 guest wanted that the host gave to other tenants over that interval
 (/proc/stat: steal / (busy + steal)). On a shared 4-vCPU VM
-s ranged from 0.6% to 32% between otherwise identical runs and
-moved raw throughput by up to 25%. The raw figures stay in the run record.
+s ranged up to 48% between otherwise identical runs; over the accepted
+sets of ten runs the correction narrowed the spread of throughput from
+0.09-0.10 to 0.05-0.06 (scene-wind) and from 0.11-0.30 to 0.08-0.13
+(query-mix), see README. The raw figures stay in the run record.
 """
 import collections
 import json
@@ -22,7 +25,6 @@ MIB = 1048576.0
 
 # one query per layer the query-mix list reaches only through its queries
 QUERY_LAYERS = {"operators.inversion": "q16_invert_dualpol",
-                "operators.detrend": "q13_detrend",
                 "operators.histogram": "q42_grad_hist"}
 
 
@@ -33,9 +35,11 @@ def ops_of(art, label, kind=None):
     raise KeyError(label)
 
 
-def counts(art):
+def counts(art, faults=frozenset()):
+    """Ops attempted in the measured phase, and those that failed: raised,
+    or belong to a query whose check fails by a known fault."""
     ops = [o for p in art["phases"] for o in p["ops"]]
-    return len(ops), sum(1 for o in ops if not o["ok"])
+    return len(ops), sum(1 for o in ops if not o["ok"] or o.get("query") in faults)
 
 
 def unstolen(wall_s, steal_share):
@@ -45,9 +49,9 @@ def unstolen(wall_s, steal_share):
 def end_to_end(art):
     phase, ops = ops_of(art, "timed")
     n = len(ops)
-    rounds = art["setup_rounds"]
+    setup = art["setup"]
     return {
-        "setup_s": (stats.median([unstolen(r["setup_s"], r["steal_share"]) for r in rounds]), "s"),
+        "setup_s": (unstolen(setup["setup_s"], setup["steal_share"]), "s"),
         "throughput": (n / unstolen(phase["wall_s"], phase["steal_share"]), "op/s"),
         "op_p50_s": (stats.median([unstolen(o["wall_s"], o["steal_share"]) for o in ops]), "s"),
         "cpu_s_per_op": (phase["cpu_s"] / n, "s"),
@@ -64,25 +68,19 @@ def op_walls(art):
 def raw_end_to_end(art):
     """The same figures without the steal correction, for the run record."""
     phase, ops = ops_of(art, "timed")
-    return {"setup_s": stats.median([r["setup_s"] for r in art["setup_rounds"]]),
+    return {"setup_s": art["setup"]["setup_s"],
             "throughput": len(ops) / phase["wall_s"],
             "op_p50_s": stats.median([o["wall_s"] for o in ops]),
             "steal_share": phase["steal_share"]}
 
 
-def spans_by_op(out):
-    by = collections.defaultdict(dict)
-    path = os.path.join(out, "spans.jsonl")
-    with open(path) as f:
-        for line in f:
-            s = json.loads(line)
-            by[s["op"]][s["name"]] = s["end_s"] - s["start_s"]
-    return by
+def load_spans(out):
+    with open(os.path.join(out, "spans.jsonl")) as f:
+        return [json.loads(x) for x in f]
 
 
-def self_times(out):
+def self_times(spans):
     """Span duration minus the part its children cover, summed per name."""
-    spans = [json.loads(x) for x in open(os.path.join(out, "spans.jsonl"))]
     kids = collections.defaultdict(list)
     for s in spans:
         kids[s["parent"]].append(s)
@@ -97,22 +95,28 @@ def group(o, name, key):
     return o["groups"].get(name, {}).get(key, 0.0)
 
 
-def per_layer(workload, art, out):
+def med(xs):
+    xs = list(xs)
+    return stats.median(xs) if xs else 0.0
+
+
+def per_layer(art, out):
+    """Per-layer metrics of a traced run, {name: (value, unit)}, for the
+    layers this workload reaches, and the self time of every span name."""
     # plain ops are the reference: the overhead baseline and the source of
     # Spark's counters; traced and layer-by-layer ops carry the spans
     _, ref = ops_of(art, "traced", "plain")
     _, traced = ops_of(art, "traced", "traced")
     _, layered = ops_of(art, "traced", "layers")
-    spans = spans_by_op(out)
+    spans = load_spans(out)
+    by_op = collections.defaultdict(dict)
+    for s in spans:
+        by_op[s["op"]][s["name"]] = s["end_s"] - s["start_s"]
     n = len(ref)
     cores = art["cores"]
 
-    def med(xs):
-        xs = list(xs)
-        return stats.median(xs) if xs else 0.0
-
     def span_med(ops, name):
-        return med(spans[o["op"]][name] for o in ops if name in spans[o["op"]])
+        return med(by_op[o["op"]][name] for o in ops if name in by_op[o["op"]])
 
     m = {
         "queries.build_s": (span_med(traced, "queries.build"), "s"),
@@ -129,53 +133,36 @@ def per_layer(workload, art, out):
         "spark.spill_mb_per_op": (sum(o["spill_b"] for o in ref) / n / MIB, "MiB"),
         "spark.executor_cpu_s_per_op": (sum(o["executor_cpu_s"] for o in ref) / n, "s"),
         "jvm.gc_s_per_op": (sum(o["gc_s"] for o in ref) / n, "s"),
-        # scene-streaks builds no LUT
-        "models.lut_build_s": (med(r.get("lut_build_s", 0.0) for r in art["setup_rounds"]), "s"),
-        "models.lut_mb": (art["setup_rounds"][-1].get("lut_mb", 0.0), "MiB"),
         "core.cache_mb": (sum(o["cache_mb"] for o in ref) / n, "MiB"),
         "core.release_s": (sum(o["release_s"] for o in ref) / n, "s"),
         "trace.overhead_ratio": (med(o["wall_s"] for o in traced) / med(o["wall_s"] for o in ref) - 1.0, "ratio"),
     }
-    # the inversion kernel: a layer of its own on scene-wind, q16 on
-    # query-mix (none on scene-streaks)
-    if layered and any("operators.inversion" in spans[o["op"]] for o in layered):
-        inv = [(spans[o["op"]]["operators.inversion"], o["px"] / 1e6,
+    setup = art["setup"]
+    if "lut_build_s" in setup:           # scene-streaks builds no LUT
+        m["models.lut_build_s"] = (setup["lut_build_s"], "s")
+        m["models.lut_mb"] = (setup["lut_mb"], "MiB")
+    # scene workloads: every layer of the layer-by-layer ops
+    for name in sorted({k for o in layered for k in by_op[o["op"]] if k != "op"}):
+        m[f"{name}_s"] = (span_med(layered, name), "s")
+    if layered:
+        m["sources.read_mb_per_s"] = (med(o["read_bytes"] / MIB / by_op[o["op"]]["sources.read"]
+                                          for o in layered), "MiB/s")
+        m["sink.output_mb_per_op"] = (med(o["output_bytes"] / MIB for o in layered), "MiB")
+    # query-mix: every query, and the layers it reaches through one query each
+    for q in sorted({o["query"] for o in traced if "query" in o}):
+        m[f"query.{q}.p50_s"] = (med(by_op[o["op"]]["op"] for o in traced if o["query"] == q), "s")
+    for layer, q in QUERY_LAYERS.items():
+        if any(o.get("query") == q for o in traced):
+            m[f"{layer}_s"] = (med(by_op[o["op"]]["queries.exec"] for o in traced if o["query"] == q), "s")
+    # the inversion kernel: a layer of its own on scene-wind, q16 on query-mix
+    if any("operators.inversion" in by_op[o["op"]] for o in layered):
+        inv = [(by_op[o["op"]]["operators.inversion"], o["px"] / 1e6,
                 group(o, "operators.inversion", "executor_cpu_s")) for o in layered]
     else:
         q = QUERY_LAYERS["operators.inversion"]
-        inv = [(spans[o["op"]]["queries.exec"], o["output_rows"] / 1e6, group(o, "exec", "executor_cpu_s"))
+        inv = [(by_op[o["op"]]["queries.exec"], o["output_rows"] / 1e6, group(o, "exec", "executor_cpu_s"))
                for o in traced if o.get("query") == q]
-    m["operators.inversion_s"] = (med(t for t, _, _ in inv), "s")
-    m["operators.inversion_mpx_per_s"] = (med(px / t for t, px, _ in inv), "Mpx/s")
-    m["operators.inversion_cpu_s_per_mpx"] = (med(c / px for _, px, c in inv), "s/Mpx")
-    return m
-
-
-def layer_record(workload, art, out):
-    """Everything per layer, for the run record: the printed metrics plus
-    the layers only one workload reaches (scene I/O and nesz flattening on
-    the scenes, the raster operators and each query on query-mix)."""
-    rec = {}
-    _, traced = ops_of(art, "traced", "traced")
-    _, layered = ops_of(art, "traced", "layers")
-    spans = spans_by_op(out)
-    names = sorted({k for o in layered for k in spans[o["op"]] if k != "op"})
-    for name in names:
-        xs = [spans[o["op"]][name] for o in layered if name in spans[o["op"]]]
-        rec[f"{name}_s"] = stats.median(xs)
-    if layered:
-        reads = [o["read_bytes"] / MIB / spans[o["op"]]["sources.read"] for o in layered]
-        rec["sources.read_mb_per_s"] = stats.median(reads)
-        rec["sink.output_mb_per_op"] = stats.median(o["output_bytes"] / MIB for o in layered)
-    per_query = collections.defaultdict(list)
-    for o in traced:
-        if "query" in o:
-            per_query[o["query"]].append(spans[o["op"]]["op"])
-    for q, xs in per_query.items():
-        rec[f"query.{q}.p50_s"] = stats.median(xs)
-    for layer, q in QUERY_LAYERS.items():
-        if q in per_query:
-            rec[f"{layer}_s (via {q})"] = stats.median(
-                spans[o["op"]]["queries.exec"] for o in traced if o.get("query") == q)
-    rec["self_s"] = self_times(out)
-    return rec
+    if inv:
+        m["operators.inversion_mpx_per_s"] = (med(px / t for t, px, _ in inv), "Mpx/s")
+        m["operators.inversion_cpu_s_per_mpx"] = (med(c / px for _, px, c in inv), "s/Mpx")
+    return m, self_times(spans)

@@ -9,19 +9,20 @@ import org.apache.spark.sql.SparkSession
 
 /** The benchmark harness: one JVM, one client in a closed loop.
   *
-  * usage: perfbench.Main <workload> <seed> <seconds> <trace 0|1> <out-dir> <cores>
+  * usage: perfbench.Main <workload> <seed> <seconds> <trace 0|1> <out-dir> <cores> <run-start-epoch-ms> <lut-dir>
   *
-  * Set-up runs `SetupRounds` times (fresh session, fresh inputs, cold LUT
-  * build and memo fill, one cold op); the workload's untimed warm-up
-  * follows. The timed phase then runs a fixed number of whole rounds, as
-  * many as take about `seconds` at the workload's nominal round time; with
-  * trace 1, a traced round bracketed by two plain ones.
+  * Set-up starts the session, generates the inputs, fills the process-wide
+  * memos (the broadcast LUT, the row-count memo) and runs the workload's
+  * untimed warm-up, its first cold pass. `setup_s` runs from the start of
+  * the run (`run-start-epoch-ms`, taken by `run.py` before it generates
+  * any input) to the first timed op. The timed phase then runs a fixed
+  * number of whole rounds, as many as take about `seconds` at the
+  * workload's nominal round time; with trace 1, a traced round bracketed
+  * by two plain ones.
   * Everything measured goes to `<out-dir>/artifact.json`; `run.py` turns
   * it into metrics.
   */
 object Main {
-  val SetupRounds = 3
-
   def session(cores: Int, out: Path, listener: GroupListener): SparkSession = {
     val spark = graft.core.GraftSession.builder(s"local[$cores]", "perfbench")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -64,7 +65,7 @@ object Main {
     Files.readString(Paths.get("/proc/loadavg")).trim.split("\\s+")(0).toDouble
 
   def main(argv: Array[String]): Unit = {
-    val Array(wlName, seedS, secondsS, traceS, outS, coresS) = argv
+    val Array(wlName, seedS, secondsS, traceS, outS, coresS, runStartS, lutS) = argv
     val originNs = System.nanoTime()
     val seed = seedS.toLong
     val seconds = secondsS.toDouble
@@ -85,8 +86,10 @@ object Main {
     val failures = mutable.ArrayBuffer.empty[Map[String, Any]]
 
     // ---------------------------------------------------------- set-up
-    var spark: SparkSession = null
-    var ctx: Ctx = null
+    val tSession = System.nanoTime()
+    val spark = session(cores, out, listener)
+    val ctx = new Ctx(spark, tracer, out.resolve("inputs"), out, Paths.get(lutS).toAbsolutePath, seed)
+    val sessionS = (System.nanoTime() - tSession) / 1e9
     def sc = spark.sparkContext
 
     /** Run one op, timed, and return its record: wall, process CPU and GC,
@@ -123,35 +126,20 @@ object Main {
         "groups" -> groups.map { case (g, c) => g -> c.toMap })
     }
 
-    // ---------------------------------------------------------- set-up
-    val rounds = mutable.ArrayBuffer.empty[Map[String, Any]]
-    for (r <- 1 to SetupRounds) {
-      if (spark != null) spark.stop()
-      val t0 = System.nanoTime()
-      val h0 = if (r == 1) host0 else procStat()
-      spark = session(cores, out, listener)
-      ctx = new Ctx(spark, tracer, out.resolve("inputs").resolve(s"round-$r"), out, seed)
-      val sessS = (System.nanoTime() - t0) / 1e9
-      val prep = wl.prepare(ctx)
-      wl.beforeRound(ctx)
-      val cold = measure("cold", 0)(op => wl.run(ctx, 0, op))
-      val roundS =
-        if (r == 1) (System.currentTimeMillis() - Proc.startEpochMs()) / 1e3
-        else (System.nanoTime() - t0) / 1e9
-      rounds += prep ++ Map("round" -> r, "setup_s" -> roundS, "session_s" -> sessS,
-        "steal_share" -> stealShare(h0, procStat()),
-        "cold_op_s" -> cold("wall_s"), "from_process_start" -> (r == 1))
-    }
-    artifact("setup_rounds") = rounds.toSeq
+    val prep = wl.prepare(ctx)
+    val tw = System.nanoTime()
+    val warmupOps = wl.warmup(ctx, () => nextOp())
+    val warmupS = (System.nanoTime() - tw) / 1e9
+    listener.take(sc, "")
+    val runStartMs = runStartS.toLong
+    artifact("setup") = prep ++ Map(
+      "setup_s" -> (System.currentTimeMillis() - runStartMs) / 1e3,
+      "jvm_start_s" -> (Proc.startEpochMs() - runStartMs) / 1e3,
+      "session_s" -> sessionS, "warmup_s" -> warmupS, "warmup_ops" -> warmupOps,
+      // host steal from JVM start; the inputs made before it take a second or two
+      "steal_share" -> stealShare(host0, procStat()))
     artifact("session_config") = spark.conf.getAll.toSeq.sortBy(_._1)
       .filterNot(_._1.startsWith("spark.app.")).toMap
-    listener.take(sc, "")
-
-    // --------------------------------------------------------- warm-up
-    val tw = System.nanoTime()
-    wl.warmup(ctx, () => nextOp())
-    artifact("warmup_s") = (System.nanoTime() - tw) / 1e9
-    listener.take(sc, "")
 
     // ----------------------------------------------------- timed phase
     /** Whole rounds, a fixed number so every run of a workload does the
@@ -193,11 +181,15 @@ object Main {
       if (!trace) phase("timed", seconds, traced = false)
       else phase("traced", seconds, traced = true))
     artifact("phases") = phases
+    val th = System.nanoTime()
     artifact("heap_mb") = Proc.heapAfterGcMb()
+    artifact("heap_gc_s") = (System.nanoTime() - th) / 1e9
     artifact("failures") = failures.toSeq
 
     // ------------------------------------------------------ wrap-up
+    val tf = System.nanoTime()
     artifact("finish") = wl.finish(ctx)
+    artifact("finish_s") = (System.nanoTime() - tf) / 1e9
     if (trace) {
       val lines = tracer.toRecords(originNs).map(Json.str)
       Files.write(out.resolve("spans.jsonl"), (lines.mkString("\n") + "\n").getBytes("UTF-8"))

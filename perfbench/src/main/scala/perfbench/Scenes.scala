@@ -133,7 +133,7 @@ object Scenes {
   val StreakLines = 128
   val StreakSamples = 128
   val StreakWindow = 16
-  val StreakDownscales = Seq(1, 2)
+  val StreakDownscales = Seq(1)
   val StreakAmp = 0.15
   val SpeckleDb = 0.5
 
@@ -194,10 +194,13 @@ object Scenes {
   }
 
   /** Low-resolution LUTs the wind recipe inverts against, exported with the
-    * program's LUT writer for the numpy re-computation. */
+    * program's LUT writer for the numpy re-computation. They depend on the
+    * program alone, so `dir` is kept per build and a complete export is
+    * not repeated. */
   def exportLuts(spark: org.apache.spark.sql.SparkSession, dir: Path): Unit =
     Seq("gmf_cmod5n", "gmf_s1_v2").foreach { m =>
-      graft.models.LutIO.writeLut(spark, m, dir.resolve(s"lut-$m").toString)
+      val d = dir.resolve(s"lut-$m")
+      if (!Files.exists(d.resolve("_SUCCESS"))) graft.models.LutIO.writeLut(spark, m, d.toString)
     }
 
   def lutMb(l: Lut): Double =

@@ -15,9 +15,9 @@ import graft.operators.{Directions, Gradients, Inversion, WindUtils}
 import graft.pipeline.Recipes
 
 /** What one op needs: the live session, the tracer and the directories of
-  * this set-up round's inputs and of the run's outputs. */
+  * the run's inputs and outputs. */
 final class Ctx(val spark: SparkSession, val tracer: Tracer,
-    val inputs: Path, val out: Path, val seed: Long) {
+    val inputs: Path, val out: Path, val luts: Path, val seed: Long) {
   def group(op: Int, phase: String): Unit =
     spark.sparkContext.setJobGroup(s"$op/$phase", phase, interruptOnCancel = false)
 }
@@ -73,9 +73,9 @@ trait Workload {
     graft.core.CacheLife.releaseScoped(ctx.spark)
   /** Called before the first op of every round. */
   def beforeRound(ctx: Ctx): Unit = ()
-  /** An untimed pass after set-up, beyond the set-up rounds' cold ops;
-    * may write outputs for the checkers. */
-  def warmup(ctx: Ctx, op: () => Int): Unit = ()
+  /** The untimed first cold pass that ends set-up; may write outputs for
+    * the checkers. Returns each op's name and wall time. */
+  def warmup(ctx: Ctx, op: () => Int): Seq[Map[String, Any]]
   /** After the timed phase: leave what the output checkers need. */
   def finish(ctx: Ctx): Map[String, Any] = Map.empty
 }
@@ -117,7 +117,9 @@ import Workload.{dirBytes, persisted}
 /** Scenes are a pool read round-robin; each op's product lands in its own
   * directory so every op's output is checked. */
 abstract class SceneWorkload extends Workload {
-  val PoolSize = 2
+  def PoolSize: Int
+  /** Untimed rounds at the end of set-up: the cold pass and JIT warm-up. */
+  def WarmupRounds: Int
   protected var scenes: IndexedSeq[Scenes.Scene] = IndexedSeq.empty
   def round: IndexedSeq[String] = (0 until PoolSize).map(k => s"scene-$k")
   protected def make(ctx: Ctx, k: Int): Scenes.Scene
@@ -141,17 +143,29 @@ abstract class SceneWorkload extends Workload {
     Map("scene_bytes" -> scenes.map(s => Files.size(s.nc)).sum / PoolSize)
   }
 
+  def warmup(ctx: Ctx, op: () => Int): Seq[Map[String, Any]] =
+    for (_ <- 1 to WarmupRounds; k <- round.indices) yield {
+      val o = op()
+      val t0 = System.nanoTime()
+      ctx.group(o, "warmup")
+      sink(ctx, k, o, build(ctx, k, o))
+      afterOp(ctx, k, o)
+      Map("name" -> round(k), "wall_s" -> (System.nanoTime() - t0) / 1e9)
+    }
+
   override def finish(ctx: Ctx): Map[String, Any] = {
     val m = opScene.toSeq.map { case (op, k) => Map("op" -> op, "scene" -> k) }
     Json.write(ctx.out.resolve("products").resolve("ops.json"), Map(
-      "scenes_dir" -> ctx.inputs.toString, "ops" -> m))
+      "scenes_dir" -> ctx.inputs.toString, "luts_dir" -> ctx.luts.toString, "ops" -> m))
     Map.empty
   }
 }
 
 /** read scene → Recipes.windRetrieval → L2 Parquet product. */
 final class SceneWind extends SceneWorkload {
-  val nominalRoundS = 3.4
+  val PoolSize = 2
+  val WarmupRounds = 2
+  val nominalRoundS = 2.8
   protected def make(ctx: Ctx, k: Int): Scenes.Scene = Scenes.windScene(ctx.seed, k, ctx.inputs)
 
   override def prepare(ctx: Ctx): Map[String, Any] = {
@@ -211,14 +225,16 @@ final class SceneWind extends SceneWorkload {
   }
 
   override def finish(ctx: Ctx): Map[String, Any] = {
-    Scenes.exportLuts(ctx.spark, ctx.out.resolve("luts"))
+    Scenes.exportLuts(ctx.spark, ctx.luts)
     super.finish(ctx)
   }
 }
 
 /** read scene → Recipes.detrend → Recipes.streaks → Parquet product. */
 final class SceneStreaks extends SceneWorkload {
-  val nominalRoundS = 7.4
+  val PoolSize = 1
+  val WarmupRounds = 3
+  val nominalRoundS = 2.0
   protected def make(ctx: Ctx, k: Int): Scenes.Scene = Scenes.streakScene(ctx.seed, k, ctx.inputs)
 
   private def grid(det: DataFrame): DataFrame =
@@ -260,26 +276,22 @@ final class SceneStreaks extends SceneWorkload {
 }
 
 /** One sf0.01-shaped query per op, built, planned and run to the noop sink,
-  * going round a fixed ordered list. */
+  * going round a fixed ordered list. Queries in `QueryMix.FixedInput` read
+  * tables that do not depend on the seed (see there). */
 final class QueryMix extends Workload {
   val round: IndexedSeq[String] = QueryMix.Queries
-  val nominalRoundS = 8.5
+  val nominalRoundS = 10.0
 
   private val fns = graft.SparkEntry.queries
   private var completed = Set.empty[String]
   private val outRows = mutable.LinkedHashMap.empty[String, Long]
   val passCacheMb = mutable.ArrayBuffer.empty[Map[String, Any]]
-  private def sfDir(ctx: Ctx): String = ctx.inputs.resolve("sf").toString
+  /** Tables come from gen_tables.py, run before the JVM starts. */
+  private def sfDir(ctx: Ctx, k: Int = -1): String =
+    ctx.out.resolve(if (k >= 0 && QueryMix.FixedInput(round(k))) "tables-fixed" else "tables").toString
 
-  /** Tables come from gen_tables.py (run before the JVM starts); each
-    * round stages a fresh copy, so the path-keyed memos start cold. */
   def prepare(ctx: Ctx): Map[String, Any] = {
     val spark = ctx.spark
-    val src = ctx.out.resolve("tables")
-    val dst = ctx.inputs.resolve("sf")
-    Files.createDirectories(dst)
-    val ls = Files.list(src)
-    try ls.forEach(f => Files.copy(f, dst.resolve(f.getFileName))) finally ls.close()
     val t0 = System.nanoTime()
     // the row-count memo the listed queries size themselves from
     Seq("documents", "embeddings").foreach(n => graft.core.Tables.rowCount(spark, sfDir(ctx), n))
@@ -306,7 +318,7 @@ final class QueryMix extends Workload {
     graft.core.CacheLife.afterQuery(ctx.spark, completed)
   }
 
-  def build(ctx: Ctx, k: Int, op: Int): DataFrame = fns(round(k))(ctx.spark, sfDir(ctx))
+  def build(ctx: Ctx, k: Int, op: Int): DataFrame = fns(round(k))(ctx.spark, sfDir(ctx, k))
 
   def sink(ctx: Ctx, k: Int, op: Int, df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -316,33 +328,41 @@ final class QueryMix extends Workload {
 
   /** The untimed pass writes every output for the DuckDB and property
     * checks. */
-  override def warmup(ctx: Ctx, op: () => Int): Unit = {
+  def warmup(ctx: Ctx, op: () => Int): Seq[Map[String, Any]] = {
     beforeRound(ctx)
-    round.indices.foreach { k =>
+    round.indices.map { k =>
       val name = round(k)
       val o = op()
+      val t0 = System.nanoTime()
       ctx.group(o, "verify")
       val path = ctx.out.resolve("outputs").resolve(name).toString
       build(ctx, k, o).write.mode("overwrite").parquet(path)
       outRows(name) = ctx.spark.read.parquet(path).count()
       afterOp(ctx, k, o)
+      Map("name" -> name, "wall_s" -> (System.nanoTime() - t0) / 1e9)
     }
   }
 
   override def finish(ctx: Ctx): Map[String, Any] = {
     val oracles = graft.SparkEntry.oracleSql.filter { case (n, _) => round.contains(n) }
     Json.write(ctx.out.resolve("outputs").resolve("oracles.json"),
-      Map("oracles" -> oracles, "rows" -> outRows))
+      Map("oracles" -> oracles, "rows" -> outRows, "fixed_input" -> QueryMix.FixedInput.toSeq))
     Map("pass_cache_mb" -> passCacheMb.toSeq, "output_rows" -> outRows)
   }
 }
 
 object QueryMix {
   val Queries: IndexedSeq[String] = IndexedSeq(
-    // graph queries that run jobs while their DataFrame is being built
-    "q89_pagerank", "q169_personalized_pr",
+    // queries that run jobs while their DataFrame is being built
+    "q89_pagerank", "q140_mmr_diversify",
     // the global / keyed twins of one statistic
     "q196_binary_auc", "q202_group_auc",
     // SAR operators on the small lineitem-derived scene
-    "q13_detrend", "q16_invert_dualpol", "q42_grad_hist")
+    "q16_invert_dualpol", "q42_grad_hist")
+
+  /** q140's output differs from its DuckDB oracle in the sixth decimal on
+    * some inputs and not on others. It reads the embeddings of one fixed
+    * seed (`gen_tables.FIXED_SEED`) on which it differs every time, so its
+    * ops fail the same way in every run; `run.py` counts them as failed. */
+  val FixedInput: Set[String] = Set("q140_mmr_diversify")
 }

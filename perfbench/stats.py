@@ -46,7 +46,7 @@ def selftest():
     p, v = tail(xs)
     assert (p, v) == (80, 40), (p, v)
     assert sum(1 for x in xs if x > v) == 10
-    # 44 samples (two query-mix passes): 77th percentile, rank 34
+    # 44 samples: 77th percentile, rank 34
     xs = [float(i) for i in range(44)]
     p, v = tail(xs)
     assert (p, v) == (77, 33.0), (p, v)

@@ -3,7 +3,8 @@
 print each end-to-end metric's median, quartiles and spread (inter-quartile
 distance over the median) against its bound from BENCHMARK.json, and the
 tail of the op times pooled over all runs (one run holds too few ops for a
-tail of its own).
+tail of its own). The wall-time metrics' spread is also printed without the
+host-steal correction (`raw` in each run's result.json), for comparison.
 
     python3 perfbench/steady.py --workload scene-wind [--runs 10] [--first-seed 1]
     python3 perfbench/steady.py --selftest
@@ -43,6 +44,7 @@ def main():
     values = {name: [] for name in bounds}
     failed_shares = []
     pooled = []
+    raw = {name: [] for name in ("setup_s", "throughput", "op_p50_s")}
     for i in range(args.runs):
         seed = args.first_seed + i
         p = subprocess.run([sys.executable, os.path.join(HERE, "run.py"), "--workload", args.workload,
@@ -54,7 +56,10 @@ def main():
         rec = max(glob.glob(os.path.join(HERE, "runs", f"{args.workload}-seed{seed}-trace0-*")),
                   key=os.path.getmtime)
         with open(os.path.join(rec, "result.json")) as f:
-            pooled += json.load(f)["op_wall_s"]
+            record = json.load(f)
+        pooled += record["op_wall_s"]
+        for name in raw:
+            raw[name].append(record["raw"][name])
         failed_shares.append(res["failed"] / res["attempted"])
         line = [f"seed={seed}", f"correct={res['correct']}", f"ops={res['attempted']}"]
         for name in values:
@@ -62,13 +67,14 @@ def main():
             line.append(f"{name}={res['metrics'][name]['value']:.4g}")
         print(" ".join(line), flush=True)
     print(f"\n{args.workload}: {args.runs} runs, failed share {sorted(set(failed_shares))}")
-    print(f"{'metric':<14} {'unit':<6} {'median':>10} {'q1':>10} {'q3':>10} {'spread':>8} {'bound':>6}  ok(<bound/3)")
+    print(f"{'metric':<14} {'unit':<6} {'median':>10} {'q1':>10} {'q3':>10} {'spread':>8} {'raw':>6} {'bound':>6}  ok(<bound/3)")
     for name, xs in values.items():
         q1, q2, q3 = stats.quartiles(xs)
         sp = stats.spread(xs)
         b = bounds[name]["bound"]
         gated = name != "setup_s"
-        print(f"{name:<14} {bounds[name]['unit']:<6} {q2:>10.4g} {q1:>10.4g} {q3:>10.4g} {sp:>8.3f} {b:>6.2f}  "
+        sp_raw = f"{stats.spread(raw[name]):.3f}" if name in raw else "-"
+        print(f"{name:<14} {bounds[name]['unit']:<6} {q2:>10.4g} {q1:>10.4g} {q3:>10.4g} {sp:>8.3f} {sp_raw:>6} {b:>6.2f}  "
               f"{('yes' if sp < b / 3 else 'NO') if gated else '(not gated)'}")
     t = stats.tail(pooled)
     if t:
