@@ -60,7 +60,8 @@ object ScaleBench {
     var nTargetsRun = 0
     var nTargetsSkipped = 0
     val sessionT0 = System.nanoTime()
-    def timed[A](name: String)(f: => A): A = {
+    // `note` is read after the target ran and printed after its seconds
+    def timed[A](name: String, note: () => String = () => "")(f: => A): A = {
       if (onlyFilter.exists(fs => !fs.exists(name.contains))) {
         nTargetsSkipped += 1
         println(f"[scale] $name%-42s skipped")
@@ -69,13 +70,20 @@ object ScaleBench {
         val t0 = System.nanoTime()
         val r = f
         nTargetsRun += 1
-        println(f"[scale] $name%-42s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+        println(f"[scale] $name%-42s ${(System.nanoTime() - t0) / 1e9}%8.2f s${note()}")
         // drop CacheLife-scoped temps the target's operators registered —
         // without a release hook they would pin storage for the whole
         // combined session (the registry holds strong frame references)
         graft.core.CacheLife.releaseScoped(spark)
         r
       }
+    }
+
+    // copol LUT cells the inversion argmin visited per pixel from here on
+    def cellsPerPixel(nPx: Long): () => String = {
+      val cells = Inversion.cellsVisited(spark.sparkContext)
+      val c0 = cells.value
+      () => f"  ${(cells.value - c0).toDouble / nPx}%.0f cells/px"
     }
 
     if (on("scene")) {
@@ -99,7 +107,7 @@ object ScaleBench {
       .withColumn("phi_t", (col("sample") % 360) * lit(0.5))
 
     // 3. dual-pol inversion over the full scene (4.25M px default)
-    timed(s"dualpol_inversion_${nL}x$nS") {
+    timed(s"dualpol_inversion_${nL}x$nS", cellsPerPixel(nL.toLong * nS)) {
       val luts = Inversion.buildLuts(spark, Some("gmf_cmod5n"), Some("gmf_s1_v2"), highRes = false)
       val px = scene.select(
         col("line").cast("long").as("okey"), col("sample").cast("long").as("lnum"),
@@ -2740,7 +2748,7 @@ object ScaleBench {
         .withColumn("incidence", lit(16.0) + lit(34.0) * col("sample") / lit(bS - 1.0))
         .withColumn("wspd_t", lit(4.0) + (col("line") % 40) * lit(0.7))
         .withColumn("phi_t", (col("sample") % 360) * lit(0.5))
-      timed(s"dualpol_inversion_${bL}x$bS") {
+      timed(s"dualpol_inversion_${bL}x$bS", cellsPerPixel(bL.toLong * bS)) {
         val luts = Inversion.buildLuts(spark, Some("gmf_cmod5n"), Some("gmf_s1_v2"), highRes = false)
         val px = bigScene.select(
           col("line").cast("long").as("okey"), col("sample").cast("long").as("lnum"),

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory with scale-oriented defaults.
@@ -84,10 +86,16 @@ object Plans {
           }
           if (scanParts.nonEmpty) scanParts.max else 0
         }
-      } catch { case _: Throwable =>
-        df.queryExecution.executedPlan.outputPartitioning.numPartitions }
+      } catch { case NonFatal(e) =>
+        // a plan that cannot report its splits is treated as split-starved:
+        // spreading an input is always correct, only maybe redundant
+        log.warn(s"ensureMinPartitions: split count unavailable ($e); repartitioning to $minPar")
+        0
+      }
     if (planned < minPar) df.repartition(minPar) else df
   }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(Plans.getClass)
 }
 
 /** Loader for the driver-provided TPC-H-ish parquet tables (TESTDATA.md). */

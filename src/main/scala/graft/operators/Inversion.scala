@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.models.{Lut, Model, ModelRegistry}
 
@@ -26,6 +27,23 @@ import graft.models.{Lut, Model, ModelRegistry}
   * with nearest-incidence LUT slice (windspeed.py:212-213 — nearest, NOT
   * interpolated), phi-ambiguity resolution for symmetric LUTs
   * (windspeed.py:234-245), and NaN propagation rules (windspeed.py:197-207).
+  *
+  * The copol argmin is exact but pruned. For a unit (cos φ, sin φ) the wind
+  * term of ring w is at least `((wspd(w) − |anc|)/2)²` at every φ, and the
+  * σ₀ term is never negative. So rings are visited outward from |anc| (two
+  * pointers around its `binarySearch` insertion point in the ascending,
+  * non-negative wspd axis, nearer ring first), and the scan stops at the
+  * first ring whose bound `lb` satisfies `lb·(1 − 1e-9) − 1e-9 > bestJ`:
+  * every later ring's bound is larger. The margin covers rounding in
+  * cos²+sin² and in u − u_anc, below 1e-14·(wspd + |anc|)²: under the
+  * absolute 1e-9 for speed axes up to a few hundred m/s, and under the
+  * relative 1e-9 once |anc| is far past the axis. So no pruned cell could
+  * have tied or beaten bestJ. Each visited cell's J is
+  * the brute-force expression, bit for bit, and since rings are not visited
+  * in index order the minimum is taken over `(J, w·nP + p)` — numpy
+  * argmin's first-index tie rule. When every J is NaN or +Inf the argmin is
+  * cell (0, 0), like the full scan. A forward-modelled pixel visits a few
+  * percent of its slice; [[invert]] counts the cells visited.
   */
 object Inversion {
 
@@ -51,7 +69,20 @@ object Inversion {
   /** dB LUT arrays pre-shaped for the kernel. */
   final case class InvLuts(
       co: Lut, coPhi180: Boolean, coCos: Array[Double], coSin: Array[Double],
-      cr: Lut) extends Serializable
+      cr: Lut) extends Serializable {
+    // the ring order and its bound need an ascending, non-negative speed axis
+    require(co.wspd.isEmpty || co.wspd.head >= 0.0 &&
+      co.wspd.indices.tail.forall(w => co.wspd(w - 1) <= co.wspd(w)),
+      "copol wspd axis must be ascending and non-negative")
+  }
+
+  /** Kernel LUTs from dB copol/crosspol LUTs (either may be empty). */
+  def invLuts(co: Lut, cr: Lut): InvLuts = {
+    // phi symmetric in [0,180] → two-solution ambiguity (windspeed.py:152-156)
+    val phi180 = co.phi.nonEmpty && (180.0 - (co.phi.last - co.phi.head)) < 2.0
+    InvLuts(co, phi180, co.phi.map(p => math.cos(math.toRadians(p))),
+      co.phi.map(p => math.sin(math.toRadians(p))), cr)
+  }
 
   private val emptyLut = Lut(Array.empty, Array.empty, Array.empty, Array.empty, "dB")
 
@@ -86,13 +117,8 @@ object Inversion {
           val m = ModelRegistry.get(n)
           toDbValues(if (interpolated) m.toLutInterpolated() else m.toLut(highRes))
         }
-        val co = coModel.map(build).getOrElse(emptyLut)
-        val cr = crModel.map(build).getOrElse(emptyLut)
-        // phi symmetric in [0,180] → two-solution ambiguity (windspeed.py:152-156)
-        val phi180 = co.phi.nonEmpty && (180.0 - (co.phi.last - co.phi.head)) < 2.0
-        val coCos = co.phi.map(p => math.cos(math.toRadians(p)))
-        val coSin = co.phi.map(p => math.sin(math.toRadians(p)))
-        spark.sparkContext.broadcast(InvLuts(co, phi180, coCos, coSin, cr))
+        spark.sparkContext.broadcast(invLuts(
+          coModel.map(build).getOrElse(emptyLut), crModel.map(build).getOrElse(emptyLut)))
       })
   }
 
@@ -100,8 +126,13 @@ object Inversion {
     .empty[(org.apache.spark.SparkContext, Option[AnyRef], Option[AnyRef], Boolean, Boolean),
       Broadcast[InvLuts]]
 
-  /** The per-pixel kernel — mirrors __invert_from_model_1d (windspeed.py:183-282). */
-  def invertOne(luts: InvLuts, dsigCo: Double, px: PxIn): PxOut = {
+  /** Cells the copol argmin evaluated; [[invert]] keeps one per partition. */
+  final class CellCount { var n: Long = 0L }
+
+  /** The per-pixel kernel — mirrors __invert_from_model_1d (windspeed.py:183-282).
+    * Adds the copol cells it evaluates to `cells`. */
+  def invertOne(luts: InvLuts, dsigCo: Double, px: PxIn,
+      cells: CellCount = new CellCount): PxOut = {
     val nan = Double.NaN
     if (px.inc.isNaN) return PxOut(px.okey, px.lnum, nan, nan, nan, nan, nan, nan)
     // guard on LUT presence too: copol input with no configured copol model
@@ -115,28 +146,13 @@ object Inversion {
     var coRe = nan; var coIm = nan; var coWspd = nan
     if (hasCo) {
       val co = luts.co
-      val iInc = co.nearestInc(px.inc)
-      val mAnt = px.ancRe
       val mAzi = if (luts.coPhi180) math.abs(px.ancIm) else px.ancIm
-      var bestJ = Double.MaxValue; var bestW = 0; var bestP = 0
+      val best = copolArgmin(luts, co.nearestInc(px.inc), px.ancRe, mAzi,
+        px.s0coDb, dsigCo, cells)
       val nP = co.phi.length
-      var w = 0
-      while (w < co.wspd.length) {
-        val wv = co.wspd(w)
-        var p = 0
-        while (p < nP) {
-          val uc = wv * luts.coCos(p) - mAnt
-          val vc = wv * luts.coSin(p) - mAzi
-          val ds = (co(iInc, w, p) - px.s0coDb) / dsigCo
-          val j = (uc / 2.0) * (uc / 2.0) + (vc / 2.0) * (vc / 2.0) + ds * ds
-          if (j < bestJ) { bestJ = j; bestW = w; bestP = p } // first wins on tie = numpy argmin
-          p += 1
-        }
-        w += 1
-      }
-      val wspdCo = co.wspd(bestW)
+      val wspdCo = co.wspd(best / nP)
       coWspd = wspdCo
-      val phiCo = co.phi(bestP)
+      val phiCo = co.phi(best % nP)
       if (luts.coPhi180) {
         // ±phi ambiguity: pick solution closest in angle to ancillary (windspeed.py:234-245)
         val solRe = wspdCo * math.cos(math.toRadians(phiCo))
@@ -178,6 +194,51 @@ object Inversion {
     PxOut(px.okey, px.lnum, coRe, coIm, coWspd, crRe, crIm, crWspd)
   }
 
+  /** Linear slice index `w·nP + p` of the copol cost minimum in incidence
+    * slice `iInc`: rings outward from |anc|, pruned by the wind-term bound
+    * (see the object doc). */
+  private def copolArgmin(luts: InvLuts, iInc: Int, mAnt: Double, mAzi: Double,
+      s0coDb: Double, dsigCo: Double, cells: CellCount): Int = {
+    val co = luts.co
+    val wspd = co.wspd; val values = co.values
+    val coCos = luts.coCos; val coSin = luts.coSin
+    val nW = wspd.length; val nP = co.phi.length
+    val base = iInc * nW * nP
+    val anc = math.hypot(mAnt, mAzi)
+    val at = java.util.Arrays.binarySearch(wspd, anc)
+    var hi = if (at >= 0) at else -at - 1 // first ring with wspd >= |anc|
+    var lo = hi - 1
+    var bestJ = Double.MaxValue; var bestI = -1
+    var visited = 0L
+    var open = true
+    while (open && (lo >= 0 || hi < nW)) {
+      // the ring nearer to |anc| first: its bound is the smaller one
+      val takeHi = lo < 0 || (hi < nW && wspd(hi) - anc <= anc - wspd(lo))
+      val w = if (takeHi) hi else lo
+      val wv = wspd(w)
+      val half = (wv - anc) / 2.0
+      if (half * half * (1 - 1e-9) - 1e-9 > bestJ) open = false
+      else {
+        val row = base + w * nP
+        var p = 0
+        while (p < nP) {
+          val uc = wv * coCos(p) - mAnt
+          val vc = wv * coSin(p) - mAzi
+          val ds = (values(row + p) - s0coDb) / dsigCo
+          val j = (uc / 2.0) * (uc / 2.0) + (vc / 2.0) * (vc / 2.0) + ds * ds
+          val i = w * nP + p
+          // (J, linear index) order = numpy argmin's first-index tie rule
+          if (j < bestJ || (j == bestJ && i < bestI)) { bestJ = j; bestI = i }
+          p += 1
+        }
+        visited += nP
+        if (takeHi) hi += 1 else lo -= 1
+      }
+    }
+    cells.n += visited
+    math.max(bestI, 0) // every J NaN or +Inf: cell 0
+  }
+
   /** angle(a / b) for complex a, b — phase difference in (-pi, pi]. */
   private def angleDiff(aRe: Double, aIm: Double, bRe: Double, bIm: Double): Double = {
     // a/b = a * conj(b) / |b|^2; angle ignores the positive scale factor
@@ -197,6 +258,7 @@ object Inversion {
     // parallelism; on a real cluster with many input splits this is a no-op.
     val par = spark.sparkContext.defaultParallelism
     val pxPar = graft.core.Plans.ensureMinPartitions(px, par)
+    val cells = cellsVisited(spark.sparkContext)
     pxPar.select(
         col("okey"), col("lnum"), col("inc"),
         col("s0co_db").as("s0coDb"), col("s0cr_db").as("s0crDb"),
@@ -204,9 +266,22 @@ object Inversion {
       .as[PxIn]
       .mapPartitions { it =>
         val l = luts.value
-        it.map(p => invertOne(l, dsigCo, p))
+        val n = new CellCount
+        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => cells.add(n.n))
+        it.map(p => invertOne(l, dsigCo, p, n))
       }
   }
+
+  /** Copol LUT cells the argmin evaluated, summed over every [[invert]] in
+    * this SparkContext (one `add` per partition). Divide a delta by the
+    * copol pixels inverted for cells per pixel. */
+  def cellsVisited(sc: org.apache.spark.SparkContext): LongAccumulator = {
+    cellCounters.filterInPlace((k, _) => !k.isStopped)
+    cellCounters.getOrElseUpdate(sc, sc.longAccumulator("graft.inversion.cells_visited"))
+  }
+
+  private val cellCounters = scala.collection.concurrent.TrieMap
+    .empty[org.apache.spark.SparkContext, LongAccumulator]
 
   /** Dual-pol blend (windspeed.py:424-428): keep copol wind when either
     * speed is < 5 m/s, else the dual-pol wind. Pure column op; speeds are

@@ -65,8 +65,9 @@ object RangeJoin {
     // the bucket-local candidate work (join + residual filter + whatever
     // the caller aggregates) runs in the STREAMED side's map stage when
     // the other side broadcasts — a split-starved input pins it to one
-    // core (r20 probe: the whole q23 join ran as 1 task). Spread both
-    // sides; no-op on any multi-split input (split-count gate).
+    // core (r20 probe: the whole q23 join ran as 1 task). Only the
+    // points are spread (the intervals keep their planned partitioning);
+    // no-op on any multi-split input (split-count gate).
     val minPar = points.sparkSession.sparkContext.defaultParallelism
     // empty/inverted intervals ([s, e) with e <= s) contain no point and
     // would explode to a DESCENDING bucket sequence (spurious buckets);

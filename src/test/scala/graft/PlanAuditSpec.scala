@@ -662,12 +662,21 @@ class PlanAuditSpec extends SparkSpec {
     // `limit(` in the statement or a `// BOUND:` line within the 8
     // preceding lines. A collect of a frame nobody proved bounded fails
     // here before it OOMs a driver.
-    val dirs = Seq("operators", "queries", "streaming", "models", "core",
-      "functions", "pipeline", "sources", "sql")
+    // every package under graft/, listed from disk so a new package is
+    // covered; a missing or empty tree fails instead of passing vacuously
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"source root $root not found")
+    val sources = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.toVector
+        .filter(p => p.getParent != root && p.toString.endsWith(".scala"))
+        .map(_.toFile)
+      finally walk.close()
+    }
+    assert(sources.nonEmpty, s"no package sources under $root")
     val offenders = for {
-      dir <- dirs
-      f <- Option(new java.io.File(s"src/main/scala/graft/$dir").listFiles())
-        .toSeq.flatten.filter(_.getName.endsWith(".scala"))
+      f <- sources
       lines = java.nio.file.Files.readString(f.toPath).split("\n", -1).toSeq
       (line, i) <- lines.zipWithIndex
       if line.contains(".collect()")
