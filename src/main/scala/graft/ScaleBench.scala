@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.GraftSession
 import graft.functions.GmfColumns
 import graft.models.ModelRegistry
-import graft.operators.{Directions, Gradients, Inversion}
+import graft.operators.{Detrend, Directions, Gradients, Inversion}
 
 /** Engine-side domain targets (BASELINE.md): timings at the reference's
   * full-scene sizes, validating the 100 TB design assumptions (broadcast
@@ -118,6 +118,15 @@ object ScaleBench {
         (col("wspd_t") * cos(radians(col("phi_t")))).as("anc_re"),
         (col("wspd_t") * sin(radians(col("phi_t")))).as("anc_im"))
       Inversion.invert(px, luts).write.format("noop").mode("overwrite").save()
+    }
+
+    // 3b. detrend over the full scene: the per-sample side table (first
+    // line, GMF profile, mean) at 4.25M px, then the broadcast ratio join
+    timed(s"detrend_${nL}x$nS") {
+      val s0 = scene.withColumn("sigma0",
+        GmfColumns.cmod5n(col("incidence"), col("wspd_t"), col("phi_t")))
+      Detrend.sigma0Detrend(s0, GmfColumns.cmod5n)
+        .write.format("noop").mode("overwrite").save()
     }
 
     // 4. multiscale gradient histogram (2 downscales × 2 window sizes)

@@ -57,17 +57,21 @@ object Plans {
     * split's parallelism.
     *
     * The no-op-at-scale gate reads the ACTUAL planned split count of the
-    * plan's parquet scan leaves (`FileSourceScanExec.execute()` builds the
-    * FileScanRDD on the driver — planning work only, no job runs). A
-    * non-bucketed scan's `outputPartitioning` is `UnknownPartitioning(0)`
-    * regardless of how many splits it carries (ADVICE r19), so gating on it
-    * made every call site repartition unconditionally — a pure regression
-    * on real multi-split inputs. With the split-count gate, an input that
-    * already fans out to `minPar` map tasks (any real multi-file table at
-    * scale) passes through unchanged; only genuinely split-starved inputs
-    * (the local single-row-group bench files) pay the round-robin spread.
-    * Frames with no file-scan leaves (cached/in-memory inputs) keep the old
-    * partitioning-based gate.
+    * plan's scan leaves: a parquet scan's splits
+    * (`FileSourceScanExec.execute()` builds the FileScanRDD on the driver —
+    * planning work only, no job runs) and a DataSource V2 scan's input
+    * partitions (`BatchScanExec.inputPartitions`, e.g. the owi source's
+    * pixel spans). A non-bucketed scan's `outputPartitioning` is
+    * `UnknownPartitioning(0)` regardless of how many splits it carries
+    * (ADVICE r19), so gating on it made every call site repartition
+    * unconditionally — a pure regression on real multi-split inputs. With
+    * the split-count gate, an input that already fans out to `minPar` map
+    * tasks (any real multi-file table at scale, any owi scene, which plans
+    * at least `defaultParallelism` spans) passes through unchanged; only
+    * genuinely split-starved inputs (the local single-row-group bench
+    * files) pay the round-robin spread. The count is the largest over the
+    * scan leaves. Frames with no scan leaves (cached/in-memory inputs) keep
+    * the old partitioning-based gate.
     */
   def ensureMinPartitions(df: DataFrame, minPar: Int): DataFrame = {
     val planned =
@@ -83,6 +87,8 @@ object Plans {
           val scanParts = sp.collectLeaves().collect {
             case s: org.apache.spark.sql.execution.FileSourceScanExec =>
               s.execute().getNumPartitions
+            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+              b.inputPartitions.size
           }
           if (scanParts.nonEmpty) scanParts.max else 0
         }

@@ -1,22 +1,33 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** sigma0 detrending (reference detrend.py:9-68, D1 in SURVEY.md §2.5).
   *
   * Semantics preserved from the reference:
   *  1. the reference incidence profile is taken from the FIRST line only
-  *     (`inc_angle.isel(line=0)`, detrend.py:55) — incidence varies across
-  *     samples, so one GMF value per sample at fixed wind (10 m/s, 45°);
+  *     (`inc_angle.isel(line=0)`, detrend.py:55) — the frame's minimum
+  *     line, whatever its value; incidence varies across samples, so one
+  *     GMF value per sample at fixed wind (10 m/s, 45°);
   *  2. the profile is normalized by its NaN-skipping mean (detrend.py:63) —
   *     NaNs are converted to nulls first so Spark's `avg` matches `nanmean`;
-  *  3. every pixel divides by the per-sample ratio (detrend.py:64) — a
-  *     broadcast equi-join on `sample`, NOT a shuffle of the raster.
+  *     a NaN incidence on the first line yields a NaN ratio for its sample;
+  *  3. every pixel divides by the per-sample ratio (detrend.py:64); samples
+  *     absent from the first line have no ratio and drop out (inner join).
   *
-  * Scale: the profile/ratio frame is O(samples-per-line) rows (KBs even for
-  * a 100k-wide scene) — both joins below broadcast, so the full-scene pass
-  * stays shuffle-free.
+  * Contract: one incidence per (first line, sample). Duplicate pixels on
+  * the first line must agree on incidence — true of an owi raster and of
+  * any scene whose incidence is a function of the sample.
+  *
+  * Scale: the side table is built in one pass, O(samples-per-line) rows
+  * (KBs even for a 100k-wide scene): one `groupBy(sample)` takes each
+  * sample's first line and the incidence on it; one single-partition pass
+  * over that per-sample table keeps the samples on the frame's first line,
+  * evaluates the GMF and takes the mean; one broadcast equi-join applies
+  * the ratio. The raster is read twice; only its per-sample partial
+  * aggregates cross a shuffle.
   */
 object Detrend {
 
@@ -31,22 +42,20 @@ object Detrend {
       wspd0: Double = 10.0,
       phi0: Double = 45.0): DataFrame = {
 
-    val firstLine = scene.agg(min(col("line")).as("l0"))
+    val perSample = scene.groupBy(col("sample")).agg(
+      min(col("line")).as("l_first"),
+      min_by(col("incidence"), col("line")).as("inc_first"))
 
-    // one GMF value per sample of the first line (dedup BEFORE evaluating:
-    // keeps profile exact and engine-independent)
-    val profile = scene
-      .join(broadcast(firstLine), col("line") === col("l0"))
-      .select(col("sample"), col("incidence"))
-      .distinct()
-      .select(col("sample"),
-        gmf(col("incidence"), lit(wspd0), lit(phi0)).as("gmf_profile"))
-
-    val mean = profile.agg(avg(nanToNull(col("gmf_profile"))).as("gmf_mean"))
-
-    val ratio = profile
-      .crossJoin(broadcast(mean))
-      .select(col("sample").as("r_sample"), (col("gmf_profile") / col("gmf_mean")).as("ratio"))
+    // the whole per-sample table in one partition: both windows below share
+    // its single exchange
+    val all = Window.partitionBy()
+    val ratio = perSample
+      .withColumn("l0", min(col("l_first")).over(all))
+      .filter(col("l_first") === col("l0"))
+      .select(col("sample").as("r_sample"),
+        gmf(col("inc_first"), lit(wspd0), lit(phi0)).as("gmf_profile"))
+      .select(col("r_sample"),
+        (col("gmf_profile") / avg(nanToNull(col("gmf_profile"))).over(all)).as("ratio"))
 
     scene
       .join(broadcast(ratio), col("sample") === col("r_sample"))

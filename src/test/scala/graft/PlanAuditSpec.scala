@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+
+import graft.pipeline.Recipes
+import graft.sources.Nc3
 
 /** Automated plan-hygiene sweep over every registered query: the scale
   * anti-patterns the VERDICT audits by hand, enforced in CI. A query that
@@ -10,14 +18,16 @@ import org.apache.spark.sql.execution.QueryExecution
 class PlanAuditSpec extends SparkSpec {
 
   /** Deliberate, audited tiny-broadcast BNLJs (bounded build sides that do
-    * NOT grow with the data): q13 scalar scene mean, q18 literal grid
-    * generator, q38/q51 fixed query/centroid sets. Everything else must
-    * plan hash/broadcast-hash equi-joins only.
+    * NOT grow with the data): q18 literal grid generator, q38/q51 fixed
+    * query/centroid sets. Everything else must plan hash/broadcast-hash
+    * equi-joins only.
     * (q43/q44 left this list when circSmooth became a map-side array
-    * cascade — the 11-row offset crossJoin no longer exists.)
+    * cascade — the 11-row offset crossJoin no longer exists; q13 left it
+    * when detrend's scene mean moved into a window over the per-sample
+    * table.)
     */
   private val bnljAllowed = Set(
-    "q13_detrend", "q18_gmf_grid", "q38_ann_topk", "q51_ann_ivf",
+    "q18_gmf_grid", "q38_ann_topk", "q51_ann_ivf",
     // q104: SQ8 scoring broadcasts the 10-row query set against the
     // dequantized corpus — same audited few-queries BNLJ shape as q38
     // (Similarity.sq8TopK)
@@ -252,6 +262,78 @@ class PlanAuditSpec extends SparkSpec {
       val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(hashEx <= 1, s"$name plans $hashEx hash exchanges (only the pixel dedup is allowed)")
     }
+  }
+
+  /** A 16 × 24 owi scene carrying every plane the scene recipes read. */
+  private lazy val owiScene: String = {
+    import Nc3._
+    val (nL, nS) = (16, 24)
+    val dir = java.nio.file.Files.createTempDirectory("planaudit-owi").toString
+    def plane(f: (Int, Int) => Double): Array[Double] =
+      Array.tabulate(nL * nS)(i => f(i / nS, i % nS))
+    val planes = Seq(
+      "sigma0" -> plane((l, s) => 0.02 + 0.001 * math.sin(l * 0.7 + s * 0.3)),
+      "sigma0_cr" -> plane((_, _) => 0.0005),
+      "nesz" -> plane((_, s) => 0.0001 + 1e-6 * s),
+      "incidence" -> plane((_, s) => 20.0 + 0.5 * s),
+      "ancillary_u" -> plane((_, _) => 6.0),
+      "ancillary_v" -> plane((_, _) => 4.0),
+      "ground_heading" -> plane((_, _) => -10.0))
+    Nc3.write(s"$dir/owi.nc", Seq(Dim("owiAzSize", nL), Dim("owiRaSize", nS)), Nil,
+      planes.map { case (n, d) => Var(n, Seq(0, 1), Nil, NcDouble, d) })
+    s"$dir/owi.nc"
+  }
+
+  /** The plan AQE starts from, exchanges in place. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan
+    case p => p
+  }
+
+  test("detrend builds its side table in one pass: q13 and Recipes.detrend over owi") {
+    // one groupBy(sample), one single-partition pass over the per-sample
+    // table, one broadcast of the ratios
+    val cases = Seq(
+      "q13_detrend" -> SparkEntry.queries("q13_detrend")(spark, sfDir),
+      "Recipes.detrend(owi)" -> Recipes.detrend(spark.read.format("owi").load(owiScene)))
+    for ((name, df) <- cases) {
+      val plan = physical(df)
+      val exchanges = plan.collect { case e: Exchange => e }
+      assert(exchanges.size <= 3, s"$name plans ${exchanges.size} exchanges:\n$plan")
+      assert(!plan.toString.contains("BroadcastNestedLoopJoin"), s"$name plans a BNLJ:\n$plan")
+      val single = exchanges.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+      }
+      assert(single.size == 1, s"$name plans ${single.size} SinglePartition exchanges:\n$plan")
+      // what crosses into the single partition is the per-sample table
+      // (the final groupBy(sample) aggregate), never raster rows
+      def belowProjects(p: SparkPlan): SparkPlan = p match {
+        case pr: ProjectExec => belowProjects(pr.child)
+        case other => other
+      }
+      belowProjects(single.head.child) match {
+        case a: BaseAggregateExec =>
+          assert(a.groupingExpressions.map(_.name) == Seq("sample"),
+            s"$name: the SinglePartition exchange sits over ${a.groupingExpressions}")
+        case other =>
+          fail(s"$name: the SinglePartition exchange sits over ${other.nodeName}, " +
+            s"not the per-sample aggregate:\n$plan")
+      }
+    }
+  }
+
+  test("windRetrieval spreads a single-split parquet input, never an owi scene") {
+    // the owi source plans at least defaultParallelism pixel spans, which
+    // Plans.ensureMinPartitions counts like a parquet scan's splits
+    val owi = spark.read.format("owi").load(owiScene)
+    assert(!physical(Recipes.windRetrieval(owi)).toString.contains("RoundRobinPartitioning"),
+      "windRetrieval re-spreads an owi scene that already plans enough spans")
+    val pq = java.nio.file.Files.createTempDirectory("planaudit-pq").resolve("scene").toString
+    owi.coalesce(1).write.parquet(pq)
+    val single = spark.read.parquet(pq)
+    assert(single.rdd.getNumPartitions == 1)
+    assert(physical(Recipes.windRetrieval(single)).toString.contains("RoundRobinPartitioning"),
+      "windRetrieval no longer spreads a single-split parquet scene")
   }
 
   test("as-of joins shuffle ONCE on the key, in every direction") {
