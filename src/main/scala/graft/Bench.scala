@@ -1,10 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler._
+
+import graft.core.{CacheLife, GraftSession, Tables}
 
 /** Benchmark main — one JSON line with per-query wall seconds at the sf dir
   * given by SPARK_GRAFT_SF_DIR. Results are materialized through the noop
   * sink so Catalyst cannot prune the measured expressions (a bare count()
-  * would skip every projected column).
+  * would skip every projected column). Every rep of every query runs under
+  * its own job group, and the committed snapshot `bench_last.json` carries
+  * each rep's Spark counters next to its seconds.
   */
 object Bench {
 
@@ -15,64 +22,89 @@ object Bench {
       .asScala.map(_.getCollectionTime.max(0L)).sum
   }
 
-  /** Prior-ROUND committed per-query seconds, for anomaly auto-rep: the
-    * env override SPARK_GRAFT_PRIOR, else the latest bench_r*.json from a
-    * COMPLETED round. The prior round's number is read off the driver's
-    * BENCH_r{NN}.json artifacts (written once per finished round) — the
-    * numerically-latest bench_r*.json alone would be this round's own
-    * intra-round refresh, which resets the comparison baseline exactly
-    * when a cross-round regression needs catching (the r14 loophole:
-    * q129 at 2.85× r13 sailed through with anom:{}). Parsed with a narrow
-    * regex — the snapshot's "queries" map is the only place a qNN key maps
-    * to a bare decimal (cache_mb values are [n,mb] arrays, cache_peak's
-    * "at" maps to a string), so no JSON library is needed.
+  /** Spark's counters for one job group: one rep of one query. */
+  private final class Counters {
+    var jobs, stages, tasks = 0
+    var taskMs, taskGcMs, shuffleReadB, shuffleWriteB = 0L
+  }
+
+  /** Attributes jobs, stages and task metrics to the job group that was set
+    * when each job started. Bench runs every rep of every query under its
+    * own group, so a rep's eager construction jobs count with its execution
+    * jobs, and nothing needs resetting between reps. Events arrive on the
+    * listener bus's one thread; read the map only after `spark.stop()` has
+    * drained the bus. */
+  private final class GroupListener extends SparkListener {
+    val byGroup = new ConcurrentHashMap[String, Counters]()
+    private val stageGroup = new ConcurrentHashMap[Int, Counters]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          val c = byGroup.computeIfAbsent(g, _ => new Counters)
+          c.jobs += 1
+          e.stageIds.foreach(stageGroup.put(_, c))
+        }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageGroup.remove(e.stageInfo.stageId)).foreach { c =>
+        val i = e.stageInfo
+        c.stages += 1
+        c.tasks += i.numTasks
+        Option(i.taskMetrics).foreach { m =>
+          c.taskMs += m.executorRunTime
+          c.taskGcMs += m.jvmGCTime
+          c.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
+          c.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
+        }
+      }
+  }
+
+  /** One query's entry on the stdout line: its min seconds, its
+    * `"name":secs` object form and its `id:centiseconds` csv form. */
+  private[graft] final case class Entry(min: Double, obj: String, csv: String)
+
+  /** The stdout line: `head`, then the "queries" object, the "qrest" csv
+    * string and the "qtrunc" count, at most `budget` characters.
+    *
+    * Admission starts with every entry in the csv string. If even that
+    * overruns, the fastest csv entries drop ("qtrunc" counts them). Then
+    * the slowest entries move into the object while the line still fits.
+    * Both parts render in `entries` order; sets are tracked by index so two
+    * identically rendered entries never share one budget charge. Each step
+    * is O(1): a part of k entries is as long as their sum + (k − 1) commas
+    * + 2 delimiters, so only the final line is rendered.
     */
-  private def loadPrior(): Map[String, Double] = {
-    val path = sys.env.get("SPARK_GRAFT_PRIOR").orElse {
-      val names = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .map(_.getName)
-      def num(n: String): Int = n.replaceAll("\\D", "").toInt
-      val snaps = names.filter(_.matches("bench_r\\d+\\.json"))
-      val priorRound = names.filter(_.matches("BENCH_r\\d+\\.json"))
-        .map(num).maxOption
-      priorRound.flatMap(pr => snaps.filter(num(_) <= pr).maxByOption(num))
-        .orElse(snaps.maxByOption(num))
+  private[graft] def stdoutLine(head: String, entries: IndexedSeq[Entry], budget: Int): String = {
+    val fixed = s"""{$head,"queries":,"qrest":,"qtrunc":}""".length
+    def width(n: Int, len: Int): Int = len + (n - 1).max(0) + 2
+    var objN = 0; var objLen = 0
+    var csvN = entries.length; var csvLen = entries.map(_.csv.length).sum
+    def lineLen(oN: Int, oLen: Int, cN: Int, cLen: Int): Int =
+      fixed + width(oN, oLen) + width(cN, cLen) + (entries.length - oN - cN).toString.length
+    val inObj = Array.fill(entries.length)(false)
+    val inCsv = Array.fill(entries.length)(true)
+    val byMinDesc = entries.zipWithIndex.sortBy { case (e, i) => (-e.min, i) }
+    byMinDesc.reverseIterator.takeWhile(_ => lineLen(objN, objLen, csvN, csvLen) > budget)
+      .foreach { case (e, i) => inCsv(i) = false; csvN -= 1; csvLen -= e.csv.length }
+    byMinDesc.foreach { case (e, i) =>
+      if (inCsv(i) && lineLen(objN + 1, objLen + e.obj.length,
+            csvN - 1, csvLen - e.csv.length) <= budget) {
+        inObj(i) = true; objN += 1; objLen += e.obj.length
+        inCsv(i) = false; csvN -= 1; csvLen -= e.csv.length
+      }
     }
-    path.flatMap { p =>
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
-        val re = """"(q\w+)":([0-9]+(?:\.[0-9]+)?)""".r
-        Some(re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap)
-      } catch { case _: Throwable => None }
-    }.getOrElse(Map.empty)
+    val obj = entries.indices.filter(inObj).map(entries(_).obj).mkString("{", ",", "}")
+    val csv = entries.indices.filter(inCsv).map(entries(_).csv).mkString("\"", ",", "\"")
+    s"""{$head,"queries":$obj,"qrest":$csv,"qtrunc":${entries.length - objN - csvN}}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // let AQE plan the SUBTREES UNDER persisted frames too (off by
-      // default only to keep cached output partitioning stable for
-      // downstream reuse): the shared/scoped caches (KN scores, shingle
-      // tables, quantile bases) otherwise materialize with the static
-      // shuffle-partition count and every cached-scan stage inherits it —
-      // partition counts should come from AQE's size estimates at ANY
-      // scale, not from a constant (guide §2: scale-adaptive partitioning)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // sf0.1 tables are single ~10-60MB files; smaller splits let the
-      // CPU-dense expression work (GMFs, folds) use all local cores
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate(appName = "graft-bench")
+    val sc = spark.sparkContext
+    val listener = new GroupListener
+    sc.addSparkListener(listener)
     // optional comma-separated substring filter, e.g. SPARK_GRAFT_QUERIES=q40,q42
     val filter = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -93,16 +125,12 @@ object Bench {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
     }
-    graft.core.CacheLife.releaseScoped(spark)
+    CacheLife.releaseScoped(spark)
     // HOST CALIBRATION — fixed deterministic work, timed after warmup:
-    // [0] a 32-thread Spark aggregate over 200M longs, [1] a single-thread
-    // ALU loop. Two sessions' artifacts divide these out: a uniformly
-    // drifted query set WITH a drifted calibration is the host (thermal /
-    // noisy neighbor), not the code — the round-12/13 "moving outlier
-    // cluster" class becomes attributable from the artifacts alone.
-    // (Round-14 control: re-running the round-13 COMMITTED code on the
-    // round-14 host reproduced the same ~1.2-1.6× inflation on untouched
-    // queries, so the cross-round total drift was host-side.)
+    // [0] a Spark aggregate over 200M longs on the requested cores, [1] a
+    // single-thread ALU loop. Two sessions' artifacts divide these out: a
+    // uniformly drifted query set WITH a drifted calibration is the host
+    // (thermal / noisy neighbor), not the code.
     val calSpark = {
       val t0 = System.nanoTime()
       spark.range(200000000L).selectExpr("sum(id % 97)").head()
@@ -121,12 +149,12 @@ object Bench {
     // GC/Full-pause correlation); the min is the reproducible number and is
     // what BASELINE comparisons should read.
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2).max(1)
-    val prior = loadPrior()
     // compact stdout keys (sans-q, sans-suffix) must be unique — validated
     // UP FRONT so a collision fails in seconds, not after a ~30-minute
     // session has already done all its work (ADVICE r16)
+    def csKey(n: String): String = n.takeWhile(_ != '_').stripPrefix("q")
     locally {
-      val cs = selected.map { case (n, _) => n.takeWhile(_ != '_').stripPrefix("q") }
+      val cs = selected.map { case (n, _) => csKey(n) }
       require(cs.distinct.size == cs.size,
         "compact stdout keys collide — rename the offending query: " +
           cs.diff(cs.distinct).distinct.mkString(","))
@@ -135,18 +163,21 @@ object Bench {
     // shared cache whose consumers have all run (or were never selected)
     // unpersists — the r11 drift root cause was 127 queries' worth of
     // accumulated storage degrading late queries 2-3× via eviction churn
-    val unselected = all.map(_._1).toSet -- selected.map(_._1).toSet
-    var completed = unselected
+    var completed = all.map(_._1).toSet -- selected.map(_._1).toSet
+    def group(name: String, rep: Int): String = s"bench/$name/$rep"
     case class QRes(name: String, min: Double, ok: Boolean,
                     repSecs: Seq[Double], repGcMs: Seq[Long], winRep: Int,
-                    extraRep: Boolean, cacheInMb: Long,
-                    nCached: Int, cacheOutMb: Long)
+                    cacheInMb: Long, nCached: Int, cacheOutMb: Long)
     val results = selected.map { case (name, fn) =>
       // storage going IN: what earlier queries left cached — eviction-churn
       // attribution needs the before picture, not just the after
-      val (_, bytesIn) = graft.core.CacheLife.storageStats(spark)
-      val runs = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean, Long)]
-      def runOnce(): Unit = {
+      val (_, bytesIn) = CacheLife.storageStats(spark)
+      val runs = (1 to reps).map { r =>
+        if (r > 1) CacheLife.releaseScoped(spark)
+        // every rep pays its own row counts: a memo warmed by an earlier
+        // rep or query would bill its count job to whoever ran first
+        Tables.clearRowCounts()
+        sc.setJobGroup(group(name, r), name)
         val g0 = gcMillis()
         val t0 = System.nanoTime()
         val ok =
@@ -155,74 +186,33 @@ object Bench {
             case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
           }
         // capture elapsed BEFORE the inter-rep cache release so unpersist
-        // cost never bills to the measured query (it used to sit inside
-        // reps 1..n-1's timing)
+        // cost never bills to the measured query
         val elapsed = (System.nanoTime() - t0) / 1e9
-        runs += ((elapsed, ok, gcMillis() - g0))
+        sc.clearJobGroup()
+        (elapsed, ok, gcMillis() - g0)
       }
-      (1 to reps).foreach { r =>
-        runOnce()
-        if (r < reps) graft.core.CacheLife.releaseScoped(spark)
-      }
-      // anomaly auto-rep: when this session's min exceeds 2× the committed
-      // prior-round value (and isn't sub-half-second noise), run a third
-      // rep so the artifact itself shows whether the spike was transient
-      val extra = prior.get(name).exists { p =>
-        val m = runs.map(_._1).min
-        p > 0.05 && m > 2 * p && m > 0.5
-      }
-      if (extra) { graft.core.CacheLife.releaseScoped(spark); runOnce() }
       completed += name
-      graft.core.CacheLife.afterQuery(spark, completed)
+      CacheLife.afterQuery(spark, completed)
       // storage telemetry AFTER the release: what this query leaves cached
       // for later ones — makes any future in-session drift attributable
       // from the artifact alone
-      val (nCached, bytesOut) = graft.core.CacheLife.storageStats(spark)
-      val secs = runs.map(_._1).toSeq
-      QRes(name, secs.min, runs.forall(_._2), secs, runs.map(_._3).toSeq,
-        secs.indexOf(secs.min) + 1, extra, bytesIn >> 20, nCached, bytesOut >> 20)
+      val (nCached, bytesOut) = CacheLife.storageStats(spark)
+      val secs = runs.map(_._1)
+      QRes(name, secs.min, runs.forall(_._2), secs, runs.map(_._3),
+        secs.indexOf(secs.min) + 1, bytesIn >> 20, nCached, bytesOut >> 20)
     }
-    // END-OF-SESSION retry for every anomaly-tier AND watch-tier query
-    // (r17 verdict asked for anom; r18 for watch — its "?"-cause records
-    // kept needing next-round reruns to corroborate): the inline extra
-    // rep above shares the spike's moment; a rep at session end —
-    // different cache/heap/host state, minutes later — is what confirms
-    // or refutes the 'env' attribution from THIS artifact alone, instead
-    // of by the next round's rerun. Evidence only: the reported min (and
-    // totals) keep their in-place reps. Caveats a reader needs: by
-    // session end every shared cache is released, so a retry of a
-    // cache-consumer query includes the cache rebuild its in-place reps
-    // amortized — read retry against the FIRST in-place rep, not the
-    // min; and a retry that THROWS records the -1.0 sentinel (ADVICE
-    // r18) so a fast crash never reads as environmental refutation.
-    val fnByName = selected.toMap
-    // watch tier (r15 verdict): sub-anomaly creep — min ≥ 1.5× the
-    // committed prior AND ≥ 0.5 s, under the 2× extra-rep trigger
-    def isWatch(r: QRes): Boolean =
-      !r.extraRep && prior.get(r.name).exists(p =>
-        p > 0.05 && r.min > 1.5 * p && r.min > 0.5)
-    val retrySecs: Map[String, Double] =
-      results.filter(r => r.extraRep || isWatch(r)).map { r =>
-        graft.core.CacheLife.releaseScoped(spark)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fnByName(r.name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] ${r.name} retry failed: ${e.getMessage}"); false }
-        r.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }.toMap
     // The driver keeps a 2000-char stdout TAIL, which ALSO captures
     // sbt's trailing "[success] Total time..." line (~75 bytes) — round
     // 13's 2000-byte budget lost the line's head to that trailer. So the
     // whole line is budgeted at 1900 bytes (2000 − 75 − margin): summary
-    // keys first, the complete per-query string next, slim anom/watch
-    // telemetry last, 2-decimal trailing-zero-stripped seconds, and — if
-    // the line would still overrun — the per-query string drops its
-    // FASTEST entries first (slow queries are the ones BASELINE
-    // comparison needs; "qtrunc" then records how many sub-threshold
-    // entries were dropped so the truncation is never silent). The
-    // committed bench_rNN.json snapshot always carries every query at 3
-    // decimals plus full rep/GC/cache telemetry.
+    // keys first, the complete per-query string next, 2-decimal
+    // trailing-zero-stripped seconds, and — if the line would still
+    // overrun — the per-query string drops its FASTEST entries first
+    // (slow queries are the ones BASELINE comparison needs; "qtrunc" then
+    // records how many sub-threshold entries were dropped so the
+    // truncation is never silent). The committed bench_last.json snapshot
+    // always carries every query at 3 decimals plus full rep/GC/cache and
+    // counter telemetry.
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def fmt2(v: Double): String = {
@@ -242,139 +232,65 @@ object Bench {
       val peak = results.maxBy(_.cacheOutMb)
       s""""cache_peak":{"at":"${short(peak.name)}","rdds":${peak.nCached},"mb":${peak.cacheOutMb}}"""
     }
-    // per-query rep telemetry for the committed snapshot: every rep's wall
-    // seconds and GC-time delta (ms), which rep won, and cache-in MB —
-    // enough to attribute any cross-session drift (GC pause / storage
-    // pressure / first-rep JIT) from the two artifacts alone
-    val repsFull = results.map { r =>
-      "\"" + r.name + "\":{\"s\":[" + r.repSecs.map(fmt2).mkString(",") +
-        "],\"gc\":[" + r.repGcMs.mkString(",") + "],\"win\":" + r.winRep +
-        ",\"in_mb\":" + r.cacheInMb + "}"
-    }.mkString("{", ",", "}")
-    // anomaly records (one per query whose min exceeded 2× its committed
-    // prior-round value) carry rep times, GC deltas, winning rep, and a
-    // named cause heuristic — full records in the snapshot, count on the line
-    def cause(r: QRes): String = {
-      val winGc = r.repGcMs(r.winRep - 1)
-      val p = prior.getOrElse(r.name, 0.0)
-      if (winGc > (r.min * 1000 * 0.3).toLong) "gc"
-      else if (r.repSecs.drop(1).nonEmpty && r.repSecs.tail.min <= 2 * p) "first-rep-jit"
-      else if (r.cacheInMb > 2048) "storage-pressure"
-      else "env"
-    }
-    // watch-tier cause is MACHINE-derived from the record's own reps (r16
-    // verdict: README hand-attributed three watch creeps to "session GC
-    // pressure" while one record's own telemetry showed gc:[0,0]). A creep
-    // whose winning rep spent >30% of its wall time in GC is "gc"; heavy
-    // inherited storage is "storage"; anything else stays an honest "?" —
-    // unattributable from this artifact alone, so nobody should prose it.
-    def watchCause(r: QRes): String = {
-      val winGc = r.repGcMs(r.winRep - 1)
-      if (winGc > (r.min * 1000 * 0.3).toLong) "gc"
-      else if (r.cacheInMb > 2048) "storage"
-      else "?"
-    }
-    def csKey(n: String): String = short(n).stripPrefix("q")
-    // anomaly records (rep times, GC, winner, retry, cause) go ONLY to the
-    // committed snapshot since r20 — in r19 the slim stdout copies
-    // displaced 7 per-query map entries (qtrunc: 7); the line now carries
-    // just the counts ("anomn"/"watchn") so the map always has the budget
-    val anomRecsAll = results.filter(_.extraRep).sortBy(-_.min).map { r =>
-      // retry = the END-OF-SESSION rerun (seconds): retry ≈ prior refutes
-      // the spike (env confirmed); retry ≈ min says the slowdown
-      // reproduces outside the spike's moment — code-side
-      val retry = retrySecs.getOrElse(r.name, 0.0)
-      "\"" + short(r.name) + "\":{\"s\":[" + r.repSecs.map(fmt2).mkString(",") +
-        "],\"gc\":[" + r.repGcMs.mkString(",") + "],\"win\":" + r.winRep +
-        ",\"p\":" + fmt2(prior.getOrElse(r.name, 0.0)) +
-        ",\"retry\":" + fmt2(retry) + ",\"cause\":\"" + cause(r) + "\"}"
-    }
-    // WATCH tier (r15 verdict): sub-anomaly creep — min ≥ 1.5× the
-    // committed prior AND ≥ 0.5 s, but under the 2× extra-rep trigger —
-    // gets a snapshot record (no inline extra rep, but an end-of-session
-    // retry like the anom tier: r18 verdict) so q93-class drift
-    // self-reports AND self-adjudicates from the artifact instead of
-    // sailing two hundredths under the alarm.
-    val watchRecsAll = results.filter(isWatch).sortBy(-_.min).map { r =>
-      val retry = retrySecs.getOrElse(r.name, 0.0)
-      "\"" + short(r.name) + "\":{\"s\":[" + r.repSecs.map(fmt2).mkString(",") +
-        "],\"gc\":[" + r.repGcMs.mkString(",") + "],\"p\":" + fmt2(prior(r.name)) +
-        ",\"retry\":" + fmt2(retry) + ",\"cause\":\"" + watchCause(r) + "\"}"
-    }
-    val anomFull = anomRecsAll.mkString("{", ",", "}")
-    val watchFull = watchRecsAll.mkString("{", ",", "}")
     val failed = results.collect { case r if !r.ok => "\"" + r.name + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_.min).sum
-    // host telemetry in the cal block (r19 verdict): logical core count and
-    // 1-min load average, so a local[32]-on-fewer-cores oversubscription or
-    // a busy host is attributable from the artifact alone
+    // host telemetry in the cal block: requested cores, logical core count
+    // and 1-min load average, so a local[32]-on-fewer-cores
+    // oversubscription or a busy host is attributable from the artifact alone
     val physCores = Runtime.getRuntime.availableProcessors()
     val load1m = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val cal =
-      s""""cal":[${fmt2(calSpark)},${fmt2(calCpu)},$physCores,${fmt2(load1m)}]"""
+    val cal = s""""cal":[${fmt2(calSpark)},${fmt2(calCpu)},${GraftSession.cpus},""" +
+      s"""$physCores,${fmt2(load1m)}]"""
     // STDOUT LINE LAYOUT (the driver keeps a 2000-char stdout tail, parses
     // the JSON line found in it, and sbt appends a ~75-byte trailer; the
     // whole line budgets at 1900 — under the derived 1915 for margin):
-    //  1. fixed head — metric/value/unit/cal/failed/sf and the anom/watch
-    //     COUNTS ("anomn"/"watchn"; the full records live only in the
-    //     committed snapshot since r20 — they displaced 7 map entries in
-    //     r19);
+    //  1. fixed head — metric/value/unit/cal/failed/sf;
     //  2. "queries" — the driver-contract JSON OBJECT mapping FULL query
     //     names to seconds, filled SLOWEST-FIRST with as many entries as
     //     the budget allows. The full-name map for all 231 queries is
-    //     ~5.6 KB and a 2000-char tail cannot carry it (r19 verdict asked
-    //     for the full map + qtrunc 0: arithmetically impossible
-    //     together), so the object carries the slow tier the comparator
-    //     needs most and "qrest" (next) completes the line;
-    //  3. "qrest" — every query NOT in the object, as the r17-19 compact
-    //     csv string "id:centiseconds" (id = query number sans 'q'/suffix,
+    //     ~5.6 KB and a 2000-char tail cannot carry it, so the object
+    //     carries the slow tier the comparator needs most and "qrest"
+    //     (next) completes the line;
+    //  3. "qrest" — every query NOT in the object, as the compact csv
+    //     string "id:centiseconds" (id = query number sans 'q'/suffix,
     //     collision-checked up front), so the LINE still reports all
     //     queries: "qtrunc" counts queries missing from BOTH (expected 0;
     //     fastest-first drops only if the line genuinely cannot fit).
-    // The committed bench_rNN.json keeps every query under its full name
-    // at 3-decimal seconds plus full rep/GC/cache/anom/watch telemetry.
     val head =
-      s""""metric":"total","value":${fmt2(total)},"unit":"sec",$cal,"failed":$failed,"sf":"${new java.io.File(sfDir).getName}","anomn":${anomRecsAll.length},"watchn":${watchRecsAll.length}"""
-    val stdoutBudget = 1900
-    case class Entry(min: Double, obj: String, csv: String)
-    val entries = results.map(r => Entry(r.min,
+      s""""metric":"total","value":${fmt2(total)},"unit":"sec",$cal,"failed":$failed,"sf":"${new java.io.File(sfDir).getName}""""
+    val line = stdoutLine(head, results.map(r => Entry(r.min,
       "\"" + r.name + "\":" + fmt2(r.min),
-      csKey(r.name) + ":" + Math.round(r.min * 100)))
-    // admission: start with every entry in the csv string, then promote
-    // the slowest into the JSON object while the rendered line fits; if
-    // even csv-only overruns, drop the fastest csv entries (qtrunc counts
-    // them). Sets are tracked by index so two identically-rendered
-    // entries can never both slip in on one budget charge.
-    val byMinDesc = entries.zipWithIndex.sortBy { case (e, i) => (-e.min, i) }
-    def lineOf(objIdx: Set[Int], csvIdx: Set[Int]): String = {
-      val obj = entries.zipWithIndex
-        .collect { case (e, i) if objIdx(i) => e.obj }.mkString("{", ",", "}")
-      val csv = entries.zipWithIndex
-        .collect { case (e, i) if csvIdx(i) => e.csv }.mkString("\"", ",", "\"")
-      val qtrunc = entries.length - objIdx.size - csvIdx.size
-      s"""{$head,"queries":$obj,"qrest":$csv,"qtrunc":$qtrunc}"""
-    }
-    var objIdx = Set.empty[Int]
-    var csvIdx = entries.indices.toSet
-    // fastest-first eviction only if csv alone cannot fit (defensive)
-    byMinDesc.reverseIterator.takeWhile(_ =>
-      lineOf(objIdx, csvIdx).length > stdoutBudget)
-      .foreach { case (_, i) => csvIdx -= i }
-    // slowest-first promotion into the driver-parseable object
-    byMinDesc.foreach { case (_, i) =>
-      if (csvIdx(i) && lineOf(objIdx + i, csvIdx - i).length <= stdoutBudget) {
-        objIdx += i; csvIdx -= i
-      }
-    }
-    val line = lineOf(objIdx, csvIdx)
+      csKey(r.name) + ":" + Math.round(r.min * 100))).toIndexedSeq, 1900)
+    // stopping drains the listener bus, so every rep's counters are in
+    spark.stop()
+    // per-query rep telemetry for the committed snapshot: every rep's wall
+    // seconds, GC-time delta (ms) and Spark counters (jobs, stages, tasks,
+    // executor task s, task GC s, shuffle read/write MiB), which rep won,
+    // and cache-in MB. Jobs per query can differ between reps, so every
+    // rep is kept, not only the winner.
+    def perRep[A](name: String)(f: Counters => A): String =
+      (1 to reps).map(r => Option(listener.byGroup.get(group(name, r)))
+        .getOrElse(new Counters)).map(f).mkString("[", ",", "]")
+    def mib(b: Long): String = fmt2(b / 1048576.0)
+    val repsFull = results.map { r =>
+      "\"" + r.name + "\":{\"s\":[" + r.repSecs.map(fmt2).mkString(",") +
+        "],\"gc\":[" + r.repGcMs.mkString(",") + "],\"win\":" + r.winRep +
+        ",\"in_mb\":" + r.cacheInMb +
+        ",\"jobs\":" + perRep(r.name)(_.jobs) +
+        ",\"stages\":" + perRep(r.name)(_.stages) +
+        ",\"tasks\":" + perRep(r.name)(_.tasks) +
+        ",\"task_s\":" + perRep(r.name)(c => fmt2(c.taskMs / 1e3)) +
+        ",\"task_gc_s\":" + perRep(r.name)(c => fmt2(c.taskGcMs / 1e3)) +
+        ",\"shr_mb\":" + perRep(r.name)(c => mib(c.shuffleReadB)) +
+        ",\"shw_mb\":" + perRep(r.name)(c => mib(c.shuffleWriteB)) + "}"
+    }.mkString("{", ",", "}")
     val snapshot =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$cal,"queries":$qsFull,"cache_mb":$cacheFull,$cachePeak,"reps":$repsFull,"anom":$anomFull,"watch":$watchFull,"failed":$failed,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$cal,"queries":$qsFull,"cache_mb":$cacheFull,$cachePeak,"reps":$repsFull,"failed":$failed,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_last.json"), snapshot + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] snapshot write failed: $e") }
-    spark.stop()
     // last line of stdout, after spark shutdown, so nothing prints below it
     println(line)
   }

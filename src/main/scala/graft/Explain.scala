@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Plan-hygiene tool: print the formatted physical plan of registered
-  * queries. Usage: runMain graft.Explain [sfDir] [queryNameSubstring...]
+  * queries, on the session every other entry point uses. Usage:
+  * runMain graft.Explain [sfDir] [query...] — query tokens match as
+  * SPARK_GRAFT_QUERIES does for Bench and Verify (QueryFilter).
   * Greppables: `PushedFilters` (scan pushdown), `ReusedExchange` (shared
   * subplans), `Exchange` count (shuffle budget), `WholeStageCodegen` spans.
   */
@@ -11,17 +13,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate(appName = "graft-explain")
+    val sel = QueryFilter.selector(wanted, SparkEntry.queries.keys)
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.isEmpty || wanted.exists(n.contains) }
+      .filter { case (n, _) => wanted.isEmpty || sel(n) }
       .foreach { case (name, fn) =>
         println(s"===== $name =====")
         try fn(spark, sfDir).explain("formatted")

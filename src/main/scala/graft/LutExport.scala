@@ -22,9 +22,7 @@ object LutExport {
       s"outDir '$outDir' looks like a flag, not a path; pass the output directory first")
     val asNc = args.tail.contains("--nc")
     val only = args.tail.filterNot(_ == "--nc").toSet
-    val spark = GraftSession.getOrCreate(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      appName = "graft-lut-export")
+    val spark = GraftSession.getOrCreate(appName = "graft-lut-export")
     val models = ModelRegistry.all.filter(m => only.isEmpty || only(m.name))
     models.foreach { m =>
       val path = if (asNc) s"$outDir/nc_lut_${m.name}.nc" else s"$outDir/${m.name}"

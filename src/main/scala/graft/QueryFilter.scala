@@ -1,6 +1,7 @@
 package graft
 
-/** Shared SPARK_GRAFT_QUERIES token matching for Bench and Verify.
+/** Shared SPARK_GRAFT_QUERIES token matching for Bench and Verify (and
+  * Explain's query arguments).
   *
   * Query numbers share prefixes (q13 is a prefix of q130..q136), so plain
   * substring matching silently over-selects: "q13" used to pick q13_detrend

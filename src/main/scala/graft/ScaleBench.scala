@@ -42,9 +42,7 @@ object ScaleBench {
       case Array(l, s) => (l.toInt, s.toInt)
       case _ => (1700, 2500)
     }
-    val spark = GraftSession.getOrCreate(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      appName = "graft-scale")
+    val spark = GraftSession.getOrCreate(appName = "graft-scale")
     import spark.implicits._
 
     // SPARK_GRAFT_SCALE_ONLY=substr[,substr...] runs only matching targets

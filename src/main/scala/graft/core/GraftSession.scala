@@ -4,7 +4,10 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with scale-oriented defaults.
+/** The one session factory: every entry point (Bench, Verify, Explain,
+  * ScaleBench, the ingest/export CLIs) and the specs build their session
+  * here, so the verified plan, the audited plan and the measured plan come
+  * from one config set.
   *
   * Defaults are chosen for the local[32] harness but mirror what we would set
   * on a 1000-executor cluster: AQE on (runtime shuffle coalescing + skew-join
@@ -13,25 +16,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder =
+  /** Requested cores: `SPARK_GRAFT_CPUS`, else every processor the JVM sees.
+    * The only read of that variable in the program. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def builder(master: String = s"local[$cpus]", appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // let AQE re-plan the subtrees UNDER persisted frames (partition
       // counts from size estimates at any scale, not the static shuffle
-      // constant). Set HERE — the shared builder — so bench, verify and
-      // the plan-audit specs all plan identically (r19 verdict: it was
-      // bench-only, so the measured plan was not the verified plan)
+      // constant)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
       // events.parquet carries TIMESTAMP(NANOS); read as ns-longs (exact)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the sf tables are single ~10-60 MB files; smaller splits let the
+      // CPU-dense expression work (GMFs, folds) use all local cores
+      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       // deliberately NOT forcing Kryo: instantiating Kryo on Java 17 needs
       // the --add-opens flags only spark-submit's launcher injects (bare
@@ -42,9 +51,22 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.ui.enabled", "false")
 
-  def getOrCreate(master: String = "local[*]", appName: String = "graft"): SparkSession = {
+  def getOrCreate(master: String = s"local[$cpus]", appName: String = "graft"): SparkSession = {
     val spark = builder(master, appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowExec warns "No Partition Defined for Window operation!" each
+    // time a plan with an unkeyed window is planned. Every such window runs
+    // over a side table bounded by construction: detrend's per-sample table
+    // (one row per sample of the first line, Detrend.sigma0Detrend), the
+    // bucket-offset tables of the two-phase cumulative sums in Profile (and
+    // LmOps), at most 1025 equal-width buckets, and TextOps's count
+    // histogram bucket totals, at most 64 binary magnitudes. So only that
+    // logger is raised to ERROR, and every other warning stays visible.
+    // Set after the session exists: Spark's logging start-up replaces the
+    // configuration.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }
@@ -182,6 +204,11 @@ object Tables {
         c
     }
   }
+
+  /** Forget every memoized [[rowCount]], so the next call per table counts
+    * again (Bench clears it before each rep, so no rep inherits another's
+    * count job). */
+  def clearRowCounts(): Unit = counts.clear()
 
   /** Register every table as a temp view named after itself; idempotent. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

@@ -168,6 +168,9 @@ object ModelRegistry {
 
   def register(m: Model): Model = { models.put(m.name, m); m }
 
+  /** Drop a registration (a scoped model, e.g. one probed for a check). */
+  def unregister(name: String): Unit = models.remove(name)
+
   /** M2 registration-time probing (gmfs.py:128-166) — derive metadata from
     * the function itself instead of trusting the caller:
     *  - scalar check: the function must evaluate at (35.0, 0.2, 90.0)

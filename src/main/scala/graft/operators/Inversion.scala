@@ -79,7 +79,7 @@ object Inversion {
   /** Kernel LUTs from dB copol/crosspol LUTs (either may be empty). */
   def invLuts(co: Lut, cr: Lut): InvLuts = {
     // phi symmetric in [0,180] → two-solution ambiguity (windspeed.py:152-156)
-    val phi180 = co.phi.nonEmpty && (180.0 - (co.phi.last - co.phi.head)) < 2.0
+    val phi180 = co.phi.nonEmpty && math.abs(180.0 - (co.phi.last - co.phi.head)) < 2.0
     InvLuts(co, phi180, co.phi.map(p => math.cos(math.toRadians(p))),
       co.phi.map(p => math.sin(math.toRadians(p))), cr)
   }

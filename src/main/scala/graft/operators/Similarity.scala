@@ -168,8 +168,19 @@ object Similarity {
       lastPick = pick.select(col("query_id"), col("neighbor_id").as("other_id"))
       state = updated
     }
-    selected.withColumn("mmr",
-      round(col("rel") * 0.5 - col("max_sim") * 0.5, 6))
+    selected.withColumn("mmr", roundHalfAway(col("rel") * 0.5 - col("max_sim") * 0.5, 6))
+  }
+
+  /** `x` rounded to `digits` decimals as the DuckDB oracle rounds a DOUBLE:
+    * half away from zero on the binary product x·10^digits. Spark's `round`
+    * rounds the double's shortest decimal string half-up instead, and the
+    * two part whenever the product lands within an ulp of a half: mmr from
+    * 6-decimal rel and max_sim ends in an exact 5 at the seventh decimal
+    * about half the time (0.1308585 is 130858.49999999999 ·1e-6, so DuckDB
+    * gives 0.130858 where Spark's `round` gives 0.130859). */
+  def roundHalfAway(x: Column, digits: Int): Column = {
+    val m = math.pow(10, digits)
+    signum(x) * floor(abs(x) * m + 0.5) / m
   }
 
   /** Deterministic pseudo-random hyperplane component for (dim i, plane j):

@@ -150,9 +150,7 @@ object LutIngest {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: LutIngest <cmod7|npy|nc> <in> <out>")
     val Array(kind, in, out) = args
-    val spark = GraftSession.getOrCreate(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      appName = "graft-lut-ingest")
+    val spark = GraftSession.getOrCreate(appName = "graft-lut-ingest")
     kind match {
       case "cmod7" => ingestCmod7(spark, in, out)
       case "npy" => ingestNpy(spark, in, out)

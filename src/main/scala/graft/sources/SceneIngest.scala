@@ -154,9 +154,7 @@ object SceneIngest {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: SceneIngest <out-dir> <owi.nc> [more.nc ...]")
     val outDir = args.head
-    val spark = GraftSession.getOrCreate(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      appName = "graft-scene-ingest")
+    val spark = GraftSession.getOrCreate(appName = "graft-scene-ingest")
     args.tail.foreach { nc =>
       val name = new File(nc).getName.stripSuffix(".nc")
       readOwiAuto(spark, nc).write.mode("overwrite").parquet(s"$outDir/$name")

@@ -80,6 +80,34 @@ class InversionSpec extends SparkSpec {
     assert(math.abs(r(1) - 9.1) < 1e-12)
   }
 
+  test("phi-180 flag: set for a [0, 180] axis, clear for a probed asymmetric GMF") {
+    val cmod5nLut = ModelRegistry.get("gmf_cmod5n").toLut()
+    assert(cmod5nLut.phi.last - cmod5nLut.phi.head == 180.0)
+    assert(Inversion.invLuts(Inversion.toDbValues(cmod5nLut), s1v2Db).coPhi180)
+    // cmod5n with a sin(phi) term: f(phi) != f(-phi), so probing registers
+    // it over [0, 360], and an upwind/downwind-folded inversion would
+    // misread a pixel blowing toward 180..360 degrees
+    val asym = ModelRegistry.registerProbed("inv_probe_asym", "VV", "linear",
+      (i: Double, w: Double, p: Double) =>
+        Gmf.cmod5n(i, w, p) * (1 + 0.3 * math.sin(math.toRadians(p))))
+    try {
+      assert(asym.phiRange == ((0.0, 360.0)))
+      val luts = Inversion.invLuts(Inversion.toDbValues(asym.toLut()), s1v2Db)
+      assert(!luts.coPhi180)
+      for (inc <- Seq(25.0, 40.0); wspd <- Seq(6.0, 14.0); phi <- Seq(60.0, 240.0, 300.0)) {
+        val r = math.toRadians(phi)
+        val s0co = db(asym.fn(inc, wspd, phi))
+        val out = Inversion.invertOne(luts, 0.1,
+          PxIn(0, 0, inc, s0co, Double.NaN, 0.1, wspd * math.cos(r), wspd * math.sin(r)))
+        val gotW = math.hypot(out.coRe, out.coIm)
+        val gotPhi = math.toDegrees(math.atan2(out.coIm, out.coRe))
+        val dPhi = ((gotPhi - phi) % 360 + 540) % 360 - 180
+        assert(math.abs(gotW - wspd) <= 0.2 + 1e-9, s"speed: inc=$inc w=$wspd phi=$phi got $gotW")
+        assert(math.abs(dPhi) <= 2.5 + 1e-9, s"dir: inc=$inc w=$wspd phi=$phi got $gotPhi")
+      }
+    } finally ModelRegistry.unregister(asym.name)
+  }
+
   // ---- the ring-pruned copol argmin against a full scan ----
 
   /** The kernel with a full copol scan: every cell of the slice in index

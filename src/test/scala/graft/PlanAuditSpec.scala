@@ -737,6 +737,39 @@ class PlanAuditSpec extends SparkSpec {
       s"q06 scan reads an unpruned schema: $readSchemas")
   }
 
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala/graft")
+
+  /** Every .scala file under graft/, listed from disk; fails when the tree
+    * is missing or empty, so an audit over it cannot pass vacuously. */
+  private def mainSources: Vector[java.io.File] = {
+    import scala.jdk.CollectionConverters._
+    assert(java.nio.file.Files.isDirectory(mainRoot), s"source root $mainRoot not found")
+    val walk = java.nio.file.Files.walk(mainRoot)
+    val all = try walk.iterator().asScala.toVector
+        .filter(_.toString.endsWith(".scala")).map(_.toFile)
+      finally walk.close()
+    assert(all.nonEmpty, s"no sources under $mainRoot")
+    all
+  }
+
+  test("only GraftSession builds a session or reads SPARK_GRAFT_CPUS") {
+    // one factory, so the verified, audited and measured plans share one
+    // config set and one core count
+    val builds = """SparkSession\s*\.\s*builder\s*\(""".r
+    val factory = mainRoot.resolve("core/GraftSession.scala").toFile
+    val sources = mainSources
+    assert(sources.contains(factory), s"$factory not found")
+    def offends(f: java.io.File): Boolean = {
+      val txt = java.nio.file.Files.readString(f.toPath)
+      builds.findFirstIn(txt).nonEmpty || txt.contains("\"SPARK_GRAFT_CPUS\"")
+    }
+    assert(offends(factory), "the factory itself no longer builds the session")
+    val offenders = sources.filter(f => f != factory && offends(f)).map(_.getPath)
+    assert(offenders.isEmpty,
+      s"session built or SPARK_GRAFT_CPUS read outside GraftSession:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("every driver collect in library code declares its bound") {
     // r19 verdict: driver-side collects are acceptable at 100 TB only
     // while their row bounds hold — so every `.collect()` in the library
@@ -746,17 +779,8 @@ class PlanAuditSpec extends SparkSpec {
     // here before it OOMs a driver.
     // every package under graft/, listed from disk so a new package is
     // covered; a missing or empty tree fails instead of passing vacuously
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root), s"source root $root not found")
-    val sources = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toVector
-        .filter(p => p.getParent != root && p.toString.endsWith(".scala"))
-        .map(_.toFile)
-      finally walk.close()
-    }
-    assert(sources.nonEmpty, s"no package sources under $root")
+    val sources = mainSources.filter(_.getParentFile.toPath != mainRoot)
+    assert(sources.nonEmpty, s"no package sources under $mainRoot")
     val offenders = for {
       f <- sources
       lines = java.nio.file.Files.readString(f.toPath).split("\n", -1).toSeq

@@ -950,6 +950,21 @@ class TextSpec extends SparkSpec {
       "diversity must beat raw relevance at pick 2")
   }
 
+  test("roundHalfAway rounds mmr as the DuckDB oracle does on q140's half-ulp rows") {
+    import spark.implicits._
+    // (rel, max_sim) of the q140 rows that parted from the oracle on
+    // perfbench/gen_tables.py seeds 34 and 35, with DuckDB's
+    // ROUND(rel * 5e-1 - max_sim * 5e-1, 6): x·1e6 is 106273.5 and
+    // 130858.49999999999, while Spark's `round` reads 0.10627349999999999
+    // and 0.1308585 and gives 0.106273 and 0.130859
+    val cases = Seq((0.41118, 0.198633, 0.106274), (0.22712, -0.034597, 0.130858),
+      (-0.22712, 0.034597, -0.130858), (0.2, 0.2, 0.0))
+    val got = cases.map(c => (c._1, c._2)).toDF("rel", "max_sim")
+      .select(Similarity.roundHalfAway(col("rel") * 0.5 - col("max_sim") * 0.5, 6))
+      .as[Double].collect().toSeq
+    assert(got == cases.map(_._3))
+  }
+
   test("vocabCoverage: histogram closed form equals the brute rank walk") {
     import spark.implicits._
     val words = Seq.fill(60)("the") ++ Seq.fill(25)("of") ++ Seq.fill(25)("to") ++
