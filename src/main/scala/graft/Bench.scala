@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler._
 
 import graft.core.{CacheLife, GraftSession, Tables}
@@ -121,9 +123,11 @@ object Bench {
     // q10's min (≈2.8 s of session setup, not query work)
     val warmups = selected.headOption.toSeq ++
       selected.find(_._1.startsWith("q10_")).toSeq
-    warmups.foreach { case (_, fn) =>
+    warmups.foreach { case (name, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch {
+        case NonFatal(e) => System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
+      }
     }
     CacheLife.releaseScoped(spark)
     // HOST CALIBRATION — fixed deterministic work, timed after warmup:
@@ -183,7 +187,7 @@ object Bench {
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch {
-            case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+            case NonFatal(e) => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
           }
         // capture elapsed BEFORE the inter-rep cache release so unpersist
         // cost never bills to the measured query
@@ -290,7 +294,7 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$cal,"queries":$qsFull,"cache_mb":$cacheFull,$cachePeak,"reps":$repsFull,"failed":$failed,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_last.json"), snapshot + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] snapshot write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] snapshot write failed: $e") }
     // last line of stdout, after spark shutdown, so nothing prints below it
     println(line)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.core.GraftSession
 
 /** Plan-hygiene tool: print the formatted physical plan of registered
@@ -20,7 +22,7 @@ object Explain {
       .foreach { case (name, fn) =>
         println(s"===== $name =====")
         try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+        catch { case NonFatal(e) => println(s"explain failed: ${e.getMessage}") }
       }
     spark.stop()
   }

@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import graft.core.GraftSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -28,7 +30,7 @@ object Verify {
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       completed += name

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable.ArrayBuilder
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** Gradient / streak-direction analysis (reference gradients.py, SURVEY.md
@@ -11,15 +13,11 @@ import org.apache.spark.sql.functions._
   *    kernel ([[Tiles.stencil3x3]]);
   *  - pyramid downsampling (R3/R12, gradients.py:689-721, :336-362) is a
   *    `groupBy(line/f, sample/f).avg` — exact INTER_AREA for integer factors;
-  *  - the windowed weighted angular histogram (R10, gradients.py:828-879)
-  *    is a two-pass aggregation: in-window median first (it breaks one-pass
-  *    partial aggregation — SURVEY.md §7.4 risk 3), then the 72-bin weight
-  *    sum, both partial-agg-friendly groupBys keyed by window id;
-  *  - circular smoothing (R15, gradients.py:882-923) pivots each window's
-  *    bins into a dense 72-array once, then runs the dilated 1,2,4 kernel
-  *    cascade as map-side array `transform`s — no per-dilation shuffle;
-  *  - peak extraction (R16, gradients.py:419-428) is a deterministic
-  *    row_number argmax over (weight desc, bin).
+  *  - the windowed weighted angular histogram (R10, gradients.py:828-879),
+  *    circular smoothing (R15, :882-923) and the peak (R16, :419-428) are one
+  *    plain-Scala kernel over a window's pixels and its 72-slot vector,
+  *    called once per window after one groupBy on the window key (the
+  *    in-window median breaks partial aggregation, SURVEY.md §7.4 risk 3).
   *
   * Angles: the squared-gradient trick (gradients.py:619-621) makes ±g
   * equivalent; angle(√(g²)) = atan2(g2i, g2r)/2 ∈ [-π/2, π/2].
@@ -227,57 +225,110 @@ object Gradients {
     }.toDF()
   }
 
-  /** R10: windowed weighted angular histogram over squared gradients.
-    *
-    * @param g2 output of [[scharrG2]]
-    * @param windowSize window side length in pixels
-    * @return one row per (win_line, win_sample, bin): weight sum + counts
-    */
-  def gradientHistogram(g2: DataFrame, windowSize: Int): DataFrame = {
-    val mag = hypot(col("g2r"), col("g2i"))
-    val base = g2.select(
-      (col("line") / windowSize).cast("int").as("win_line"),
-      (col("sample") / windowSize).cast("int").as("win_sample"),
-      col("g2r"), col("g2i"), mag.as("m"))
-      .filter(col("m") > 0)
+  // ---- the per-window streak kernel: the only implementation of the R10,
+  // R15, R16 and R17 math; the DataFrame functions below call it per window
 
-    // in-window median of |g2| (gradients.py:869) as a WINDOW aggregate, not
-    // a groupBy + self-join: the join formulation re-executes the whole
-    // upstream (Scharr tile shuffle included) for each side unless runtime
-    // stage reuse happens to fire; the window keeps ONE pass, one shuffle on
-    // the window key, and the same exact median
-    val w = Window.partitionBy(col("win_line"), col("win_sample"))
-    val withMed = base.select(col("win_line"), col("win_sample"),
-      col("g2r"), col("g2i"), col("m"),
-      median(col("m")).over(w).as("med_m"),
-      count(lit(1)).over(w).as("n_valid"))
+  /** Spark's `round(x, scale)` on a DOUBLE: HALF_UP on the shortest decimal
+    * string; NaN and ±Inf pass through. */
+  def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
 
-    // weight r = m/(m+median), bin by angle(sqrt(g2)) (gradients.py:853-877)
-    val angle = atan2(col("g2i"), col("g2r")) / 2.0
-    // quantize before discretizing: an exactly-axis-aligned gradient makes
-    // g2i a summation-order-sensitive +-1e-17, and atan2's sign
-    // discontinuity would flip the FLOOR a full bin between engines;
-    // rounding the quotient to 9 decimals collapses that noise class
-    val bin = least(
-      floor(round((angle + lit(math.Pi / 2)) / lit(math.Pi / NAngles), 9)).cast("int"),
-      lit(NAngles - 1))
-    withMed
-      .select(col("win_line"), col("win_sample"),
-        bin.as("bin"),
-        (col("m") / (col("m") + col("med_m"))).as("r"),
-        col("n_valid"))
-      .groupBy(col("win_line"), col("win_sample"), col("bin"))
-      .agg(sum(col("r")).as("weight"), count(lit(1)).as("n_px"),
-        min(col("n_valid")).as("n_valid"))
+  /** The bin of atan2(g2i + 0.0, g2r + 0.0)/2 (Spark's atan2). Rounding the
+    * quotient to 9 decimals before the floor keeps an axis-aligned g2i of
+    * ±1e-17 (summation-order noise) from flipping a bin between engines. */
+  def angleBin(g2r: Double, g2i: Double): Int = {
+    val q = (math.atan2(g2i + 0.0, g2r + 0.0) / 2.0 + math.Pi / 2) / (math.Pi / NAngles)
+    // the round moves q by at most 5e-10: it can lift the floor only just
+    // below an integer, so the decimal round runs only there
+    val fq = math.floor(q)
+    math.min((if (q - fq < 0.999999) fq else math.floor(roundHalfUp(q, 9))).toLong.toInt,
+      NAngles - 1)
   }
+
+  /** R10 over one window: per-bin sums of r = m/(m + median m) and pixel
+    * counts over its m = |g²| > 0 pixels (NaN too: Spark orders NaN above
+    * every number), and their number. The median is Spark's: linear
+    * interpolation at 0.5·(n − 1). */
+  def windowHistogram(re: Array[Double], im: Array[Double]): (Array[Double], Array[Long], Long) = {
+    val m = Array.tabulate(re.length)(i => math.hypot(re(i), im(i)))
+    val s = m.filter(x => x > 0 || x.isNaN)
+    java.util.Arrays.sort(s)
+    val (w, nPx, k) = (new Array[Double](NAngles), new Array[Long](NAngles), s.length)
+    if (k > 0) {
+      val (pos, lo, hi) = ((k - 1) * 0.5, (k - 1) / 2, k / 2)
+      val med = if (s(lo) == s(hi)) s(lo) else (hi - pos) * s(lo) + (pos - lo) * s(hi)
+      for (i <- m.indices if m(i) > 0 || m(i).isNaN) {
+        val b = angleBin(re(i), im(i))
+        w(b) += m(i) / (m(i) + med); nPx(b) += 1
+      }
+    }
+    (w, nPx, k)
+  }
+
+  /** R15: the [1,2,1]/4 kernel on the wrapped 72-slot axis at each dilation
+    * in turn, in place. A bin is supported when a tap is, so only bins
+    * reachable from an occupied bin carry a value (the SQL oracle's rows). */
+  def circCascade(w: Array[Double], sup: Array[Boolean], dilations: Seq[Int]): Unit =
+    dilations.foreach { d =>
+      def at(i: Int): Int = Math.floorMod(i, NAngles)
+      val (w0, s0) = (w.clone(), sup.clone())
+      for (i <- 0 until NAngles) {
+        w(i) = w0(at(i - d)) * 0.25 + w0(i) * 0.5 + w0(at(i + d)) * 0.25
+        sup(i) = s0(at(i - d)) || s0(i) || s0(at(i + d))
+      }
+    }
+
+  /** R16: (bin, rounded weight, streak direction = bin center + π/2) of the
+    * supported bin with the largest round(weight, 6), the lower bin on ties,
+    * in Spark's order (NaN above every number, −0.0 level with 0.0). */
+  def peakOf(w: Array[Double], sup: Array[Boolean]): Option[(Int, Double, Double)] =
+    (0 until NAngles).filter(sup(_)).reduceOption { (a, c) =>
+      val (ra, rc) = (roundHalfUp(w(a), 6), roundHalfUp(w(c), 6))
+      if (rc != ra && java.lang.Double.compare(rc, ra) > 0) c else a
+    }.map(b => (b, roundHalfUp(w(b), 6),
+      roundHalfUp(-math.Pi / 2 + (b + 0.5) * (math.Pi / NAngles) + math.Pi / 2, 6)))
+
+  /** Groups `df` once by (k1, k2), collects each group's `fields` as rows,
+    * runs `f` on them and explodes its output into columns `names`. The
+    * output keeps (k1, k2) and their partitioning, so a later grouping on
+    * them adds no exchange. */
+  private def perGroup[T <: Product: TypeTag](df: DataFrame, k1: String, k2: String,
+      fields: Seq[Column], names: String*)(f: Seq[Row] => Seq[T]): DataFrame =
+    df.groupBy(col(k1), col(k2)).agg(collect_list(struct(fields: _*)).as("rows"))
+      .select(col(k1), col(k2), explode(udf(f).apply(col("rows"))).as("o"))
+      .select(col(k1) +: col(k2) +:
+        names.zipWithIndex.map { case (n, i) => col(s"o._${i + 1}").as(n) }: _*)
+
+  /** Each config's [[windowHistogram]] from one window's (cfg, g2r, g2i)
+    * rows, cfg ∈ [0, nCfg). */
+  private def histogramsOf(px: Seq[Row], nCfg: Int): Array[(Array[Double], Array[Long], Long)] = {
+    val byCfg = Array.fill(nCfg)((new ArrayBuilder.ofDouble, new ArrayBuilder.ofDouble))
+    px.foreach { r => byCfg(r.getInt(0))._1 += r.getDouble(1); byCfg(r.getInt(0))._2 += r.getDouble(2) }
+    byCfg.map { case (re, im) => windowHistogram(re.result(), im.result()) }
+  }
+
+  /** One row per (k1, k2, cfg, bin) present in `px` (k1, k2, cfg, g2r, g2i):
+    * weight sum, n_px and the window's n_valid. */
+  private def histogramRows(px: DataFrame, k1: String, k2: String, nCfg: Int): DataFrame =
+    perGroup(px, k1, k2, Seq(col("cfg"), col("g2r"), col("g2i")),
+        "cfg", "bin", "weight", "n_px", "n_valid") { rows =>
+      for (((w, nPx, nValid), c) <- histogramsOf(rows, nCfg).toSeq.zipWithIndex;
+           bin <- 0 until NAngles if nPx(bin) > 0) yield (c, bin, w(bin), nPx(bin), nValid)
+    }
+
+  /** R10 over [[scharrG2]]'s output: one row per (win_line, win_sample,
+    * bin) present, with weight sum, n_px and the window's n_valid. */
+  def gradientHistogram(g2: DataFrame, windowSize: Int): DataFrame =
+    histogramRows(g2.select((col("line") / windowSize).cast("int").as("win_line"),
+      (col("sample") / windowSize).cast("int").as("win_sample"),
+      lit(0).as("cfg"), col("g2r"), col("g2i")), "win_line", "win_sample", 1).drop("cfg")
 
   /** R7-R9 proper: OVERLAPPING windowed histogram — the reference's rolling
     * windows sampled at centers every `step` pixels
     * (gradients.py:150-205: rolling(center=True).construct + sel(centers)).
     * Each gradient pixel is flatMapped to every window containing it
-    * ((ws/step)² duplication — the shuffle-volume/overlap tradeoff of
-    * SURVEY.md R7), then the same two-pass median + binning as
-    * [[gradientHistogram]], keyed by center coordinates.
+    * ((ws/step)² duplication, SURVEY.md R7), then the kernel runs per center.
     */
   def gradientHistogramOverlapping(g2: DataFrame, windowSize: Int, step: Int): DataFrame = {
     val spark = g2.sparkSession
@@ -289,87 +340,35 @@ object Gradients {
         for {
           kl <- math.max(Math.floorDiv(l - h, step) + 1, 0) to Math.floorDiv(l + h, step)
           ks <- math.max(Math.floorDiv(s - h, step) + 1, 0) to Math.floorDiv(s + h, step)
-        } yield (kl * step, ks * step, re, im)
+        } yield (kl * step, ks * step, 0, re, im)
       }
-      .toDF("cl", "cs", "g2r", "g2i")
-      .withColumn("m", hypot(col("g2r"), col("g2i")))
-      .filter(col("m") > 0)
-
-    // window-aggregate median, same rationale as [[gradientHistogram]]
-    val w = Window.partitionBy(col("cl"), col("cs"))
-    val withMed = assigned.select(col("cl"), col("cs"), col("g2r"), col("g2i"), col("m"),
-      median(col("m")).over(w).as("med_m"),
-      count(lit(1)).over(w).as("n_valid"))
-
-    val angle = atan2(col("g2i"), col("g2r")) / 2.0
-    // quantize before discretizing: an exactly-axis-aligned gradient makes
-    // g2i a summation-order-sensitive +-1e-17, and atan2's sign
-    // discontinuity would flip the FLOOR a full bin between engines;
-    // rounding the quotient to 9 decimals collapses that noise class
-    val bin = least(
-      floor(round((angle + lit(math.Pi / 2)) / lit(math.Pi / NAngles), 9)).cast("int"),
-      lit(NAngles - 1))
-    withMed
-      .select(col("cl"), col("cs"), bin.as("bin"),
-        (col("m") / (col("m") + col("med_m"))).as("r"), col("n_valid"))
-      .groupBy(col("cl"), col("cs"), col("bin"))
-      .agg(sum(col("r")).as("weight"), count(lit(1)).as("n_px"),
-        min(col("n_valid")).as("n_valid"))
+      .toDF("cl", "cs", "cfg", "g2r", "g2i")
+    histogramRows(assigned, "cl", "cs", 1).drop("cfg")
   }
 
-  /** R15: circular smoothing — [1,2,1]/4 kernel at dilations 1,2,4 applied
-    * sequentially on the wrapped 72-bin axis (gradients.py:882-923).
-    *
-    * Scale shape: ONE groupBy pivots each window's sparse bins into a dense
-    * 72-slot array (72 codegen'd conditional sums — map-side combinable),
-    * then the whole dilation cascade runs as per-row `transform` array
-    * arithmetic with zero additional exchanges, and `posexplode` restores
-    * the long format. The previous formulation shuffled the histogram once
-    * per dilation (3 extra exchanges); SURVEY §2.8 R15 prescribes the
-    * no-shuffle array transform. Downstream [[peak]]'s window keys match
-    * the groupBy partitioning, so the whole smooth→peak tail is
-    * exchange-free after the pivot.
-    *
-    * Support tracking: bins reachable from an occupied bin through the
-    * dilation offsets get a row (even if numerically tiny); unreachable
-    * bins don't — exactly the row-existence semantics of the join
-    * formulation (and of the SQL oracle), which never manufactures rows
-    * for fully-empty neighborhoods.
-    */
-  def circSmooth(hist: DataFrame, dilations: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    val n = NAngles
-    def at(a: Column, i: Column): Column = element_at(a, i + 1)
-    def sh(a: Column, d: Int, i: Column): Column = at(a, pmod(i + lit(d), lit(n)))
-    val sums = (0 until n).map(b =>
-      sum(when(col("bin") === b, col("weight"))).as(s"w$b"))
-    val dense = hist
-      .groupBy(col("win_line"), col("win_sample"))
-      .agg(sums.head, sums.tail: _*)
-      .select(col("win_line"), col("win_sample"),
-        array((0 until n).map(b => coalesce(col(s"w$b"), lit(0.0))): _*).as("w"),
-        array((0 until n).map(b => col(s"w$b").isNotNull): _*).as("sup"))
-    val idx = sequence(lit(0), lit(n - 1))
-    // one SELECT per dilation: the alias boundary makes each pass's array
-    // an attribute the next pass references, so every intermediate is
-    // evaluated once per row. Folding the lambdas into one expression would
-    // inline the prior pass 3x per tap (27x per layer) — a silent
-    // exponential blowup in the higher-order-function tree.
-    val cascaded = dilations.foldLeft(dense) { (df, d) =>
-      df.select(col("win_line"), col("win_sample"),
-        transform(idx, i =>
-          sh(col("w"), -d, i) * lit(0.25) + at(col("w"), i) * lit(0.5) +
-            sh(col("w"), d, i) * lit(0.25)).as("w"),
-        transform(idx, i =>
-          sh(col("sup"), -d, i) || at(col("sup"), i) || sh(col("sup"), d, i))
-          .as("sup"))
+  /** Collects each window of a long (win_line, win_sample, bin, weight)
+    * frame into its 72-slot vector (weights summed per bin) for `f`. */
+  private def perVector[T <: Product: TypeTag](hist: DataFrame, names: String*)(
+      f: (Array[Double], Array[Boolean]) => Seq[T]): DataFrame =
+    perGroup(hist, "win_line", "win_sample",
+        Seq(col("bin").cast("int"), col("weight").cast("double")), names: _*) { bins =>
+      val (w, sup) = (new Array[Double](NAngles), new Array[Boolean](NAngles))
+      for (r <- bins if !r.isNullAt(1)) { w(r.getInt(0)) += r.getDouble(1); sup(r.getInt(0)) = true }
+      f(w, sup)
     }
-    cascaded
-      .select(col("win_line"), col("win_sample"),
-        posexplode(zip_with(col("w"), col("sup"), (w, s) => struct(w.as("w"), s.as("s")))))
-      .where(col("col.s"))
-      .select(col("win_line"), col("win_sample"),
-        col("pos").as("bin"), col("col.w").as("weight"))
-  }
+
+  /** R15: [[circCascade]] per window of a long histogram, emitting the
+    * supported bins; a downstream [[peak]] adds no exchange. */
+  def circSmooth(hist: DataFrame, dilations: Seq[Int] = Seq(1, 2, 4)): DataFrame =
+    perVector(hist, "bin", "weight") { (w, sup) =>
+      circCascade(w, sup, dilations)
+      (0 until NAngles).filter(sup(_)).map(b => (b, w(b)))
+    }
+
+  /** R16: [[peakOf]] per window of a long frame with one row per (window,
+    * bin), e.g. [[circSmooth]]'s output. */
+  def peak(hist: DataFrame): DataFrame =
+    perVector(hist, "peak_bin", "peak_weight", "streak_dir_rad")((w, sup) => peakOf(w, sup).toSeq)
 
   /** Dilated renormalized B2 smoothing: taps at offsets {-d, 0, d}² with
     * [1,2,1]² weights. B4-dilated-by-2 == (B2 dilated)∘(B2 dilated) since
@@ -509,23 +508,6 @@ object Gradients {
       when(fRaw < 0.0015, 0.0).otherwise(fRaw).as("f"))
   }
 
-  /** R16: histogram peak per window — deterministic argmax on rounded
-    * weights (rounding first keeps cross-engine ordering stable).
-    */
-  def peak(hist: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("win_line"), col("win_sample"))
-      .orderBy(round(col("weight"), 6).desc, col("bin").asc)
-    hist.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("win_line"), col("win_sample"),
-        col("bin").as("peak_bin"),
-        round(col("weight"), 6).as("peak_weight"),
-        // orthogonal streak direction: bin center + π/2 (streaks notebook)
-        round(lit(-math.Pi / 2) + (col("bin") + 0.5) * lit(math.Pi / NAngles) + lit(math.Pi / 2), 6)
-          .as("streak_dir_rad"))
-  }
-
   /** R14 — nearest-center alignment for configs whose window-center grids
     * differ (gradients.py:229-245 `sel(..., method='nearest')`): snap each
     * row's (line, sample) onto the regular reference-center grid
@@ -550,31 +532,47 @@ object Gradients {
         sumCols.tail.map(c => sum(col(c)).as(c)): _*)
   }
 
-  /** R13: multiscale fan-out — union of per-config pipelines with literal
-    * config columns (pol/window/downscale become ordinary columns).
-    *
-    * The Scharr+g² prefix is shared by every window size at the same
-    * downscale, but Spark's ReuseExchange cannot canonicalize it across
-    * union branches (the tile kernels are mapPartitions closures, and
-    * closure identity differs per branch) — so with >1 window size the
-    * per-downscale gradient grid is persisted explicitly and computed once
-    * instead of |windowSizes| times. MEMORY_AND_DISK: the grid is
-    * pixel-sized, spills harmlessly if executors are tight.
-    */
-  def multiscale(grid: DataFrame, downscales: Seq[Int], windowSizes: Seq[Int],
-      tileSize: Int = 64): DataFrame =
-    downscales.map { f =>
-      val g = if (f == 1) grid else coarsen(grid, f).drop("n_px")
-      val g2 = scharrG2(g, tileSize)
-      val shared =
-        if (windowSizes.length > 1)
-          graft.core.CacheLife.scoped(
-            g2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        else g2
-      windowSizes.map { ws =>
-        gradientHistogram(shared, ws / f)
-          .withColumn("downscale_factor", lit(f))
-          .withColumn("window_size", lit(ws))
-      }.reduce(_ unionAll _)
+  /** R13: every (downscale, window size) config's Scharr pixels keyed by
+    * window, `cfg` = the config's index. ReuseExchange cannot share the
+    * per-downscale Scharr grid across union branches (closure identity
+    * differs), so with >1 window size it is persisted and computed once. */
+  private def windowPixels(grid: DataFrame, downscales: Seq[Int], windowSizes: Seq[Int],
+      tileSize: Int): DataFrame =
+    downscales.zipWithIndex.flatMap { case (f, i) =>
+      val g2 = scharrG2(if (f == 1) grid else coarsen(grid, f).drop("n_px"), tileSize)
+      val shared = if (windowSizes.length == 1) g2 else graft.core.CacheLife.scoped(
+        g2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      windowSizes.zipWithIndex.map { case (ws, j) =>
+        shared.select((col("line") / (ws / f)).cast("int").as("win_line"),
+          (col("sample") / (ws / f)).cast("int").as("win_sample"),
+          lit(i * windowSizes.length + j).as("cfg"), col("g2r"), col("g2i"))
+      }
     }.reduce(_ unionAll _)
+
+  /** R13: multiscale fan-out — every config's histogram with its config as
+    * ordinary columns; all configs' pixels are grouped once by window key. */
+  def multiscale(grid: DataFrame, downscales: Seq[Int], windowSizes: Seq[Int],
+      tileSize: Int = 64): DataFrame = {
+    val configs = for (f <- downscales; ws <- windowSizes) yield (f, ws)
+    histogramRows(windowPixels(grid, downscales, windowSizes, tileSize),
+        "win_line", "win_sample", configs.length)
+      .withColumn("downscale_factor", element_at(typedLit(configs.map(_._1)), col("cfg") + 1))
+      .withColumn("window_size", element_at(typedLit(configs.map(_._2)), col("cfg") + 1))
+      .drop("cfg")
+  }
+
+  /** R10 → R17 → R15 → R16 in one kernel call per window: each downscale's
+    * [[windowHistogram]], their mean over the configs where a bin is present
+    * (R17), [[circCascade]] and [[peakOf]]. One row per window with m > 0. */
+  def streakPeaks(grid: DataFrame, downscales: Seq[Int], windowSize: Int): DataFrame =
+    perGroup(windowPixels(grid, downscales, Seq(windowSize), 64), "win_line", "win_sample",
+        Seq(col("cfg"), col("g2r"), col("g2i")), "peak_bin", "peak_weight", "streak_dir_rad") { rows =>
+      val hs = histogramsOf(rows, downscales.length)
+      val present = Array.tabulate(NAngles)(bin => hs.count(_._2(bin) > 0))
+      val w = Array.tabulate(NAngles)(bin => if (present(bin) == 0) 0.0 else
+        hs.foldLeft(0.0)((s, h) => if (h._2(bin) > 0) s + h._1(bin) else s) / present(bin))
+      val sup = present.map(_ > 0)
+      circCascade(w, sup, Seq(1, 2, 4))
+      peakOf(w, sup).toSeq
+    }
 }

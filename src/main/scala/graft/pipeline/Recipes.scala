@@ -57,16 +57,14 @@ object Recipes {
       degrees(col("dir_rad")).as("dir_antenna_deg"))
   }
 
-  /** §3.3 — streak directions: detrend → gradients → multiscale windowed
-    * histogram → circular smoothing → peak per window.
+  /** §3.3 — streak directions: gradients → per window, each downscale's
+    * weighted histogram, their mean, circular smoothing and the peak, in one
+    * kernel call per window ([[Gradients.streakPeaks]]). One row per window:
+    * (win_line, win_sample, peak_bin, peak_weight, streak_dir_rad).
     */
   def streaks(grid: DataFrame, downscales: Seq[Int] = Seq(1, 2),
-      windowSize: Int = 16): DataFrame = {
-    val hist = Gradients.multiscale(grid, downscales, Seq(windowSize))
-    val smoothed = hist.groupBy(col("win_line"), col("win_sample"), col("bin"))
-      .agg(avg(col("weight")).as("weight")) // mean over configs (R17)
-    Gradients.peak(Gradients.circSmooth(smoothed))
-  }
+      windowSize: Int = 16): DataFrame =
+    Gradients.streakPeaks(grid, downscales, windowSize)
 
   /** The training-data END PRODUCT: apply a curation decision, shuffle the
     * survivors deterministically for the epoch, pack them into fixed-size

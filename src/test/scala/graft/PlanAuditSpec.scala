@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
 
 import graft.pipeline.Recipes
 import graft.sources.Nc3
@@ -320,6 +322,26 @@ class PlanAuditSpec extends SparkSpec {
             s"not the per-sample aggregate:\n$plan")
       }
     }
+  }
+
+  test("streaks over a detrended owi scene: one grouping per window, no window pivot") {
+    // the streak tail groups each window's pixels once and runs the kernel.
+    // The long-format chain it replaced planned 11 exchanges here, keyed
+    // Window nodes (a median per downscale, the row_number peak) and 2
+    // aggregates of 72 per-bin sums. The only Window nodes left are
+    // detrend's unkeyed ones over its per-sample table, once per downscale
+    // branch.
+    val det = Recipes.detrend(spark.read.format("owi").load(owiScene))
+    val plan = physical(Recipes.streaks(
+      det.select(col("line"), col("sample"), col("sigma0_detrend").as("v")), Seq(1, 2)))
+    def windows(p: SparkPlan): Seq[WindowExec] = p.collect { case w: WindowExec => w }
+    assert(windows(plan).forall(_.partitionSpec.isEmpty) &&
+      windows(plan).size == 2 * windows(physical(det)).size,
+      s"the streak tail plans a Window node:\n$plan")
+    val wide = plan.collect { case a: BaseAggregateExec if a.aggregateExpressions.size >= 72 => a }
+    assert(wide.isEmpty, s"an aggregate carries ${wide.map(_.aggregateExpressions.size)} expressions")
+    val exchanges = plan.collect { case e: Exchange => e }.size
+    assert(exchanges <= 11, s"detrend + streaks plans $exchanges exchanges:\n$plan")
   }
 
   test("windRetrieval spreads a single-split parquet input, never an owi scene") {
