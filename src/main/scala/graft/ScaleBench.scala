@@ -13,13 +13,20 @@ import graft.operators.{Detrend, Directions, Gradients, Inversion}
   * LUTs, tile+halo shuffles) far beyond the sf0.1 gate — plus QUALITY gates
   * for every approximate operator (planted ground truth → measured recall,
   * not just determinism). Prints one line per target. Usage:
-  * runMain graft.ScaleBench [lines samples] [big]  — `big` adds the 150M-px
-  * inversion target (the "100×" of the reference notebook scene).
+  * runMain graft.ScaleBench [lines samples] [big] [section…] — `big` adds
+  * the 150M-px inversion target (the "100×" of the reference notebook
+  * scene); the nine sections are listed on `Sections`.
   */
 object ScaleBench {
   /** Target sections selectable from the CLI: `runMain graft.ScaleBench
-    * [lines samples] [big] [scene|vectors|docs]` — no section arg runs
-    * everything (plus the 100×-scene targets with `big`). */
+    * [lines samples] [big]
+    * [scene|vectors|docs|sketches|events|media|graph|layout|eval]…` — any
+    * number of them; no section arg runs everything (plus the 100×-scene
+    * targets with `big`). `docs` and `eval` hold the statistic gates:
+    * `docs` the eval/drift statistics (AUC, AP and its bootstrap CI, KS,
+    * W1, τ-b, trend and permutation tests, global and keyed) next to the
+    * text-curation targets, `eval` the Pareto-front, MAD-outlier,
+    * collocation and ROUGE gates. */
   private val Sections =
     Set("scene", "vectors", "docs", "sketches", "events", "media", "graph",
       "layout", "eval")

@@ -747,6 +747,34 @@ object LmOps {
 
   // ---------------------------------------------------------------- AUC
 
+  /** The eval family's label contract: 1 ⇒ positive, anything else (NULL
+    * included) ⇒ negative. */
+  private def isPos(labelCol: String): Column =
+    when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L)
+
+  /** (keys…, score, p, ng): positives and negatives per distinct integer
+    * score, map-side combinable. Complete-case on the score and, through
+    * `nn` (the [[Keyed.guard]] filter), on the keys: an unscored row carries
+    * no ranking information. */
+  private def scoreCounts(df: DataFrame, keys: Seq[String], scoreCol: String,
+      labelCol: String, nn: Column): DataFrame = {
+    val ks = keys.map(col)
+    df.select(ks :+ col(scoreCol).cast("long").as("score") :+
+        isPos(labelCol).as("__y"): _*)
+      .where(col("score").isNotNull && nn)
+      .groupBy(ks :+ col("score"): _*)
+      .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
+  }
+
+  /** A (score, p, ng) count-delta store with same-score rows combined and
+    * NULL scores EXCLUDED — what the `*FromCounts` entry points read. A
+    * null group would sort NULLS FIRST into every bucket offset while the
+    * null-unsafe offsets join dropped its own row, silently inflating
+    * neg_below for every real score. */
+  private def mergedScoreCounts(counts: DataFrame): DataFrame =
+    counts.where(col("score").isNotNull).groupBy(col("score"))
+      .agg(sum(col("p")).as("p"), sum(col("ng")).as("ng"))
+
   /** ROC-AUC of an integer score against a binary label, computed as the
     * tie-corrected Mann–Whitney statistic WITHOUT a global rank: group by
     * distinct score (map-side combinable), then a two-phase cumulative
@@ -776,58 +804,18 @@ object LmOps {
     * Output (one row): n, n_pos, n_neg, auc_micro, gini_micro.
     */
   def binaryAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
-    binaryAucFromCounts(df
-      .select(col(scoreCol).cast("long").as("score"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("y"))
-      .groupBy(col("score"))
-      .agg(sum(col("y")).as("p"), sum(lit(1L) - col("y")).as("ng")))
+    binaryAucBy(df, Nil, scoreCol, labelCol)
 
   /** [[binaryAuc]] over a PRE-AGGREGATED (score, p, ng) count table — the
     * incremental form a streaming eval monitor maintains (per-batch count
     * deltas sum to these without re-reading rows; the
     * [[Profile.bucketDriftFromCounts]] contract). Rows with the same
     * score are combined, so a delta store may carry duplicates.
-    * NULL scores are EXCLUDED before anything else — a null group would
-    * sort NULLS FIRST into every bucket offset while the null-unsafe
-    * offsets join dropped its own row, silently inflating neg_below for
-    * every real score (an unscored row carries no ranking information;
-    * complete-case is the only consistent semantics here).
+    * NULL scores are EXCLUDED before anything else (complete-case is the
+    * only consistent semantics here; see [[mergedScoreCounts]]).
     */
-  def binaryAucFromCounts(counts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val g = counts.where(col("score").isNotNull).groupBy(col("score"))
-      .agg(sum(col("p")).as("p"), sum(col("ng")).as("ng"))
-    // equal-width order-preserving buckets: b = (score − mn) DIV w with
-    // w sized so ≤1024 buckets cover [mn, mx]
-    val stats = g.agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"))
-    val bucketed = g.crossJoin(broadcast(stats))
-      .withColumn("b",
-        expr("(score - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-      .drop("__mn", "__mx")
-    val wOff = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("b"))
-      .agg(sum(col("ng")).as("bn"))
-      .withColumn("off_n", coalesce(sum(col("bn")).over(wOff), lit(0L)))
-      .select(col("b"), col("off_n"))
-    val wLoc = Window.partitionBy(col("b")).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = bucketed.join(broadcast(offsets), "b")
-      .withColumn("neg_below",
-        col("off_n") + coalesce(sum(col("ng")).over(wLoc), lit(0L)))
-    cum.agg(
-        sum(col("p")).as("n_pos"), sum(col("ng")).as("n_neg"),
-        coalesce(sum(col("p").cast(DecimalType(38, 0)) *
-          (col("neg_below") * 2 + col("ng"))), lit(0).cast(DecimalType(38, 0)))
-          .as("num2"))
-      .select(
-        (col("n_pos") + col("n_neg")).as("n"), col("n_pos"), col("n_neg"),
-        expr("""CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0
-                ELSE CAST((CAST(1000000 AS DECIMAL(38,0)) * num2)
-                  DIV (2 * CAST(n_pos AS DECIMAL(38,0)) * n_neg) AS BIGINT)
-                END""").as("auc_micro"))
-      .withColumn("gini_micro", col("auc_micro") * 2 - 1000000L)
-  }
+  def binaryAucFromCounts(counts: DataFrame): DataFrame =
+    aucByCounts(mergedScoreCounts(counts), Nil)
 
   /** Average precision (area under the precision-recall curve — the
     * step-wise sum sklearn's average_precision_score computes) of an
@@ -852,64 +840,18 @@ object LmOps {
     * Output (one row): n, n_pos, n_neg, ap_micro, prevalence_micro.
     */
   def binaryAp(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
-    binaryApFromCounts(df
-      .select(col(scoreCol).cast("long").as("score"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("y"))
-      .groupBy(col("score"))
-      .agg(sum(col("y")).as("p"), sum(lit(1L) - col("y")).as("ng")))
+    binaryApBy(df, Nil, scoreCol, labelCol)
 
   /** [[binaryAp]] over a PRE-AGGREGATED (score, p, ng) count table — the
     * same mergeable store the AUC monitor keeps, so a streaming AP rides
     * for free ([[binaryAucFromCounts]] contract: same-score rows combine,
     * NULL scores are excluded). */
-  def binaryApFromCounts(counts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val g = counts.where(col("score").isNotNull).groupBy(col("score"))
-      .agg(sum(col("p")).as("p"), sum(col("ng")).as("ng"))
-    val stats = g.agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"),
-      sum(col("p")).as("__tp"), sum(col("p") + col("ng")).as("__tot"))
-    // narrow rows through the window sorts: only (score, p, ng, b) ride
-    // the two-phase pass; the 1-row totals frame re-attaches afterwards
-    // (a broadcast map-side join — measured 2.3× on the 10M gate when
-    // mn/mx/tp/tot were carried through instead)
-    val bucketed = g.crossJoin(broadcast(stats.select(col("__mn"), col("__mx"))))
-      .withColumn("b", expr("(score - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-      .drop("__mn", "__mx")
-    val wOff = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("b"))
-      .agg(sum(col("ng")).as("bn"), sum(col("p")).as("bp"))
-      .withColumn("off_n", coalesce(sum(col("bn")).over(wOff), lit(0L)))
-      .withColumn("off_p", coalesce(sum(col("bp")).over(wOff), lit(0L)))
-      .select(col("b"), col("off_n"), col("off_p"))
-    val wLoc = Window.partitionBy(col("b")).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(broadcast(offsets), "b")
-      .withColumn("pos_below",
-        col("off_p") + coalesce(sum(col("p")).over(wLoc), lit(0L)))
-      .withColumn("all_below",
-        col("pos_below") + col("off_n") +
-          coalesce(sum(col("ng")).over(wLoc), lit(0L)))
-      .crossJoin(broadcast(stats.select(col("__tp"), col("__tot"))))
-      // DECIMAL mult/div only on positive-bearing rows (p = 0 ⇒ term 0;
-      // DECIMAL arithmetic is the hot cost at 10M distinct scores —
-      // memory: ~10 s per 22M rows)
-      .withColumn("__term",
-        expr("""CASE WHEN p = 0 THEN 0 ELSE
-                (CAST(1000000 AS DECIMAL(38,0)) * p * (__tp - pos_below))
-                DIV (__tot - all_below) END"""))
-      .agg(coalesce(sum(col("p")), lit(0L)).as("n_pos"),
-        coalesce(sum(col("ng")), lit(0L)).as("n_neg"),
-        coalesce(sum(col("__term").cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0))).as("__ts"))
-      .select(
-        (col("n_pos") + col("n_neg")).as("n"), col("n_pos"), col("n_neg"),
-        expr("""CASE WHEN n_pos = 0 THEN 0
-                ELSE CAST(__ts DIV n_pos AS BIGINT) END""").as("ap_micro"),
-        expr("""CASE WHEN n_pos + n_neg = 0 THEN 0
-                ELSE CAST(CAST(1000000 AS DECIMAL(38,0)) * n_pos
-                  DIV (n_pos + n_neg) AS BIGINT) END""").as("prevalence_micro"))
-  }
+  def binaryApFromCounts(counts: DataFrame): DataFrame =
+    apByCounts(mergedScoreCounts(counts), Nil)
+
+  private val ApReserved = Set("score", "p", "ng", "b", "bn", "bp", "off_n",
+    "off_p", "pos_below", "all_below", "n", "n_pos", "n_neg", "ap_micro",
+    "prevalence_micro", "__y", "__tp", "__tot", "__term", "__ts", "__mn", "__mx")
 
   /** [[binaryAp]] per key group — the PR-metric slice dashboard
     * ([[binaryAucBy]]'s companion, and the slice form that matters most:
@@ -920,44 +862,30 @@ object LmOps {
     * re-attach after the windows as a |keys|-row join — ZERO
     * SinglePartition anywhere. Complete-case on keys and scores. Output
     * (one row per group): keys…, n, n_pos, n_neg, ap_micro,
-    * prevalence_micro.
+    * prevalence_micro. `keys = Nil` is [[binaryAp]]: one row, all zeros on
+    * empty input.
     */
   def binaryApBy(df: DataFrame, keys: Seq[String], scoreCol: String,
       labelCol: String): DataFrame = {
-    require(keys.nonEmpty, "binaryApBy needs at least one key (use binaryAp)")
-    val reserved = Set("score", "p", "ng", "b", "bn", "bp", "off_n", "off_p",
-      "pos_below", "all_below", "n", "n_pos", "n_neg", "ap_micro",
-      "prevalence_micro", "__y", "__tp", "__tot", "__term", "__ts",
-      "__mn", "__mx")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    val ks = keys.map(col)
-    val g = df
-      .select(ks :+ col(scoreCol).cast("long").as("score") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("score").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .groupBy(ks :+ col("score"): _*)
-      .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
-    apByFromCounts(g, keys)
+    val nn = Keyed.guard(keys, ApReserved)
+    apByCounts(scoreCounts(df, keys, scoreCol, labelCol, nn), keys)
   }
 
-  /** The keyed AP machinery over a PRE-AGGREGATED (keys…, score, p, ng)
-    * count table — shared by [[binaryApBy]] and the bootstrap resamples of
-    * [[binaryApCi]]/[[binaryApCiBy]] (each resample id is just one more
-    * key). Same quantization contract and zero-SinglePartition shape as
-    * [[binaryApBy]]. */
-  private def apByFromCounts(g0: DataFrame, keys: Seq[String]): DataFrame = {
+  /** The AP machinery over a (keys…, score, p, ng) count table with one
+    * row per (keys, score) — shared by [[binaryApBy]], [[binaryApFromCounts]]
+    * and the bootstrap resamples of [[binaryApCiBy]] (each resample id is
+    * just one more key). */
+  private def apByCounts(g: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ks = keys.map(col)
-    // the count table is read by the extrema/total aggregate AND the
-    // bucket-assignment join; persisting it runs the upstream (for the
-    // bootstrap: the ×(resamples+1) expansion and its groupBy) exactly
-    // once — its size is the distinct-score table, bounded by contract
-    val g = graft.core.CacheLife.scoped(g0.persist())
     val stats = g.groupBy(ks: _*)
       .agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"),
         sum(col("p")).as("__tp"), sum(col("p") + col("ng")).as("__tot"))
-    val bucketed = g.join(stats.select(ks :+ col("__mn") :+ col("__mx"): _*), keys)
+    // narrow rows through the window sorts: only (score, p, ng, b) ride
+    // the two-phase pass; the totals re-attach afterwards (measured 2.3×
+    // on the 10M gate when mn/mx/tp/tot were carried through instead)
+    val bucketed = g
+      .join(Keyed.side(stats.select(ks :+ col("__mn") :+ col("__mx"): _*), keys), keys)
       .withColumn("b", expr("(score - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
       .drop("__mn", "__mx")
     val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
@@ -969,19 +897,23 @@ object LmOps {
       .select(ks ++ Seq(col("b"), col("off_n"), col("off_p")): _*)
     val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("score"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(offsets, keys :+ "b")
+    bucketed.join(Keyed.side(offsets, keys), keys :+ "b")
       .withColumn("pos_below",
         col("off_p") + coalesce(sum(col("p")).over(wLoc), lit(0L)))
       .withColumn("all_below",
         col("pos_below") + col("off_n") +
           coalesce(sum(col("ng")).over(wLoc), lit(0L)))
-      .join(stats.select(ks :+ col("__tp") :+ col("__tot"): _*), keys)
+      .join(Keyed.side(stats.select(ks :+ col("__tp") :+ col("__tot"): _*), keys), keys)
+      // DECIMAL mult/div only on positive-bearing rows (p = 0 ⇒ term 0;
+      // DECIMAL arithmetic is the hot cost at 10M distinct scores —
+      // memory: ~10 s per 22M rows)
       .withColumn("__term",
         expr("""CASE WHEN p = 0 THEN 0 ELSE
                 (CAST(1000000 AS DECIMAL(38,0)) * p * (__tp - pos_below))
                 DIV (__tot - all_below) END"""))
       .groupBy(ks: _*)
-      .agg(sum(col("p")).as("n_pos"), sum(col("ng")).as("n_neg"),
+      .agg(coalesce(sum(col("p")), lit(0L)).as("n_pos"),
+        coalesce(sum(col("ng")), lit(0L)).as("n_neg"),
         coalesce(sum(col("__term").cast(DecimalType(38, 0))),
           lit(0).cast(DecimalType(38, 0))).as("__ts"))
       .select(ks ++ Seq(
@@ -1057,60 +989,14 @@ object LmOps {
     * deterministic and oracle-replayable.
     */
   def binaryApCi(df: DataFrame, idCol: String, scoreCol: String,
-      labelCol: String, resamples: Int = 64, scoreBuckets: Int = 0): DataFrame = {
-    require(resamples >= 2 && resamples <= 256,
-      s"resamples must be in [2, 256], got $resamples")
-    require(scoreBuckets == 0 || (scoreBuckets >= 2 && scoreBuckets <= 65536),
-      s"scoreBuckets must be 0 (off) or in [2, 65536], got $scoreBuckets")
-    val base0 = df.select(col(idCol).cast("string").as("__id"),
-        col(scoreCol).cast("long").as("score"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .where(col("score").isNotNull && col("__id").isNotNull)
-    val base = if (scoreBuckets == 0) base0 else {
-      // quantize BEFORE the ×(resamples+1) expansion — the whole point of
-      // the knob is that the min/max pass costs one scan while the
-      // expansion's distinct-score table shrinks from rows to buckets
-      val st = base0.agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"))
-      base0.crossJoin(broadcast(st)) // 1-row stats frame (audited BNLJ shape)
-        .withColumn("score",
-          expr(s"(score - __mn) DIV ((__mx - __mn) DIV $scoreBuckets + 1)"))
-        .drop("__mn", "__mx")
-    }
-    // the POINT estimate rides the same pass as resample −1 with weight 1
-    // (its per-threshold terms equal binaryAp's exactly), so the whole
-    // operator is ONE expansion + ONE keyed machinery run instead of two
-    // pipelines — measured ~2× on the fixed per-stage overhead. The
-    // (resamples+1)-row result is persisted because BOTH the point filter
-    // and the variance aggregate read it — otherwise each branch re-runs
-    // the full expansion + keyed machinery
-    val aps = graft.core.CacheLife.scoped(
-      apCiResamples(base, Nil, resamples).persist())
-    val point = aps.filter(col("__bs") === -1).drop("__bs")
-    val ci = aps.filter(col("__bs") >= 0)
-      .agg(count(lit(1)).as("b"),
-        coalesce(sum(col("ap_micro")), lit(0L)).as("__sa"),
-        coalesce(sum(col("ap_micro") * col("ap_micro")), lit(0L)).as("__sa2"))
-      .select(col("b"),
-        expr("""CASE WHEN b < 2 THEN 0.0 ELSE
-                ROUND(SQRT(CAST(b * __sa2 - __sa * __sa AS DOUBLE)
-                  / (CAST(b AS DOUBLE) * CAST(b - 1 AS DOUBLE)))
-                  / 1000000.0, 6) END""").as("se6"))
-    point.crossJoin(broadcast(ci))
-      .withColumn("lo6",
-        expr("""ROUND(GREATEST(0.0, CAST(ap_micro AS DOUBLE) / 1000000.0
-                - 1.959964 * se6), 6)"""))
-      .withColumn("hi6",
-        expr("""ROUND(LEAST(1.0, CAST(ap_micro AS DOUBLE) / 1000000.0
-                + 1.959964 * se6), 6)"""))
-      .select(col("n"), col("n_pos"), col("n_neg"), col("ap_micro"),
-        col("prevalence_micro"), col("b"), col("se6"), col("lo6"), col("hi6"))
-  }
+      labelCol: String, resamples: Int = 64, scoreBuckets: Int = 0): DataFrame =
+    binaryApCiBy(df, Nil, idCol, scoreCol, labelCol, resamples, scoreBuckets)
 
-  /** Shared expansion of [[binaryApCi]]/[[binaryApCiBy]]: base rows
-    * (keys…, __id, score, __y) → one AP row per (keys…, __bs) with
-    * __bs = −1 carrying the unweighted POINT estimate and __bs in
-    * [0, resamples) the md5-coin Poisson resamples — one groupBy and one
-    * keyed-machinery pass for all of them. */
+  /** Shared expansion of [[binaryApCiBy]]: base rows (keys…, __id, score,
+    * __y) → one AP row per (keys…, __bs) with __bs = −1 carrying the
+    * unweighted POINT estimate and __bs in [0, resamples) the md5-coin
+    * Poisson resamples — one groupBy and one keyed-machinery pass for all
+    * of them. */
   private def apCiResamples(base: DataFrame, keys: Seq[String],
       resamples: Int): DataFrame = {
     val ks = keys.map(col)
@@ -1129,7 +1015,11 @@ object LmOps {
       .groupBy(ks ++ Seq(col("__bs"), col("score")): _*)
       .agg(sum(col("__w") * col("__y")).as("p"),
         sum(col("__w") * (lit(1L) - col("__y"))).as("ng"))
-    apByFromCounts(counts, keys :+ "__bs")
+    // the count table is read by the extrema/total aggregate AND the
+    // bucket-assignment join; persisting it runs the ×(resamples+1)
+    // expansion and its groupBy exactly once — its size is the
+    // distinct-score table, bounded by contract
+    apByCounts(graft.core.CacheLife.scoped(counts.persist()), keys :+ "__bs")
   }
 
   /** [[binaryApCi]] per key group — "AP by slice ± CI", the honest form
@@ -1140,7 +1030,8 @@ object LmOps {
     * table per key, zero SinglePartition anywhere. Same determinism and
     * complete-case contract as the global form. Output (one row per
     * group): keys…, n, n_pos, n_neg, ap_micro, prevalence_micro, b, se6,
-    * lo6, hi6.
+    * lo6, hi6. `keys = Nil` is [[binaryApCi]]: one row, none on empty
+    * input.
     *
     * `scoreBuckets` is the keyed twin of [[binaryApCi]]'s knob: each key
     * buckets its OWN min/max (a global grid would alias slices with
@@ -1151,35 +1042,34 @@ object LmOps {
   def binaryApCiBy(df: DataFrame, keys: Seq[String], idCol: String,
       scoreCol: String, labelCol: String, resamples: Int = 64,
       scoreBuckets: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "binaryApCiBy needs at least one key (use binaryApCi)")
     require(resamples >= 2 && resamples <= 256,
       s"resamples must be in [2, 256], got $resamples")
     require(scoreBuckets == 0 || (scoreBuckets >= 2 && scoreBuckets <= 65536),
       s"scoreBuckets must be 0 (off) or in [2, 65536], got $scoreBuckets")
-    val reserved = Set("score", "p", "ng", "b", "bn", "bp", "off_n", "off_p",
-      "pos_below", "all_below", "n", "n_pos", "n_neg", "ap_micro",
-      "prevalence_micro", "__y", "__tp", "__tot", "__term", "__ts",
-      "__mn", "__mx", "__id", "__bs", "__w", "__sa", "__sa2",
-      "se6", "lo6", "hi6")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, ApReserved ++ Set("__id", "__bs", "__w", "__sa",
+      "__sa2", "se6", "lo6", "hi6"))
     val ks = keys.map(col)
     val base0 = df.select(ks :+ col(idCol).cast("string").as("__id") :+
-        col(scoreCol).cast("long").as("score") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("score").isNotNull && col("__id").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
+        col(scoreCol).cast("long").as("score") :+ isPos(labelCol).as("__y"): _*)
+      .where(col("score").isNotNull && col("__id").isNotNull && nn)
     val base = if (scoreBuckets == 0) base0 else {
-      // per-key min/max, quantize before the expansion (see binaryApCi)
+      // quantize BEFORE the ×(resamples+1) expansion — the whole point of
+      // the knob is that the min/max pass costs one scan while the
+      // expansion's distinct-score table shrinks from rows to buckets
       val st = base0.groupBy(ks: _*)
         .agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"))
-      base0.join(st, keys)
+      base0.join(Keyed.side(st, keys), keys)
         .withColumn("score",
           expr(s"(score - __mn) DIV ((__mx - __mn) DIV $scoreBuckets + 1)"))
         .drop("__mn", "__mx")
     }
-    // point rides the same pass as resample −1 (see binaryApCi); persisted
-    // for the same two-reader reason — ≤ |keys|·(resamples+1) rows
+    // the POINT estimate rides the same pass as resample −1 with weight 1
+    // (its per-threshold terms equal binaryAp's exactly), so the whole
+    // operator is ONE expansion + ONE keyed machinery run instead of two
+    // pipelines — measured ~2× on the fixed per-stage overhead. The
+    // ≤ |keys|·(resamples+1)-row result is persisted because BOTH the point
+    // filter and the variance aggregate read it — otherwise each branch
+    // re-runs the full expansion + keyed machinery
     val aps = graft.core.CacheLife.scoped(
       apCiResamples(base, keys, resamples).persist())
     val point = aps.filter(col("__bs") === -1).drop("__bs")
@@ -1193,7 +1083,7 @@ object LmOps {
                 ROUND(SQRT(CAST(b * __sa2 - __sa * __sa AS DOUBLE)
                   / (CAST(b AS DOUBLE) * CAST(b - 1 AS DOUBLE)))
                   / 1000000.0, 6) END""").as("se6")): _*)
-    point.join(ci, keys)
+    point.join(Keyed.side(ci, keys), keys)
       .withColumn("lo6",
         expr("""ROUND(GREATEST(0.0, CAST(ap_micro AS DOUBLE) / 1000000.0
                 - 1.959964 * se6), 6)"""))
@@ -1224,75 +1114,31 @@ object LmOps {
     * Output (one row): n, n_pos, n_neg, auc_micro, se6, lo6, hi6 (CI
     * clamped to [0, 1]).
     */
-  def binaryAucSe(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
-    val pl = delongPlacements(df
-      .select(col(scoreCol).cast("long").as("score"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y")))
-    pl.agg(
-        sum(col("p")).as("n_pos"), sum(col("ng")).as("n_neg"),
-        coalesce(sum(col("p").cast(DecimalType(38, 0)) * col("p2")),
-          lit(0).cast(DecimalType(38, 0))).as("a10"),
-        coalesce(sum(col("p").cast(DecimalType(38, 0)) * col("p2") * col("p2")),
-          lit(0).cast(DecimalType(38, 0))).as("b10"),
-        coalesce(sum(col("ng").cast(DecimalType(38, 0)) * col("r2")),
-          lit(0).cast(DecimalType(38, 0))).as("a01"),
-        coalesce(sum(col("ng").cast(DecimalType(38, 0)) * col("r2") * col("r2")),
-          lit(0).cast(DecimalType(38, 0))).as("b01"))
-      .select(
-        (col("n_pos") + col("n_neg")).as("n"), col("n_pos"), col("n_neg"),
-        expr("""CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0
-                ELSE CAST((CAST(1000000 AS DECIMAL(38,0)) * a10)
-                  DIV (2 * CAST(n_pos AS DECIMAL(38,0)) * n_neg) AS BIGINT)
-                END""").as("auc_micro"),
-        col("a10"), col("b10"), col("a01"), col("b01"))
-      .withColumn("se6",
-        expr("""CASE WHEN n_pos < 2 OR n_neg < 2 THEN 0.0 ELSE
-                ROUND(SQRT(
-                  CAST(n_pos * b10 - a10 * a10 AS DOUBLE)
-                    / (4.0 * CAST(n_neg AS DOUBLE) * CAST(n_neg AS DOUBLE)
-                       * CAST(n_pos AS DOUBLE) * CAST(n_pos - 1 AS DOUBLE)
-                       * CAST(n_pos AS DOUBLE)) +
-                  CAST(n_neg * b01 - a01 * a01 AS DOUBLE)
-                    / (4.0 * CAST(n_pos AS DOUBLE) * CAST(n_pos AS DOUBLE)
-                       * CAST(n_neg AS DOUBLE) * CAST(n_neg - 1 AS DOUBLE)
-                       * CAST(n_neg AS DOUBLE))), 6) END"""))
-      .withColumn("lo6",
-        expr("""ROUND(GREATEST(0.0, CAST(auc_micro AS DOUBLE) / 1000000.0
-                - 1.959964 * se6), 6)"""))
-      .withColumn("hi6",
-        expr("""ROUND(LEAST(1.0, CAST(auc_micro AS DOUBLE) / 1000000.0
-                + 1.959964 * se6), 6)"""))
-      .select(col("n"), col("n_pos"), col("n_neg"), col("auc_micro"),
-        col("se6"), col("lo6"), col("hi6"))
-  }
+  def binaryAucSe(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
+    binaryAucSeBy(df, Nil, scoreCol, labelCol)
 
   /** [[binaryAucSe]] per key group — the q202 slice dashboard upgraded to
     * intervals: "AUC by source ± CI" is the honest readout (a slice with
     * 300 rows and one with 3M get very different error bars; the point
     * dashboard hides that). The keyed placements come straight from
-    * [[delongPlacementsBy]] — NO row-level join (unlike the paired
+    * [[delongPlacements]] — NO row-level join (unlike the paired
     * compare: one scorer's variance needs only distinct-score sums), so
     * the whole statistic is keyed windows + one combinable grouped
-    * aggregate — zero SinglePartition. Same SE/CI expression text as the
-    * global form. Output (one row per group): keys…, n, n_pos, n_neg,
-    * auc_micro, se6, lo6, hi6.
+    * aggregate — zero SinglePartition. Output (one row per group): keys…,
+    * n, n_pos, n_neg, auc_micro, se6, lo6, hi6. `keys = Nil` is
+    * [[binaryAucSe]]: one row, NULL counts on empty input.
     */
   def binaryAucSeBy(df: DataFrame, keys: Seq[String], scoreCol: String,
       labelCol: String): DataFrame = {
-    require(keys.nonEmpty,
-      "binaryAucSeBy needs at least one key (use binaryAucSe)")
-    val reserved = Set("score", "p", "ng", "b", "bn", "bp", "off_n", "off_p",
-      "neg_below", "pos_below", "p2", "r2", "__tp", "__y", "n", "n_pos",
-      "n_neg", "auc_micro", "se6", "lo6", "hi6", "a10", "b10", "a01", "b01",
-      "__mn", "__mx")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("score", "p", "ng", "b", "bn", "bp",
+      "off_n", "off_p", "neg_below", "pos_below", "p2", "r2", "__tp", "__y",
+      "n", "n_pos", "n_neg", "auc_micro", "se6", "lo6", "hi6", "a10", "b10",
+      "a01", "b01", "__mn", "__mx"))
     val ks = keys.map(col)
-    val pl = delongPlacementsBy(df
+    val pl = delongPlacements(df
       .select(ks :+ col(scoreCol).cast("long").as("score") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("score").isNotNull && ks.map(_.isNotNull).reduce(_ && _)),
-      keys)
+        isPos(labelCol).as("__y"): _*)
+      .where(nn), keys)
     pl.groupBy(ks: _*)
       .agg(sum(col("p")).as("n_pos"), sum(col("ng")).as("n_neg"),
         coalesce(sum(col("p").cast(DecimalType(38, 0)) * col("p2")),
@@ -1331,38 +1177,43 @@ object LmOps {
         col("auc_micro"), col("se6"), col("lo6"), col("hi6")): _*)
   }
 
-  /** Per-distinct-score DeLong placements for one scorer: every positive
-    * at score s beats fraction p2/(2·nNeg) of the negatives (doubled to
-    * stay integral: p2 = 2·negBelow + ngₛ), every negative is beaten by
-    * r2/(2·nPos) of the positives (r2 = 2·posAbove + pₛ). The same
-    * two-phase cumulative machinery as [[binaryAucFromCounts]]; output
-    * one row per distinct score: score, p, ng, p2, r2.
+  /** Per-distinct-score DeLong placements for one scorer over rows
+    * (keys…, score, __y): every positive at score s beats fraction
+    * p2/(2·nNeg) of the negatives (doubled to stay integral:
+    * p2 = 2·negBelow + ngₛ), every negative is beaten by r2/(2·nPos) of
+    * the positives (r2 = 2·posAbove + pₛ). The two-phase cumulative
+    * machinery of [[binaryAucBy]], windows partitioned by (keys) or
+    * (keys, b); output one row per (keys, distinct score): keys…, score,
+    * p, ng, p2, r2.
     */
-  private def delongPlacements(scored: DataFrame): DataFrame = {
+  private def delongPlacements(scored: DataFrame,
+      keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val g = scored.where(col("score").isNotNull).groupBy(col("score"))
+    val ks = keys.map(col)
+    val g = scored.where(col("score").isNotNull).groupBy(ks :+ col("score"): _*)
       .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
-    val stats = g.agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"),
-      sum(col("p")).as("__tp"))
-    val bucketed = g.crossJoin(broadcast(stats))
+    val stats = g.groupBy(ks: _*)
+      .agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"),
+        sum(col("p")).as("__tp"))
+    val bucketed = g.join(Keyed.side(stats, keys), keys)
       .withColumn("b", expr("(score - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-    val wOff = Window.orderBy(col("b"))
+    val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("b"))
+    val offsets = bucketed.groupBy(ks :+ col("b"): _*)
       .agg(sum(col("ng")).as("bn"), sum(col("p")).as("bp"))
       .withColumn("off_n", coalesce(sum(col("bn")).over(wOff), lit(0L)))
       .withColumn("off_p", coalesce(sum(col("bp")).over(wOff), lit(0L)))
-      .select(col("b"), col("off_n"), col("off_p"))
-    val wLoc = Window.partitionBy(col("b")).orderBy(col("score"))
+      .select(ks ++ Seq(col("b"), col("off_n"), col("off_p")): _*)
+    val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("score"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(broadcast(offsets), "b")
+    bucketed.join(Keyed.side(offsets, keys), keys :+ "b")
       .withColumn("neg_below",
         col("off_n") + coalesce(sum(col("ng")).over(wLoc), lit(0L)))
       .withColumn("pos_below",
         col("off_p") + coalesce(sum(col("p")).over(wLoc), lit(0L)))
-      .select(col("score"), col("p"), col("ng"),
+      .select(ks ++ Seq(col("score"), col("p"), col("ng"),
         (col("neg_below") * 2 + col("ng")).as("p2"),
-        ((col("__tp") - col("pos_below") - col("p")) * 2 + col("p")).as("r2"))
+        ((col("__tp") - col("pos_below") - col("p")) * 2 + col("p")).as("r2")): _*)
   }
 
   /** Paired DeLong comparison of TWO scorers on the SAME eval rows
@@ -1387,27 +1238,11 @@ object LmOps {
     * se6, z6.
     */
   def binaryAucCompare(df: DataFrame, scoreACol: String, scoreBCol: String,
-      labelCol: String): DataFrame = {
-    val base = df.select(
-        col(scoreACol).cast("long").as("sa"),
-        col(scoreBCol).cast("long").as("sb"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .where(col("sa").isNotNull && col("sb").isNotNull)
-    val pa = delongPlacements(base.select(col("sa").as("score"), col("__y")))
-      .select(col("score").as("sa"), col("p2").as("p2a"), col("r2").as("r2a"))
-    val pb = delongPlacements(base.select(col("sb").as("score"), col("__y")))
-      .select(col("score").as("sb"), col("p2").as("p2b"), col("r2").as("r2b"))
-    val placed = base.join(pa, Seq("sa")).join(pb, Seq("sb"))
-      .select(col("__y"),
-        when(col("__y") === 1L, col("p2a")).otherwise(col("r2a")).as("ua"),
-        when(col("__y") === 1L, col("p2b")).otherwise(col("r2b")).as("ub"))
-    val aggCols = compareAggCols
-    compareProjection(placed.agg(aggCols.head, aggCols.tail: _*), Seq.empty)
-  }
+      labelCol: String): DataFrame =
+    binaryAucCompareBy(df, Nil, scoreACol, scoreBCol, labelCol)
 
-  /** The twelve paired-DeLong aggregate columns (class counts + ten
-    * DECIMAL(38,0) covariance sums) shared by [[binaryAucCompare]] and
-    * [[binaryAucCompareBy]]. */
+  /** The twelve paired-DeLong aggregate columns of [[binaryAucCompareBy]]:
+    * class counts + ten DECIMAL(38,0) covariance sums. */
   private def compareAggCols: Seq[Column] = {
     def d(c: Column): Column = c.cast(DecimalType(38, 0))
     def sums(y: Int, sfx: String): Seq[Column] = Seq(
@@ -1422,7 +1257,7 @@ object LmOps {
 
   /** Paired-DeLong final projection from the [[compareAggCols]] sums to
     * (keys…, n, n_pos, n_neg, auc_a_micro, auc_b_micro, diff_micro, se6,
-    * z6) — one text, both the global and the keyed form. */
+    * z6). */
   private def compareProjection(agg: DataFrame, ks: Seq[Column]): DataFrame =
     agg
       .select(ks ++ Seq(
@@ -1475,28 +1310,25 @@ object LmOps {
     * map sides, row-sized probes, one combinable grouped aggregate; slice
     * count only ADDS parallelism. Output (one row per group): keys…, n,
     * n_pos, n_neg, auc_a_micro, auc_b_micro, diff_micro, se6, z6.
+    * `keys = Nil` is [[binaryAucCompare]]: one row, NULL counts on empty
+    * input.
     */
   def binaryAucCompareBy(df: DataFrame, keys: Seq[String], scoreACol: String,
       scoreBCol: String, labelCol: String): DataFrame = {
-    require(keys.nonEmpty,
-      "binaryAucCompareBy needs at least one key (use binaryAucCompare)")
-    val reserved = Set("score", "p", "ng", "b", "bn", "bp", "off_n", "off_p",
-      "neg_below", "pos_below", "sa", "sb", "ua", "ub", "p2", "r2", "__tp",
-      "__y", "n", "n_pos", "n_neg", "__mn", "__mx")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("score", "p", "ng", "b", "bn", "bp",
+      "off_n", "off_p", "neg_below", "pos_below", "sa", "sb", "ua", "ub",
+      "p2", "r2", "__tp", "__y", "n", "n_pos", "n_neg", "__mn", "__mx"))
     val ks = keys.map(col)
     val base = df.select(ks ++ Seq(
         col(scoreACol).cast("long").as("sa"),
         col(scoreBCol).cast("long").as("sb"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y")): _*)
-      .where(col("sa").isNotNull && col("sb").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
-    val pa = delongPlacementsBy(
+        isPos(labelCol).as("__y")): _*)
+      .where(col("sa").isNotNull && col("sb").isNotNull && nn)
+    val pa = delongPlacements(
         base.select(ks :+ col("sa").as("score") :+ col("__y"): _*), keys)
       .select(ks ++ Seq(col("score").as("sa"),
         col("p2").as("p2a"), col("r2").as("r2a")): _*)
-    val pb = delongPlacementsBy(
+    val pb = delongPlacements(
         base.select(ks :+ col("sb").as("score") :+ col("__y"): _*), keys)
       .select(ks ++ Seq(col("score").as("sb"),
         col("p2").as("p2b"), col("r2").as("r2b")): _*)
@@ -1509,41 +1341,6 @@ object LmOps {
       placed.groupBy(ks: _*).agg(aggCols.head, aggCols.tail: _*), ks)
   }
 
-  /** [[delongPlacements]] per key group: the same two-phase cumulative
-    * machinery with every window partitioned by (keys) or (keys, b) and
-    * per-key bucket stats — no SinglePartition (the [[binaryAucBy]]
-    * shape). Output one row per (keys, distinct score): keys…, score, p,
-    * ng, p2, r2. */
-  private def delongPlacementsBy(scored: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ks = keys.map(col)
-    val g = scored.where(col("score").isNotNull).groupBy(ks :+ col("score"): _*)
-      .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
-    val stats = g.groupBy(ks: _*)
-      .agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"),
-        sum(col("p")).as("__tp"))
-    val bucketed = g.join(stats, keys)
-      .withColumn("b", expr("(score - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-    val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(ks :+ col("b"): _*)
-      .agg(sum(col("ng")).as("bn"), sum(col("p")).as("bp"))
-      .withColumn("off_n", coalesce(sum(col("bn")).over(wOff), lit(0L)))
-      .withColumn("off_p", coalesce(sum(col("bp")).over(wOff), lit(0L)))
-      .select(ks ++ Seq(col("b"), col("off_n"), col("off_p")): _*)
-    val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(offsets, keys :+ "b")
-      .withColumn("neg_below",
-        col("off_n") + coalesce(sum(col("ng")).over(wLoc), lit(0L)))
-      .withColumn("pos_below",
-        col("off_p") + coalesce(sum(col("p")).over(wLoc), lit(0L)))
-      .select(ks ++ Seq(col("score"), col("p"), col("ng"),
-        (col("neg_below") * 2 + col("ng")).as("p2"),
-        ((col("__tp") - col("pos_below") - col("p")) * 2 + col("p")).as("r2")): _*)
-  }
-
   /** [[binaryAuc]] per key group — the slice dashboard (AUC by source,
     * language, time bucket…). Same tie-corrected rank-free statistic and
     * quantization contract, but STRICTLY more parallel than the global
@@ -1552,32 +1349,27 @@ object LmOps {
     * by keys — NO SinglePartition exchange anywhere, so slices never
     * funnel through one task no matter how many there are. The
     * bucket-offset join is keyed (≤ |groups|·1025 rows — AQE broadcasts
-    * it when small). Output (one row per group): keys…, n, n_pos, n_neg,
-    * auc_micro, gini_micro.
+    * it when small). Complete-case on keys and scores. Output (one row
+    * per group): keys…, n, n_pos, n_neg, auc_micro, gini_micro.
+    * `keys = Nil` is [[binaryAuc]]: one row, all NULL on empty input.
     */
   def binaryAucBy(df: DataFrame, keys: Seq[String], scoreCol: String,
       labelCol: String): DataFrame = {
-    require(keys.nonEmpty, "binaryAucBy needs at least one key (use binaryAuc)")
-    // complete-case: null scores carry no rank (see binaryAucFromCounts);
-    // null KEYS would be dropped anyway by the null-unsafe stats/offsets
-    // joins — filter both explicitly so the semantics are a contract, not
-    // a join artifact
-    val reserved = Set("score", "p", "ng", "b", "bn", "off_n", "neg_below",
-      "num2", "n", "n_pos", "n_neg", "auc_micro", "gini_micro", "__y",
-      "__mn", "__mx")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("score", "p", "ng", "b", "bn", "off_n",
+      "neg_below", "num2", "n", "n_pos", "n_neg", "auc_micro", "gini_micro",
+      "__y", "__mn", "__mx"))
+    aucByCounts(scoreCounts(df, keys, scoreCol, labelCol, nn), keys)
+  }
+
+  /** The AUC machinery over a (keys…, score, p, ng) count table with one
+    * row per (keys, score): per-key equal-width buckets
+    * b = (score − mn) DIV w, w sized so ≤1024 buckets cover [mn, mx]. */
+  private def aucByCounts(g: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ks = keys.map(col)
-    val g = df
-      .select(ks :+ col(scoreCol).cast("long").as("score") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("score").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .groupBy(ks :+ col("score"): _*)
-      .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
     val stats = g.groupBy(ks: _*)
       .agg(min(col("score")).as("__mn"), max(col("score")).as("__mx"))
-    val bucketed = g.join(stats, keys)
+    val bucketed = g.join(Keyed.side(stats, keys), keys)
       .withColumn("b",
         expr("(score - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
       .drop("__mn", "__mx")
@@ -1589,7 +1381,7 @@ object LmOps {
       .select(ks :+ col("b") :+ col("off_n"): _*)
     val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("score"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = bucketed.join(offsets, keys :+ "b")
+    val cum = bucketed.join(Keyed.side(offsets, keys), keys :+ "b")
       .withColumn("neg_below",
         col("off_n") + coalesce(sum(col("ng")).over(wLoc), lit(0L)))
     cum.groupBy(ks: _*)
@@ -1627,8 +1419,7 @@ object LmOps {
     */
   def calibrationReport(df: DataFrame, probMicroCol: String,
       labelCol: String, bins: Int = 10): DataFrame =
-    calibrationReportFromCounts(
-      calibrationBinCounts(df, probMicroCol, labelCol, bins))
+    calibrationReportBy(df, Nil, probMicroCol, labelCol, bins)
 
   /** Per-bin calibration count deltas (bin, n, n_pos, spm, sq) — the
     * mergeable store unit behind [[calibrationReport]] and the streaming
@@ -1638,82 +1429,46 @@ object LmOps {
     * State is ≤ `bins` rows no matter the corpus. `bins` must be held
     * constant across merged delta sets — it defines the bin ids. */
   def calibrationBinCounts(df: DataFrame, probMicroCol: String,
-      labelCol: String, bins: Int): DataFrame = {
+      labelCol: String, bins: Int): DataFrame =
+    binCounts(df, Nil, probMicroCol, labelCol, bins, lit(true))
+
+  /** (keys…, bin, n, n_pos, spm, sq) per non-empty (key, bin) — the
+    * [[calibrationBinCounts]] store, keyed. Complete-case: a null
+    * probability would land in a null bin while still counting toward n. */
+  private def binCounts(df: DataFrame, keys: Seq[String], probMicroCol: String,
+      labelCol: String, bins: Int, nn: Column): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
-    // complete-case: a null probability would land in a null bin while
-    // still counting toward n — exclude up front (binaryAucFromCounts
-    // contract)
-    df.select(col(probMicroCol).cast("long").as("pm"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("y"))
-      .where(col("pm").isNotNull)
+    val ks = keys.map(col)
+    df.select(ks :+ col(probMicroCol).cast("long").as("pm") :+
+        isPos(labelCol).as("__y"): _*)
+      .where(col("pm").isNotNull && nn)
       // clamp BOTH edges: the documented domain is 0..10⁶, but an
       // out-of-range input must land in the edge bin, not a negative or
       // overflow bin id (ADVICE r15 — only the top edge was clamped)
       .withColumn("bin", greatest(
         least(expr(s"pm * $bins DIV 1000000"), lit(bins - 1L)), lit(0L)))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
+      .groupBy(ks :+ col("bin"): _*)
+      .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
         sum(col("pm")).as("spm"),
-        sum(((col("pm") - col("y") * 1000000L).cast(DecimalType(38, 0)) *
-          (col("pm") - col("y") * 1000000L))).as("sq"))
+        sum(((col("pm") - col("__y") * 1000000L).cast(DecimalType(38, 0)) *
+          (col("pm") - col("__y") * 1000000L))).as("sq"))
   }
 
   /** [[calibrationReport]] over PRE-AGGREGATED [[calibrationBinCounts]]
     * deltas — rows with the same bin combine, so a batch-delta store may
     * carry duplicates (the [[binaryAucFromCounts]] contract). */
-  def calibrationReportFromCounts(counts: DataFrame): DataFrame = {
-    val perBin = counts.groupBy(col("bin"))
+  def calibrationReportFromCounts(counts: DataFrame): DataFrame =
+    calibrationByCounts(counts, Nil)
+
+  /** The report over a (keys…, bin, n, n_pos, spm, sq) count table; rows
+    * with the same (keys, bin) combine. */
+  private def calibrationByCounts(counts: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val ks = keys.map(col)
+    val perBin = counts.groupBy(ks :+ col("bin"): _*)
       .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
         sum(col("spm")).as("__spm"),
         sum(col("sq").cast(DecimalType(38, 0))).as("__sq"))
-      .withColumn("conf_micro", expr("__spm DIV n"))
-      .withColumn("acc_micro", expr("n_pos * 1000000 DIV n"))
-    val glob = perBin.agg(
-      sum(col("n")).as("__nt"),
-      coalesce(sum(col("__sq")), lit(0).cast(DecimalType(38, 0))).as("__sqt"),
-      coalesce(sum(col("n") * abs(col("acc_micro") - col("conf_micro"))),
-        lit(0L)).as("__ed"))
-      .select(
-        expr("CAST(__sqt DIV (CAST(__nt AS DECIMAL(38,0)) * 1000000) AS BIGINT)")
-          .as("brier_micro"),
-        expr("__ed DIV __nt").as("ece_micro"))
-    perBin.crossJoin(broadcast(glob)) // bins × 1
-      .select(col("bin"), col("n"), col("n_pos"), col("conf_micro"),
-        col("acc_micro"), col("brier_micro"), col("ece_micro"))
-  }
-
-  /** [[calibrationReport]] per key group — the reliability slice
-    * dashboard completing the keyed eval family (q202 AUC / q206 KS /
-    * q208 isotonic / q209 paired-z slices): per-key bins, per-key
-    * Brier/ECE, every aggregate and join keyed — no window, no
-    * SinglePartition; the per-key scalar join side is ≤ |keys| rows (AQE
-    * broadcasts it). Complete-case on keys and probabilities. Output
-    * (one row per non-empty (key, bin)): keys…, bin, n, n_pos,
-    * conf_micro, acc_micro, brier_micro, ece_micro — the per-key scalars
-    * ride every row of their key (the q155 hhi_micro convention).
-    */
-  def calibrationReportBy(df: DataFrame, keys: Seq[String],
-      probMicroCol: String, labelCol: String, bins: Int = 10): DataFrame = {
-    require(keys.nonEmpty,
-      "calibrationReportBy needs at least one key (use calibrationReport)")
-    require(bins >= 2, s"bins must be >= 2, got $bins")
-    val reserved = Set("pm", "bin", "n", "n_pos", "conf_micro", "acc_micro",
-      "brier_micro", "ece_micro", "__spm", "__sq", "__nt", "__sqt", "__ed",
-      "__y")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    val ks = keys.map(col)
-    val perBin = df
-      .select(ks :+ col(probMicroCol).cast("long").as("pm") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("pm").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .withColumn("bin", greatest(
-        least(expr(s"pm * $bins DIV 1000000"), lit(bins - 1L)), lit(0L)))
-      .groupBy(ks :+ col("bin"): _*)
-      .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
-        sum(col("pm")).as("__spm"),
-        sum(((col("pm") - col("__y") * 1000000L).cast(DecimalType(38, 0)) *
-          (col("pm") - col("__y") * 1000000L))).as("__sq"))
       .withColumn("conf_micro", expr("__spm DIV n"))
       .withColumn("acc_micro", expr("n_pos * 1000000 DIV n"))
     val glob = perBin.groupBy(ks: _*).agg(
@@ -1725,9 +1480,29 @@ object LmOps {
         expr("CAST(__sqt DIV (CAST(__nt AS DECIMAL(38,0)) * 1000000) AS BIGINT)")
           .as("brier_micro"),
         expr("__ed DIV __nt").as("ece_micro")): _*)
-    perBin.join(glob, keys)
+    perBin.join(Keyed.side(glob, keys), keys)
       .select(ks ++ Seq(col("bin"), col("n"), col("n_pos"), col("conf_micro"),
         col("acc_micro"), col("brier_micro"), col("ece_micro")): _*)
+  }
+
+  /** [[calibrationReport]] per key group — the reliability slice
+    * dashboard completing the keyed eval family (q202 AUC / q206 KS /
+    * q208 isotonic / q209 paired-z slices): per-key bins, per-key
+    * Brier/ECE, every aggregate and join keyed — no window, no
+    * SinglePartition; the per-key scalar join side is ≤ |keys| rows (AQE
+    * broadcasts it). Complete-case on keys and probabilities. Output
+    * (one row per non-empty (key, bin)): keys…, bin, n, n_pos,
+    * conf_micro, acc_micro, brier_micro, ece_micro — the per-key scalars
+    * ride every row of their key (the q155 hhi_micro convention).
+    * `keys = Nil` is [[calibrationReport]]: no rows on empty input.
+    */
+  def calibrationReportBy(df: DataFrame, keys: Seq[String],
+      probMicroCol: String, labelCol: String, bins: Int = 10): DataFrame = {
+    val nn = Keyed.guard(keys, Set("pm", "bin", "n", "n_pos", "spm", "sq",
+      "conf_micro", "acc_micro", "brier_micro", "ece_micro", "__spm", "__sq",
+      "__nt", "__sqt", "__ed", "__y"))
+    calibrationByCounts(
+      binCounts(df, keys, probMicroCol, labelCol, bins, nn), keys)
   }
 
   // ----------------------------------------------------------- isotonic
@@ -1737,15 +1512,23 @@ object LmOps {
     * confidence — ONE map-side-combinable groupBy over ≤ `bins` rows
     * (the [[calibrationReport]] shape). Empty bins are simply absent. */
   def isotonicBins(df: DataFrame, probMicroCol: String, labelCol: String,
-      bins: Int): DataFrame = {
+      bins: Int): DataFrame =
+    isotonicBinsBy(df, Nil, probMicroCol, labelCol, bins, lit(true))
+
+  /** [[isotonicBins]] per (keys…, bin), complete-case on keys and
+    * probabilities: keys…, bin, n, n_pos, conf_micro. */
+  private def isotonicBinsBy(df: DataFrame, keys: Seq[String],
+      probMicroCol: String, labelCol: String, bins: Int,
+      nn: Column): DataFrame = {
     require(bins >= 2 && bins <= 65536, s"bins must be in [2, 65536], got $bins")
-    df.select(col(probMicroCol).cast("long").as("pm"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .where(col("pm").isNotNull) // complete-case (calibrationReport contract)
+    val ks = keys.map(col)
+    df.select(ks :+ col(probMicroCol).cast("long").as("pm") :+
+        isPos(labelCol).as("__y"): _*)
+      .where(col("pm").isNotNull && nn)
       // both-edge clamp (the calibrationReport contract)
       .withColumn("bin", greatest(
         least(expr(s"pm * $bins DIV 1000000"), lit(bins - 1L)), lit(0L)))
-      .groupBy(col("bin"))
+      .groupBy(ks :+ col("bin"): _*)
       .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
         sum(col("pm")).as("__spm"))
       .withColumn("conf_micro", expr("__spm DIV n"))
@@ -1801,19 +1584,8 @@ object LmOps {
     * in bin.
     */
   def isotonicCalibrate(df: DataFrame, probMicroCol: String,
-      labelCol: String, bins: Int = 32): DataFrame = {
-    // ONE corpus scan: collect the bounded bin table, fit driver-side,
-    // and rebuild the output from the COLLECTED rows — joining the
-    // uncached agg plan would re-run the corpus aggregation a second
-    // time (ADVICE r15).
-    // BOUND: one row per calibration bin — ≤ bins rows
-    val rows = isotonicBins(df, probMicroCol, labelCol, bins)
-      .select(col("bin"), col("n"), col("n_pos"), col("conf_micro"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    isotonicFromCollected(df.sparkSession, rows,
-      pavFit(rows.map(t => (t._1, t._2, t._3))))
-  }
+      labelCol: String, bins: Int = 32): DataFrame =
+    isotonicCalibrateBy(df, Nil, probMicroCol, labelCol, bins)
 
   /** Rebuild a COLLECTED [[isotonicBins]] table (bin, n, n_pos,
     * conf_micro) as a local DataFrame with its [[pavFit]] step attached —
@@ -1853,30 +1625,19 @@ object LmOps {
     * scan — the [[isotonicCalibrate]] ADVICE-r15 contract). Complete-case
     * on keys and probabilities. Output (one row per non-empty (key,
     * bin)): keys…, bin, n, n_pos, conf_micro, iso_micro — iso_micro
-    * non-decreasing in bin WITHIN each key.
+    * non-decreasing in bin WITHIN each key. `keys = Nil` is
+    * [[isotonicCalibrate]]: no rows on empty input.
     */
   def isotonicCalibrateBy(df: DataFrame, keys: Seq[String],
       probMicroCol: String, labelCol: String, bins: Int = 32,
       maxCollect: Int = 1 << 20): DataFrame = {
-    require(keys.nonEmpty,
-      "isotonicCalibrateBy needs at least one key (use isotonicCalibrate)")
-    require(bins >= 2 && bins <= 65536, s"bins must be in [2, 65536], got $bins")
-    val reserved = Set("pm", "bin", "n", "n_pos", "conf_micro", "iso_micro",
-      "__spm", "__y")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    val spark = df.sparkSession
-    val ks = keys.map(col)
-    val agg = df.select(ks :+ col(probMicroCol).cast("long").as("pm") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("pm").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .withColumn("bin", greatest(
-        least(expr(s"pm * $bins DIV 1000000"), lit(bins - 1L)), lit(0L)))
-      .groupBy(ks :+ col("bin"): _*)
-      .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
-        sum(col("pm")).as("__spm"))
-      .withColumn("conf_micro", expr("__spm DIV n"))
-      .drop("__spm")
+    val nn = Keyed.guard(keys, Set("pm", "bin", "n", "n_pos", "conf_micro",
+      "iso_micro", "__spm", "__y"))
+    // ONE corpus scan: collect the bounded bin table, fit driver-side,
+    // and rebuild the output from the COLLECTED rows — joining the
+    // uncached agg plan would re-run the corpus aggregation a second
+    // time (ADVICE r15)
+    val agg = isotonicBinsBy(df, keys, probMicroCol, labelCol, bins, nn)
     val collected = agg.limit(maxCollect + 1).collect()
     require(collected.length <= maxCollect,
       s"isotonicCalibrateBy would collect more than $maxCollect (key × bin) " +
@@ -1892,7 +1653,7 @@ object LmOps {
       val k = (0 until kw).map(r.get).toSeq
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ fitted(k)(r.getLong(kw)))
     }
-    spark.createDataFrame(java.util.Arrays.asList(outRows: _*),
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(outRows: _*),
       agg.schema.add("iso_micro",
         org.apache.spark.sql.types.LongType, nullable = false))
   }

@@ -283,63 +283,6 @@ object Profile {
         (lit(2L * kDen) * col("dev2") > lit(kNum.toLong) * col("mad4")).as("is_outlier"))
   }
 
-  /** [[ksTwoSample]] per key group — the drift slice dashboard (which
-    * language / time bucket / shard pair actually moved?), the
-    * [[LmOps.binaryAucBy]] pattern applied to the CDF gap: per-key
-    * bucket widths from a keyed min/max join, every window partitioned
-    * by (keys) or (keys, b), and the per-key argmax as a rank ≤ 1
-    * window (WindowGroupLimit — map-side group limit, no global sort) —
-    * NO SinglePartition exchange anywhere. Null values and null keys
-    * are complete-case like the global form. Output (one row per key
-    * with both sides observed… or one side empty → d_micro 0):
-    * keys…, at_value, n_a, n_b, cum_a, cum_b, d_micro.
-    */
-  def ksTwoSampleBy(df: DataFrame, keys: Seq[String], valueCol: String,
-      groupCol: String, groupA: String, groupB: String): DataFrame = {
-    require(keys.nonEmpty, "ksTwoSampleBy needs at least one key (use ksTwoSample)")
-    val reserved = Set("v", "ca", "cb", "b", "ba", "bb", "off_a", "off_b",
-      "cum_a", "cum_b", "n_a", "n_b", "d_micro", "at_value", "__ia", "__rn")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    import org.apache.spark.sql.expressions.Window
-    val ks = keys.map(col)
-    val g = df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(ks :+ col(valueCol).cast("long").as("v") :+
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"): _*)
-      .where(col("v").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .groupBy(ks :+ col("v"): _*)
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
-    val stats = g.groupBy(ks: _*)
-      .agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"),
-        sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    val bucketed = g.join(stats, keys)
-      .withColumn("b", expr("(v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-      .drop("__mn", "__mx")
-    val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(ks :+ col("b"): _*)
-      .agg(sum(col("ca")).as("ba"), sum(col("cb")).as("bb"))
-      .withColumn("off_a", coalesce(sum(col("ba")).over(wOff), lit(0L)))
-      .withColumn("off_b", coalesce(sum(col("bb")).over(wOff), lit(0L)))
-      .select(ks :+ col("b") :+ col("off_a") :+ col("off_b"): _*)
-    val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPick = Window.partitionBy(ks: _*)
-      .orderBy(col("d_micro").desc, col("v"))
-    bucketed.join(offsets, keys :+ "b")
-      .withColumn("cum_a", col("off_a") + sum(col("ca")).over(wLoc))
-      .withColumn("cum_b", col("off_b") + sum(col("cb")).over(wLoc))
-      .withColumn("d_micro",
-        expr("""CASE WHEN n_a = 0 OR n_b = 0 THEN 0
-                ELSE abs(cum_a * 1000000 DIV n_a - cum_b * 1000000 DIV n_b)
-                END"""))
-      .withColumn("__rn", row_number().over(wPick))
-      .filter(col("__rn") === 1)
-      .select(ks ++ Seq(col("v").as("at_value"), col("n_a"), col("n_b"),
-        col("cum_a"), col("cum_b"), col("d_micro")): _*)
-  }
-
   /** Pearson χ² test of independence between two categorical columns,
     * with Cramér's V — the CATEGORICAL drift/association test next to
     * [[ksTwoSample]]'s ordered-axis one (is the language mix independent
@@ -365,9 +308,7 @@ object Profile {
     * chi2_micro, cramers_v.
     */
   def chiSquare(df: DataFrame, aCol: String, bCol: String): DataFrame =
-    chiSquareFromCounts(df
-      .select(col(aCol).cast("string").as("a"), col(bCol).cast("string").as("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("o")))
+    chiSquareBy(df, Nil, aCol, bCol)
 
   /** [[chiSquare]] over a PRE-AGGREGATED (a, b, o) contingency count
     * table — the incremental form a streaming drift monitor maintains
@@ -378,35 +319,9 @@ object Profile {
     * while the null-unsafe cell-grid join zeroed its observed count,
     * silently inflating χ².
     */
-  def chiSquareFromCounts(counts: DataFrame): DataFrame = {
-    val obs = counts.where(col("a").isNotNull && col("b").isNotNull)
-      .groupBy(col("a"), col("b")).agg(sum(col("o")).as("o"))
-    val ra = obs.groupBy(col("a")).agg(sum(col("o")).as("r"))
-    val cb = obs.groupBy(col("b")).agg(sum(col("o")).as("c"))
-    val tot = obs.agg(sum(col("o")).as("n"),
-      count_distinct(col("a")).as("n_a"), count_distinct(col("b")).as("n_b"))
-    val cells = ra.crossJoin(cb) // |A|×|B|, both sides bounded
-      .join(obs, Seq("a", "b"), "left")
-      .withColumn("o", coalesce(col("o"), lit(0L)))
-    cells.crossJoin(broadcast(tot))
-      .withColumn("__d", (col("o").cast(DecimalType(38, 0)) * col("n") -
-        col("r").cast(DecimalType(38, 0)) * col("c")))
-      .withColumn("__den",
-        expr("CAST(n AS DECIMAL(38,0)) * r * c"))
-      .withColumn("__cell",
-        expr("""(__d * __d DIV __den) * 1000000 +
-                ((__d * __d) % __den) * 1000000 DIV __den"""))
-      .groupBy(col("n"), col("n_a"), col("n_b"))
-      .agg(coalesce(sum(col("__cell").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0))).as("__chi"))
-      .select(col("n"), col("n_a"), col("n_b"),
-        ((col("n_a") - 1) * (col("n_b") - 1)).as("dof"),
-        expr("CAST(__chi AS BIGINT)").as("chi2_micro"))
-      .withColumn("cramers_v",
-        expr("""CASE WHEN n = 0 OR least(n_a - 1, n_b - 1) <= 0 THEN 0.0
-                ELSE ROUND(SQRT(CAST(chi2_micro AS DOUBLE) / 1000000.0
-                  / (CAST(n AS DOUBLE) * least(n_a - 1, n_b - 1))), 6) END"""))
-  }
+  def chiSquareFromCounts(counts: DataFrame): DataFrame =
+    chiByCounts(counts.where(col("a").isNotNull && col("b").isNotNull)
+      .groupBy(col("a"), col("b")).agg(sum(col("o")).as("o")), Nil)
 
   /** [[chiSquare]] per key group — the categorical association slice
     * dashboard (is the source×length-band dependence present in EVERY
@@ -417,21 +332,24 @@ object Profile {
     * distinct-value tables (the [[kendallTauBBy]] grid shape — no cross
     * join), every aggregate and join keyed — zero SinglePartition.
     * Complete-case on keys and both columns. Output (one row per key):
-    * keys…, n, n_a, n_b, dof, chi2_micro, cramers_v.
+    * keys…, n, n_a, n_b, dof, chi2_micro, cramers_v. `keys = Nil` is
+    * [[chiSquare]]: no rows on empty input.
     */
   def chiSquareBy(df: DataFrame, keys: Seq[String], aCol: String,
       bCol: String): DataFrame = {
-    require(keys.nonEmpty, "chiSquareBy needs at least one key (use chiSquare)")
-    val reserved = Set("a", "b", "o", "r", "c", "n", "n_a", "n_b", "dof",
-      "chi2_micro", "cramers_v", "__d", "__den", "__cell", "__chi")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("a", "b", "o", "r", "c", "n", "n_a", "n_b",
+      "dof", "chi2_micro", "cramers_v", "__d", "__den", "__cell", "__chi"))
     val ks = keys.map(col)
-    val obs = df.select(ks :+ col(aCol).cast("string").as("a") :+
+    chiByCounts(df.select(ks :+ col(aCol).cast("string").as("a") :+
         col(bCol).cast("string").as("b"): _*)
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
-      .groupBy(ks ++ Seq(col("a"), col("b")): _*).agg(count(lit(1)).as("o"))
+      .where(col("a").isNotNull && col("b").isNotNull && nn)
+      .groupBy(ks ++ Seq(col("a"), col("b")): _*).agg(count(lit(1)).as("o")),
+      keys)
+  }
+
+  /** χ² over a (keys…, a, b, o) table with one row per observed cell. */
+  private def chiByCounts(obs: DataFrame, keys: Seq[String]): DataFrame = {
+    val ks = keys.map(col)
     val ra = obs.groupBy(ks :+ col("a"): _*).agg(sum(col("o")).as("r"))
     val cb = obs.groupBy(ks :+ col("b"): _*).agg(sum(col("o")).as("c"))
     val tot = obs.groupBy(ks: _*).agg(sum(col("o")).as("n"),
@@ -439,7 +357,7 @@ object Profile {
     val cells = ra.join(cb, keys) // per-key |A|×|B|, both sides bounded
       .join(obs, keys ++ Seq("a", "b"), "left")
       .withColumn("o", coalesce(col("o"), lit(0L)))
-    cells.join(tot, keys)
+    cells.join(Keyed.side(tot, keys), keys)
       .withColumn("__d", (col("o").cast(DecimalType(38, 0)) * col("n") -
         col("r").cast(DecimalType(38, 0)) * col("c")))
       .withColumn("__den",
@@ -489,16 +407,14 @@ object Profile {
   def cmh2x2(df: DataFrame, strataKeys: Seq[String], aCol: String,
       bCol: String): DataFrame = {
     require(strataKeys.nonEmpty, "cmh2x2 needs at least one stratum key")
-    val reserved = Set("n_strata", "n", "n_skipped", "cmh6", "or_mh6",
-      "__a", "__b", "o11", "o10", "o01", "o00", "__n", "__d9", "__v9",
-      "__p9", "__q9")
-    require(strataKeys.forall(k => !reserved(k)),
-      s"stratum keys may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(strataKeys, Set("n_strata", "n", "n_skipped", "cmh6",
+      "or_mh6", "__a", "__b", "o11", "o10", "o01", "o00", "__n", "__d9",
+      "__v9", "__p9", "__q9"))
     val ks = strataKeys.map(col)
     val g = df.select(ks :+
         when(col(aCol).cast("long") === 1L, 1L).otherwise(0L).as("__a") :+
         when(col(bCol).cast("long") === 1L, 1L).otherwise(0L).as("__b"): _*)
-      .where(ks.map(_.isNotNull).reduce(_ && _))
+      .where(nn)
       .groupBy(ks: _*)
       .agg(sum(col("__a") * col("__b")).as("o11"),
         sum(col("__a") * (lit(1L) - col("__b"))).as("o10"),
@@ -604,32 +520,8 @@ object Profile {
     * table, then a scalar aggregate — no grid, no window, no join.
     * Output (one row): n, n_pos, n_groups, trend, ca6.
     */
-  def trendTest(df: DataFrame, bandCol: String, labelCol: String): DataFrame = {
-    val g = df.select(col(bandCol).cast("long").as("__w"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .where(col("__w").isNotNull)
-      .groupBy(col("__w"))
-      .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__p"))
-    g.agg(
-        coalesce(sum(col("__n")), lit(0L)).as("n"),
-        coalesce(sum(col("__p")), lit(0L)).as("n_pos"),
-        count(lit(1)).as("n_groups"),
-        coalesce(sum(col("__w").cast(DecimalType(38, 0)) * col("__p")),
-          lit(0).cast(DecimalType(38, 0))).as("__s1"),
-        coalesce(sum(col("__w").cast(DecimalType(38, 0)) * col("__n")),
-          lit(0).cast(DecimalType(38, 0))).as("__s2"),
-        coalesce(sum(col("__w").cast(DecimalType(38, 0)) * col("__w") *
-          col("__n")), lit(0).cast(DecimalType(38, 0))).as("__q"))
-      .withColumn("__a", expr("CAST(n AS DECIMAL(38,0)) * __s1 - CAST(n_pos AS DECIMAL(38,0)) * __s2"))
-      .withColumn("__b", expr("CAST(n AS DECIMAL(38,0)) * __q - __s2 * __s2"))
-      .select(col("n"), col("n_pos"), col("n_groups"),
-        expr("CAST(SIGN(__a) AS BIGINT)").as("trend"),
-        expr("""CASE WHEN n_pos = 0 OR n_pos = n OR __b <= 0 THEN 0.0
-                ELSE ROUND(CAST(n AS DOUBLE) * CAST(__a AS DOUBLE)
-                  * CAST(__a AS DOUBLE)
-                  / (CAST(n_pos AS DOUBLE) * CAST(n - n_pos AS DOUBLE)
-                     * CAST(__b AS DOUBLE)), 6) END""").as("ca6"))
-  }
+  def trendTest(df: DataFrame, bandCol: String, labelCol: String): DataFrame =
+    trendTestBy(df, Nil, bandCol, labelCol)
 
   /** [[trendTest]] per key group — the dose-response slice dashboard
     * completing the keyed eval-stat matrix (every other association dial
@@ -645,19 +537,17 @@ object Profile {
     * (keys × band) table, then a keyed aggregate — no grid, no window,
     * no join, zero SinglePartition anywhere. Complete-case on keys and
     * the band. Output (one row per group): keys…, n, n_pos, n_groups,
-    * trend, ca6.
+    * trend, ca6. `keys = Nil` is [[trendTest]]: one all-zero row on empty
+    * input.
     */
   def trendTestBy(df: DataFrame, keys: Seq[String], bandCol: String,
       labelCol: String): DataFrame = {
-    require(keys.nonEmpty, "trendTestBy needs at least one key (use trendTest)")
-    val reserved = Set("n", "n_pos", "n_groups", "trend", "ca6",
-      "__w", "__y", "__n", "__p", "__s1", "__s2", "__q", "__a", "__b")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("n", "n_pos", "n_groups", "trend", "ca6",
+      "__w", "__y", "__n", "__p", "__s1", "__s2", "__q", "__a", "__b"))
     val ks = keys.map(col)
     val g = df.select(ks :+ col(bandCol).cast("long").as("__w") :+
         when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("__w").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
+      .where(col("__w").isNotNull && nn)
       .groupBy(ks :+ col("__w"): _*)
       .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__p"))
     g.groupBy(ks: _*).agg(
@@ -708,15 +598,34 @@ object Profile {
     */
   def permTestRate(df: DataFrame, idCol: String, groupCol: String,
       labelCol: String, groupA: String, groupB: String,
+      resamples: Int = 128): DataFrame =
+    permTestRateBy(df, Nil, idCol, groupCol, labelCol, groupA, groupB, resamples)
+
+  /** [[permTestRate]] per key group — the assumption-free significance
+    * dial per slice, keeping the keyed-twin symmetry of the eval matrix
+    * (and exactly where the permutation test matters most: small or
+    * lopsided slices are where the z/χ² normal approximations break).
+    * Each key draws its own coin threshold ⌊2⁶⁰·n_A/N⌋ from ITS margins
+    * and the coins hash only (id, resample), so the keyed output equals
+    * running the global test on each slice alone (spec-pinned). All
+    * joins/aggregates keyed — zero SinglePartition; shuffle volume is
+    * the (keys × B) resample table. Output (one row per key): keys…,
+    * n_a, n_b, x_a, x_b, d_obs_micro, b, n_ge, p_micro. `keys = Nil` is
+    * [[permTestRate]]: one row (b = 0, p_micro = 10⁶) on empty input.
+    */
+  def permTestRateBy(df: DataFrame, keys: Seq[String], idCol: String,
+      groupCol: String, labelCol: String, groupA: String, groupB: String,
       resamples: Int = 128): DataFrame = {
-    require(resamples >= 8 && resamples <= 1024,
-      s"resamples must be in [8, 1024], got $resamples")
+    val nn = Keyed.guard(keys, Set("n_a", "n_b", "x_a", "x_b", "d_obs_micro",
+      "b", "n_ge", "p_micro", "__id", "__ia", "__y", "__thr", "__b", "__ca",
+      "__n1", "__x1", "__n2", "__x2", "__d", "__do"))
+    val ks = keys.map(col)
     val base = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(idCol).cast("string").as("__id"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .where(col("__id").isNotNull)
-    val obs = base.agg(
+      .select(ks :+ col(idCol).cast("string").as("__id") :+
+        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia") :+
+        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
+      .where(col("__id").isNotNull && nn)
+    val obs = base.groupBy(ks: _*).agg(
         coalesce(sum(col("__ia")), lit(0L)).as("n_a"),
         coalesce(sum(lit(1L) - col("__ia")), lit(0L)).as("n_b"),
         coalesce(sum(col("__ia") * col("__y")), lit(0L)).as("x_a"),
@@ -734,75 +643,7 @@ object Profile {
     val h = "CAST(CONV(SUBSTRING(MD5(CONCAT(__id, ':', CAST(__b AS STRING))), 1, 15), 16, 10) AS BIGINT)"
     val perB = base
       .withColumn("__b", explode(sequence(lit(0), lit(resamples - 1))))
-      .crossJoin(broadcast(obs.select(col("__thr"))))
-      .withColumn("__ca", when(expr(h) < col("__thr"), 1L).otherwise(0L))
-      .groupBy(col("__b"))
-      .agg(sum(col("__ca")).as("__n1"),
-        sum(col("__ca") * col("__y")).as("__x1"),
-        sum(lit(1L) - col("__ca")).as("__n2"),
-        sum((lit(1L) - col("__ca")) * col("__y")).as("__x2"))
-      .withColumn("__d", expr(
-        """CASE WHEN __n1 = 0 OR __n2 = 0 THEN 0 ELSE
-          |CAST((CAST(1000000 AS DECIMAL(38,0)) * __x1) DIV __n1
-          |  - (CAST(1000000 AS DECIMAL(38,0)) * __x2) DIV __n2 AS BIGINT)
-          |END""".stripMargin))
-    perB.crossJoin(broadcast(obs.select(col("d_obs_micro"))))
-      .agg(count(lit(1)).as("b"),
-        coalesce(sum(when(abs(col("__d")) >= abs(col("d_obs_micro")), 1L)
-          .otherwise(0L)), lit(0L)).as("n_ge"))
-      .crossJoin(broadcast(obs.drop("__thr")))
-      .select(col("n_a"), col("n_b"), col("x_a"), col("x_b"),
-        col("d_obs_micro"), col("b"), col("n_ge"),
-        expr("CAST((1000000 * (n_ge + 1)) DIV (b + 1) AS BIGINT)")
-          .as("p_micro"))
-  }
-
-  /** [[permTestRate]] per key group — the assumption-free significance
-    * dial per slice, keeping the keyed-twin symmetry of the eval matrix
-    * (and exactly where the permutation test matters most: small or
-    * lopsided slices are where the z/χ² normal approximations break).
-    * Each key draws its own coin threshold ⌊2⁶⁰·n_A/N⌋ from ITS margins
-    * and the coins hash only (id, resample), so the keyed output equals
-    * running the global test on each slice alone (spec-pinned). All
-    * joins/aggregates keyed — zero SinglePartition; shuffle volume is
-    * the (keys × B) resample table. Output (one row per key): keys…,
-    * n_a, n_b, x_a, x_b, d_obs_micro, b, n_ge, p_micro.
-    */
-  def permTestRateBy(df: DataFrame, keys: Seq[String], idCol: String,
-      groupCol: String, labelCol: String, groupA: String, groupB: String,
-      resamples: Int = 128): DataFrame = {
-    require(keys.nonEmpty, "permTestRateBy needs at least one key (use permTestRate)")
-    require(resamples >= 8 && resamples <= 1024,
-      s"resamples must be in [8, 1024], got $resamples")
-    val reserved = Set("n_a", "n_b", "x_a", "x_b", "d_obs_micro", "b",
-      "n_ge", "p_micro", "__id", "__ia", "__y", "__thr", "__b", "__ca",
-      "__n1", "__x1", "__n2", "__x2", "__d")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    val ks = keys.map(col)
-    val base = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(ks :+ col(idCol).cast("string").as("__id") :+
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia") :+
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"): _*)
-      .where(col("__id").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-    val obs = base.groupBy(ks: _*).agg(
-        coalesce(sum(col("__ia")), lit(0L)).as("n_a"),
-        coalesce(sum(lit(1L) - col("__ia")), lit(0L)).as("n_b"),
-        coalesce(sum(col("__ia") * col("__y")), lit(0L)).as("x_a"),
-        coalesce(sum((lit(1L) - col("__ia")) * col("__y")), lit(0L)).as("x_b"))
-      .withColumn("d_obs_micro", expr(
-        """CASE WHEN n_a = 0 OR n_b = 0 THEN 0 ELSE
-          |CAST((CAST(1000000 AS DECIMAL(38,0)) * x_a) DIV n_a
-          |  - (CAST(1000000 AS DECIMAL(38,0)) * x_b) DIV n_b AS BIGINT)
-          |END""".stripMargin))
-      .withColumn("__thr", expr(
-        """CASE WHEN n_a + n_b = 0 THEN 0L ELSE
-          |CAST((CAST(1152921504606846976 AS DECIMAL(38,0)) * n_a)
-          |  DIV (n_a + n_b) AS BIGINT) END""".stripMargin))
-    val h = "CAST(CONV(SUBSTRING(MD5(CONCAT(__id, ':', CAST(__b AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-    val perB = base
-      .withColumn("__b", explode(sequence(lit(0), lit(resamples - 1))))
-      .join(obs.select(ks :+ col("__thr"): _*), keys)
+      .join(Keyed.side(obs.select(ks :+ col("__thr"): _*), keys), keys)
       .withColumn("__ca", when(expr(h) < col("__thr"), 1L).otherwise(0L))
       .groupBy(ks :+ col("__b"): _*)
       .agg(sum(col("__ca")).as("__n1"),
@@ -814,12 +655,12 @@ object Profile {
           |CAST((CAST(1000000 AS DECIMAL(38,0)) * __x1) DIV __n1
           |  - (CAST(1000000 AS DECIMAL(38,0)) * __x2) DIV __n2 AS BIGINT)
           |END""".stripMargin))
-    perB.join(obs.select(ks :+ col("d_obs_micro").as("__do"): _*), keys)
+    perB.join(Keyed.side(obs.select(ks :+ col("d_obs_micro").as("__do"): _*), keys), keys)
       .groupBy(ks: _*)
       .agg(count(lit(1)).as("b"),
         coalesce(sum(when(abs(col("__d")) >= abs(col("__do")), 1L)
           .otherwise(0L)), lit(0L)).as("n_ge"))
-      .join(obs.drop("__thr"), keys)
+      .join(Keyed.side(obs.drop("__thr"), keys), keys)
       .select(ks ++ Seq(col("n_a"), col("n_b"), col("x_a"), col("x_b"),
         col("d_obs_micro"), col("b"), col("n_ge"),
         expr("CAST((1000000 * (n_ge + 1)) DIV (b + 1) AS BIGINT)")
@@ -850,15 +691,31 @@ object Profile {
     */
   def permTestMean(df: DataFrame, idCol: String, groupCol: String,
       valueCol: String, groupA: String, groupB: String,
+      resamples: Int = 128): DataFrame =
+    permTestMeanBy(df, Nil, idCol, groupCol, valueCol, groupA, groupB, resamples)
+
+  /** [[permTestMean]] per key group — the keyed twin, mirroring
+    * [[permTestRateBy]]: each key draws its own coin threshold from ITS
+    * margins and the coins hash only (id, resample), so the keyed output
+    * equals running the global test on each slice alone (spec-pinned).
+    * All joins/aggregates keyed — zero SinglePartition; shuffle volume is
+    * the (keys × B) resample table. Output (one row per key): keys…,
+    * n_a, n_b, s_a, s_b, d_obs_micro, b, n_ge, p_micro. `keys = Nil` is
+    * [[permTestMean]]: one row (b = 0, p_micro = 10⁶) on empty input.
+    */
+  def permTestMeanBy(df: DataFrame, keys: Seq[String], idCol: String,
+      groupCol: String, valueCol: String, groupA: String, groupB: String,
       resamples: Int = 128): DataFrame = {
-    require(resamples >= 8 && resamples <= 1024,
-      s"resamples must be in [8, 1024], got $resamples")
+    val nn = Keyed.guard(keys, Set("n_a", "n_b", "s_a", "s_b", "d_obs_micro",
+      "b", "n_ge", "p_micro", "__id", "__ia", "__x", "__thr", "__b", "__ca",
+      "__n1", "__x1", "__n2", "__x2", "__d", "__sa", "__sb", "__do"))
+    val ks = keys.map(col)
     val base = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(idCol).cast("string").as("__id"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"),
-        col(valueCol).cast("long").as("__x"))
-      .where(col("__id").isNotNull && col("__x").isNotNull)
-    val obs = base.agg(
+      .select(ks :+ col(idCol).cast("string").as("__id") :+
+        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia") :+
+        col(valueCol).cast("long").as("__x"): _*)
+      .where(col("__id").isNotNull && col("__x").isNotNull && nn)
+    val obs = base.groupBy(ks: _*).agg(
         coalesce(sum(col("__ia")), lit(0L)).as("n_a"),
         coalesce(sum(lit(1L) - col("__ia")), lit(0L)).as("n_b"),
         coalesce(sum((col("__ia") * col("__x")).cast(DecimalType(38, 0))),
@@ -879,78 +736,7 @@ object Profile {
     val h = "CAST(CONV(SUBSTRING(MD5(CONCAT(__id, ':', CAST(__b AS STRING))), 1, 15), 16, 10) AS BIGINT)"
     val perB = base
       .withColumn("__b", explode(sequence(lit(0), lit(resamples - 1))))
-      .crossJoin(broadcast(obs.select(col("__thr"))))
-      .withColumn("__ca", when(expr(h) < col("__thr"), 1L).otherwise(0L))
-      .groupBy(col("__b"))
-      .agg(sum(col("__ca")).as("__n1"),
-        sum((col("__ca") * col("__x")).cast(DecimalType(38, 0))).as("__s1"),
-        sum(lit(1L) - col("__ca")).as("__n2"),
-        sum(((lit(1L) - col("__ca")) * col("__x")).cast(DecimalType(38, 0)))
-          .as("__s2"))
-      .withColumn("__d", expr(
-        """CASE WHEN __n1 = 0 OR __n2 = 0 THEN 0 ELSE
-          |CAST((CAST(1000000 AS DECIMAL(38,0)) * __s1) DIV __n1
-          |  - (CAST(1000000 AS DECIMAL(38,0)) * __s2) DIV __n2 AS BIGINT)
-          |END""".stripMargin))
-    perB.crossJoin(broadcast(obs.select(col("d_obs_micro"))))
-      .agg(count(lit(1)).as("b"),
-        coalesce(sum(when(abs(col("__d")) >= abs(col("d_obs_micro")), 1L)
-          .otherwise(0L)), lit(0L)).as("n_ge"))
-      .crossJoin(broadcast(obs.drop("__thr")))
-      .select(col("n_a"), col("n_b"),
-        col("__sa").cast("long").as("s_a"), col("__sb").cast("long").as("s_b"),
-        col("d_obs_micro"), col("b"), col("n_ge"),
-        expr("CAST((1000000 * (n_ge + 1)) DIV (b + 1) AS BIGINT)")
-          .as("p_micro"))
-  }
-
-  /** [[permTestMean]] per key group — the keyed twin, mirroring
-    * [[permTestRateBy]]: each key draws its own coin threshold from ITS
-    * margins and the coins hash only (id, resample), so the keyed output
-    * equals running the global test on each slice alone (spec-pinned).
-    * All joins/aggregates keyed — zero SinglePartition; shuffle volume is
-    * the (keys × B) resample table. Output (one row per key): keys…,
-    * n_a, n_b, s_a, s_b, d_obs_micro, b, n_ge, p_micro.
-    */
-  def permTestMeanBy(df: DataFrame, keys: Seq[String], idCol: String,
-      groupCol: String, valueCol: String, groupA: String, groupB: String,
-      resamples: Int = 128): DataFrame = {
-    require(keys.nonEmpty, "permTestMeanBy needs at least one key (use permTestMean)")
-    require(resamples >= 8 && resamples <= 1024,
-      s"resamples must be in [8, 1024], got $resamples")
-    val reserved = Set("n_a", "n_b", "s_a", "s_b", "d_obs_micro", "b",
-      "n_ge", "p_micro", "__id", "__ia", "__x", "__thr", "__b", "__ca",
-      "__n1", "__s1", "__n2", "__s2", "__d", "__sa", "__sb", "__do")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    val ks = keys.map(col)
-    val base = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(ks :+ col(idCol).cast("string").as("__id") :+
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia") :+
-        col(valueCol).cast("long").as("__x"): _*)
-      .where(col("__id").isNotNull && col("__x").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
-    val obs = base.groupBy(ks: _*).agg(
-        coalesce(sum(col("__ia")), lit(0L)).as("n_a"),
-        coalesce(sum(lit(1L) - col("__ia")), lit(0L)).as("n_b"),
-        coalesce(sum((col("__ia") * col("__x")).cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0))).as("__sa"),
-        coalesce(sum(((lit(1L) - col("__ia")) * col("__x"))
-          .cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0))).as("__sb"))
-      .withColumn("d_obs_micro", expr(
-        """CASE WHEN n_a = 0 OR n_b = 0 THEN 0 ELSE
-          |CAST((CAST(1000000 AS DECIMAL(38,0)) * __sa) DIV n_a
-          |  - (CAST(1000000 AS DECIMAL(38,0)) * __sb) DIV n_b AS BIGINT)
-          |END""".stripMargin))
-      .withColumn("__thr", expr(
-        """CASE WHEN n_a + n_b = 0 THEN 0L ELSE
-          |CAST((CAST(1152921504606846976 AS DECIMAL(38,0)) * n_a)
-          |  DIV (n_a + n_b) AS BIGINT) END""".stripMargin))
-    val h = "CAST(CONV(SUBSTRING(MD5(CONCAT(__id, ':', CAST(__b AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-    val perB = base
-      .withColumn("__b", explode(sequence(lit(0), lit(resamples - 1))))
-      .join(obs.select(ks :+ col("__thr"): _*), keys)
+      .join(Keyed.side(obs.select(ks :+ col("__thr"): _*), keys), keys)
       .withColumn("__ca", when(expr(h) < col("__thr"), 1L).otherwise(0L))
       .groupBy(ks :+ col("__b"): _*)
       .agg(sum(col("__ca")).as("__n1"),
@@ -963,12 +749,12 @@ object Profile {
           |CAST((CAST(1000000 AS DECIMAL(38,0)) * __s1) DIV __n1
           |  - (CAST(1000000 AS DECIMAL(38,0)) * __s2) DIV __n2 AS BIGINT)
           |END""".stripMargin))
-    perB.join(obs.select(ks :+ col("d_obs_micro").as("__do"): _*), keys)
+    perB.join(Keyed.side(obs.select(ks :+ col("d_obs_micro").as("__do"): _*), keys), keys)
       .groupBy(ks: _*)
       .agg(count(lit(1)).as("b"),
         coalesce(sum(when(abs(col("__d")) >= abs(col("__do")), 1L)
           .otherwise(0L)), lit(0L)).as("n_ge"))
-      .join(obs.drop("__thr"), keys)
+      .join(Keyed.side(obs.drop("__thr"), keys), keys)
       .select(ks ++ Seq(col("n_a"), col("n_b"),
         col("__sa").cast("long").as("s_a"), col("__sb").cast("long").as("s_b"),
         col("d_obs_micro"), col("b"), col("n_ge"),
@@ -1118,31 +904,24 @@ object Profile {
     */
   def cusum(df: DataFrame, ordCol: String, xCol: String,
       targetCol: String, allowanceCol: String, thresholdCol: String): DataFrame =
-    cusumImpl(df, Nil, ordCol, xCol, targetCol, allowanceCol, thresholdCol)
+    cusumBy(df, Nil, ordCol, xCol, targetCol, allowanceCol, thresholdCol)
 
   /** [[cusum]] per key group — one alarm state per slice/monitor, every
-    * window partitioned by the keys (zero SinglePartition). */
+    * window partitioned by the keys (zero SinglePartition). `keys = Nil`
+    * is [[cusum]]. */
   def cusumBy(df: DataFrame, keys: Seq[String], ordCol: String, xCol: String,
       targetCol: String, allowanceCol: String, thresholdCol: String): DataFrame = {
-    require(keys.nonEmpty, "cusumBy needs at least one key (use cusum)")
-    cusumImpl(df, keys, ordCol, xCol, targetCol, allowanceCol, thresholdCol)
-  }
-
-  private def cusumImpl(df: DataFrame, keys: Seq[String], ordCol: String,
-      xCol: String, targetCol: String, allowanceCol: String,
-      thresholdCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val reserved = Set("__x", "__tg", "__ka", "__h", "__wp", "__wn",
-      "s_hi", "s_lo", "alarm_hi", "alarm_lo")
-    require(!keys.exists(reserved) && !reserved(ordCol),
-      s"key/ord columns may not collide with internals: ${reserved.mkString("/")}")
+    // the ord column is guarded like a key: it may not collide either, and
+    // a NULL ord has no place in the sequence
+    val nn = Keyed.guard(keys :+ ordCol, Set("__x", "__tg", "__ka", "__h",
+      "__wp", "__wn", "s_hi", "s_lo", "alarm_hi", "alarm_lo"))
     val ks = keys.map(col)
     val base = df.select(ks ++ Seq(col(ordCol), col(xCol).cast("long").as("__x"),
         col(targetCol).cast("long").as("__tg"),
         col(allowanceCol).cast("long").as("__ka"),
         col(thresholdCol).cast("long").as("__h")): _*)
-      .where(col(ordCol).isNotNull && col("__x").isNotNull &&
-        (ks.map(_.isNotNull) :+ lit(true)).reduce(_ && _))
+      .where(col("__x").isNotNull && nn)
     val w = Window.partitionBy(ks: _*).orderBy(col(ordCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     base
@@ -1179,49 +958,8 @@ object Profile {
     * columns, never a global sort or row-number. Output (one row):
     * n, rho_micro.
     */
-  def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def rankMap(rows: DataFrame, c: String): DataFrame = {
-      val g = rows.groupBy(col(c).as("__v")).agg(count(lit(1)).as("__cnt"))
-      val stats = g.agg(min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))
-      val bucketed = g.crossJoin(broadcast(stats))
-        .withColumn("__b", expr("(__v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-        .drop("__mn", "__mx")
-      val wOff = Window.orderBy(col("__b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = bucketed.groupBy(col("__b"))
-        .agg(sum(col("__cnt")).as("__bt"))
-        .withColumn("__off", coalesce(sum(col("__bt")).over(wOff), lit(0L)))
-        .select(col("__b"), col("__off"))
-      val wLoc = Window.partitionBy(col("__b")).orderBy(col("__v"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      bucketed.join(broadcast(offsets), "__b")
-        .withColumn("__below",
-          col("__off") + coalesce(sum(col("__cnt")).over(wLoc), lit(0L)))
-        .select(col("__v").as(c),
-          (col("__below") * 2 + col("__cnt") + 1).as(s"__r2_$c"))
-    }
-    // complete-case: a null on either side would shift one column's rank
-    // space (NULLS-FIRST into every bucket offset) while the pair itself
-    // dropped out of the equi-join — Σd² would mix two inconsistent rank
-    // spaces. Standard pairwise-deletion semantics instead.
-    val base = df.select(col(xCol).cast("long").as("__x"),
-      col(yCol).cast("long").as("__y"))
-      .where(col("__x").isNotNull && col("__y").isNotNull)
-    val joined = base
-      .join(rankMap(base.select(col("__x")), "__x"), Seq("__x"))
-      .join(rankMap(base.select(col("__y")), "__y"), Seq("__y"))
-      .withColumn("__d2",
-        (col("__r2___x") - col("__r2___y")).cast(DecimalType(38, 0)))
-    joined.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("__d2") * col("__d2")),
-          lit(0).cast(DecimalType(38, 0))).as("__s"))
-      .select(col("n"),
-        expr("""CASE WHEN n < 2 THEN 0 ELSE CAST(1000000 -
-                  (CAST(3000000 AS DECIMAL(38,0)) * __s)
-                  DIV (2 * (CAST(n AS DECIMAL(38,0)) * n * n - n))
-                AS BIGINT) END""").as("rho_micro"))
-  }
+  def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame =
+    spearmanBy(df, Nil, xCol, yCol)
 
   /** [[spearman]] per key group — the monotone-association slice
     * dashboard (is token count still tracking char count in EVERY
@@ -1234,25 +972,23 @@ object Profile {
     * crossing a key's window), ranks re-attach by keyed hash joins —
     * zero SinglePartition. Complete-case on keys and both columns
     * (pairwise deletion per key). Output (one row per key): keys…, n,
-    * rho_micro.
+    * rho_micro. `keys = Nil` is [[spearman]]: one all-zero row on empty
+    * input.
     *
     * Scan-count note: each axis' rank map reads the projected base once
-    * more (build + re-attach ⇒ the source scans ~4×, same shape as the
-    * global [[spearman]]). Deliberately NOT persisted here: the scan is
-    * a pruned two-column read that parquet serves from the page cache,
-    * and q223's bench telemetry has it far off the critical path
-    * (0.84 s at sf0.1 vs 24 s of window work at the 10M gate). A caller
-    * whose input is an EXPENSIVE derived frame (not a scan) should
-    * persist it before calling — CacheLife.scoped is the house tool.
+    * more (build + re-attach ⇒ the source scans ~4×). Deliberately NOT
+    * persisted here: the scan is a pruned two-column read that parquet
+    * serves from the page cache, and q223's bench telemetry has it far
+    * off the critical path (0.84 s at sf0.1 vs 24 s of window work at the
+    * 10M gate). A caller whose input is an EXPENSIVE derived frame (not a
+    * scan) should persist it before calling — CacheLife.scoped is the
+    * house tool.
     */
   def spearmanBy(df: DataFrame, keys: Seq[String], xCol: String,
       yCol: String): DataFrame = {
-    require(keys.nonEmpty, "spearmanBy needs at least one key (use spearman)")
-    val reserved = Set("n", "rho_micro", "__x", "__y", "__v", "__cnt",
-      "__mn", "__mx", "__b", "__bt", "__off", "__below", "__r2___x",
-      "__r2___y", "__d2", "__s")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("n", "rho_micro", "__x", "__y", "__v",
+      "__cnt", "__mn", "__mx", "__b", "__bt", "__off", "__below", "__r2___x",
+      "__r2___y", "__d2", "__s"))
     import org.apache.spark.sql.expressions.Window
     val ks = keys.map(col)
     def rankMap(rows: DataFrame, c: String): DataFrame = {
@@ -1260,7 +996,7 @@ object Profile {
         .agg(count(lit(1)).as("__cnt"))
       val stats = g.groupBy(ks: _*)
         .agg(min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))
-      val bucketed = g.join(stats, keys)
+      val bucketed = g.join(Keyed.side(stats, keys), keys)
         .withColumn("__b", expr("(__v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
         .drop("__mn", "__mx")
       val wOff = Window.partitionBy(ks: _*).orderBy(col("__b"))
@@ -1271,16 +1007,19 @@ object Profile {
         .select(ks ++ Seq(col("__b"), col("__off")): _*)
       val wLoc = Window.partitionBy(ks :+ col("__b"): _*).orderBy(col("__v"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      bucketed.join(offsets, keys :+ "__b")
+      bucketed.join(Keyed.side(offsets, keys), keys :+ "__b")
         .withColumn("__below",
           col("__off") + coalesce(sum(col("__cnt")).over(wLoc), lit(0L)))
         .select(ks ++ Seq(col("__v").as(c),
           (col("__below") * 2 + col("__cnt") + 1).as(s"__r2_$c")): _*)
     }
+    // complete-case: a null on either side would shift one column's rank
+    // space (NULLS-FIRST into every bucket offset) while the pair itself
+    // dropped out of the equi-join — Σd² would mix two inconsistent rank
+    // spaces. Standard pairwise-deletion semantics instead.
     val base = df.select(ks :+ col(xCol).cast("long").as("__x") :+
         col(yCol).cast("long").as("__y"): _*)
-      .where(col("__x").isNotNull && col("__y").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
+      .where(col("__x").isNotNull && col("__y").isNotNull && nn)
     val joined = base
       .join(rankMap(base.select(ks :+ col("__x"): _*), "__x"), keys :+ "__x")
       .join(rankMap(base.select(ks :+ col("__y"): _*), "__y"), keys :+ "__y")
@@ -1322,10 +1061,7 @@ object Profile {
     * tie_x_pairs, tie_y_pairs, tau_b6.
     */
   def kendallTauB(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    kendallTauBFromCounts(df.select(col(xCol).cast("long").as("__x"),
-        col(yCol).cast("long").as("__y"))
-      .where(col("__x").isNotNull && col("__y").isNotNull)
-      .groupBy(col("__x"), col("__y")).agg(count(lit(1)).as("__o")))
+    kendallTauBBy(df, Nil, xCol, yCol)
 
   /** [[kendallTauB]] over a PRE-AGGREGATED (__x, __y, __o) distinct-cell
     * count table — the incremental form a streaming association monitor
@@ -1335,48 +1071,80 @@ object Profile {
     * whole-data cells — the group homomorphism every monitor store
     * rides — and the coarse-score contract bounds the store at the
     * |X|×|Y| cell count, not the row count. */
-  def kendallTauBFromCounts(counts: DataFrame): DataFrame = {
+  def kendallTauBFromCounts(counts: DataFrame): DataFrame =
+    kendallByCells(counts.where(col("__x").isNotNull && col("__y").isNotNull)
+      .groupBy(col("__x"), col("__y")).agg(sum(col("__o")).as("__o")), Nil)
+
+  /** [[kendallTauB]] per key group — the tie-aware association slice
+    * dashboard (is the length↔token relationship still monotone in EVERY
+    * language, or did one slice's re-tokenization break it?). Same
+    * exactness and coarse-score boundedness contract as the global form;
+    * the dense grid densifies per key (a keyed equi-join of the per-key
+    * axis tables — no cross join), every window partitioned by
+    * (keys, one axis), every aggregate and join keyed — zero
+    * SinglePartition. Complete-case on keys and both columns. Output
+    * (one row per key): keys…, n, conc, disc, tie_x_pairs, tie_y_pairs,
+    * tau_b6. `keys = Nil` is [[kendallTauB]]: one all-zero row on empty
+    * input.
+    */
+  def kendallTauBBy(df: DataFrame, keys: Seq[String], xCol: String,
+      yCol: String): DataFrame = {
+    val nn = Keyed.guard(keys, Set("n", "conc", "disc", "tie_x_pairs",
+      "tie_y_pairs", "tau_b6", "__x", "__y", "__o", "__tx", "__ty", "__cyb",
+      "__cya", "__bb", "__ba", "__conc", "__disc", "__tx2", "__ty2"))
+    val ks = keys.map(col)
+    kendallByCells(df.select(ks :+ col(xCol).cast("long").as("__x") :+
+        col(yCol).cast("long").as("__y"): _*)
+      .where(col("__x").isNotNull && col("__y").isNotNull && nn)
+      .groupBy(ks ++ Seq(col("__x"), col("__y")): _*)
+      .agg(count(lit(1)).as("__o")), keys)
+  }
+
+  /** τ-b over a (keys…, __x, __y, __o) table with one row per observed
+    * cell. */
+  private def kendallByCells(cells: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cells = counts.where(col("__x").isNotNull && col("__y").isNotNull)
-      .groupBy(col("__x"), col("__y")).agg(sum(col("__o")).as("__o"))
-    val dx = cells.groupBy(col("__x")).agg(sum(col("__o")).as("__tx"))
-    val dy = cells.groupBy(col("__y")).agg(sum(col("__o")).as("__ty"))
-    // dense |X|×|Y| grid — bounded by the coarse-score contract (the
-    // chiSquare precedent); zero-fill so the window cumulatives see every
-    // (x, y) combination and the prefix sums are evaluable at every cell
-    val grid = dx.select(col("__x")).crossJoin(dy.select(col("__y")))
-      .join(cells, Seq("__x", "__y"), "left")
+    val ks = keys.map(col)
+    val dx = cells.groupBy(ks :+ col("__x"): _*).agg(sum(col("__o")).as("__tx"))
+    val dy = cells.groupBy(ks :+ col("__y"): _*).agg(sum(col("__o")).as("__ty"))
+    // dense per-key |X|×|Y| grid — bounded by the coarse-score contract
+    // (the chiSquare precedent): the axis tables join on the KEYS, so a
+    // slice only densifies against its own values; zero-fill so the window
+    // cumulatives see every (x, y) combination
+    val grid = dx.select(ks :+ col("__x"): _*)
+      .join(dy.select(ks :+ col("__y"): _*), keys)
+      .join(cells, keys ++ Seq("__x", "__y"), "left")
       .withColumn("__o", coalesce(col("__o"), lit(0L)))
-    val wYup = Window.partitionBy(col("__x")).orderBy(col("__y"))
+    val wYup = Window.partitionBy(ks :+ col("__x"): _*).orderBy(col("__y"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wYdn = Window.partitionBy(col("__x")).orderBy(col("__y"))
+    val wYdn = Window.partitionBy(ks :+ col("__x"): _*).orderBy(col("__y"))
       .rowsBetween(1, Window.unboundedFollowing)
     val slice = grid
       .withColumn("__cyb", coalesce(sum(col("__o")).over(wYup), lit(0L)))
       .withColumn("__cya", coalesce(sum(col("__o")).over(wYdn), lit(0L)))
-    val wXup = Window.partitionBy(col("__y")).orderBy(col("__x"))
+    val wXup = Window.partitionBy(ks :+ col("__y"): _*).orderBy(col("__x"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val dom = slice
       .withColumn("__bb", coalesce(sum(col("__cyb")).over(wXup), lit(0L)))
       .withColumn("__ba", coalesce(sum(col("__cya")).over(wXup), lit(0L)))
-    val sums = dom.agg(
+    val sums = dom.groupBy(ks: _*).agg(
       coalesce(sum(col("__o")), lit(0L)).as("n"),
       coalesce(sum(col("__o").cast(DecimalType(38, 0)) * col("__bb")),
         lit(0).cast(DecimalType(38, 0))).as("__conc"),
       coalesce(sum(col("__o").cast(DecimalType(38, 0)) * col("__ba")),
         lit(0).cast(DecimalType(38, 0))).as("__disc"))
-    val tiesX = dx.agg(coalesce(
+    val tiesX = dx.groupBy(ks: _*).agg(coalesce(
       sum(col("__tx").cast(DecimalType(38, 0)) * (col("__tx") - 1)),
       lit(0).cast(DecimalType(38, 0))).as("__tx2"))
-    val tiesY = dy.agg(coalesce(
+    val tiesY = dy.groupBy(ks: _*).agg(coalesce(
       sum(col("__ty").cast(DecimalType(38, 0)) * (col("__ty") - 1)),
       lit(0).cast(DecimalType(38, 0))).as("__ty2"))
-    sums.crossJoin(broadcast(tiesX)).crossJoin(broadcast(tiesY))
-      .select(col("n"),
+    sums.join(Keyed.side(tiesX, keys), keys).join(Keyed.side(tiesY, keys), keys)
+      .select(ks ++ Seq(col("n"),
         expr("CAST(__conc AS BIGINT)").as("conc"),
         expr("CAST(__disc AS BIGINT)").as("disc"),
         expr("CAST(__tx2 DIV 2 AS BIGINT)").as("tie_x_pairs"),
-        expr("CAST(__ty2 DIV 2 AS BIGINT)").as("tie_y_pairs"))
+        expr("CAST(__ty2 DIV 2 AS BIGINT)").as("tie_y_pairs")): _*)
       .withColumn("tau_b6", expr(
         """CASE WHEN n < 2
              OR CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)
@@ -1389,6 +1157,31 @@ object Profile {
               SQRT(CAST(CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)
                 - tie_y_pairs AS DOUBLE))), 6) END"""))
   }
+
+  /** (keys…, v, ca, cb): per distinct integer value, the group-A and
+    * group-B row counts — the mergeable value-count store the drift
+    * monitors keep (KS, PSI, W1, JS and the W1 attribution all read it).
+    * Complete-case on the value and, through `nn` (the [[Keyed.guard]]
+    * filter), on the keys. */
+  private def valueCounts(df: DataFrame, keys: Seq[String], valueCol: String,
+      groupCol: String, groupA: String, groupB: String, nn: Column): DataFrame = {
+    val ks = keys.map(col)
+    df.filter(col(groupCol).isin(groupA, groupB))
+      .select(ks :+ col(valueCol).cast("long").as("v") :+
+        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"): _*)
+      .where(col("v").isNotNull && nn)
+      .groupBy(ks :+ col("v"): _*)
+      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
+  }
+
+  /** A (v, ca, cb) count-delta store with same-value rows combined and
+    * NULL values EXCLUDED — what every value-store `*FromCounts` reader
+    * sees. A null group would fold into every cumulative offset via
+    * NULLS-FIRST ordering yet never surface as a candidate (the
+    * null-unsafe offsets join drops it). */
+  private def mergedValueCounts(counts: DataFrame): DataFrame =
+    counts.where(col("v").isNotNull).groupBy(col("v"))
+      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
 
   /** Two-sample Kolmogorov–Smirnov statistic over an integer value column
     * between two groups — the ordered-axis drift detector that
@@ -1404,9 +1197,9 @@ object Profile {
     * from a min/max pass (reused exchange; magnitude buckets would park
     * half a uniform value range in one bucket — see [[LmOps.binaryAuc]]),
     * per-bucket parallel windows, only the ≤1025-row bucket-total table
-    * crossing SinglePartition — and a TakeOrderedAndProject limit-1 for
-    * the argmax (ties break to the smallest value). No global sort, no
-    * row-level rank.
+    * crossing SinglePartition — and a rank ≤ 1 window for the argmax
+    * (ties break to the smallest value). No global sort, no row-level
+    * rank.
     *
     * Output (one row): at_value (smallest value attaining D), n_a, n_b,
     * cum_a, cum_b (counts ≤ at_value), d_micro. An empty side makes D
@@ -1415,12 +1208,71 @@ object Profile {
     */
   def ksTwoSample(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String): DataFrame =
-    ksTwoSampleFromCounts(df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("ia")).as("ca"), sum(lit(1L) - col("ia")).as("cb")))
+    ksTwoSampleBy(df, Nil, valueCol, groupCol, groupA, groupB)
+
+  /** [[ksTwoSample]] over a PRE-AGGREGATED (v, ca, cb) count table — the
+    * incremental form a streaming drift monitor maintains (the
+    * [[bucketDriftFromCounts]] contract). Rows with the same value are
+    * combined, so a delta store may carry duplicates. NULL values are
+    * EXCLUDED (complete-case; see [[mergedValueCounts]]) — a null group
+    * would silently underreport D when the gap sits at the null mass.
+    */
+  def ksTwoSampleFromCounts(counts: DataFrame): DataFrame =
+    ksByCounts(mergedValueCounts(counts), Nil)
+
+  /** [[ksTwoSample]] per key group — the drift slice dashboard (which
+    * language / time bucket / shard pair actually moved?), the
+    * [[LmOps.binaryAucBy]] pattern applied to the CDF gap: per-key
+    * bucket widths from a keyed min/max join, every window partitioned
+    * by (keys) or (keys, b), and the per-key argmax as a rank ≤ 1
+    * window (WindowGroupLimit — map-side group limit, no global sort) —
+    * NO SinglePartition exchange anywhere. Null values and null keys
+    * are complete-case like the global form. Output (one row per key
+    * with both sides observed… or one side empty → d_micro 0):
+    * keys…, at_value, n_a, n_b, cum_a, cum_b, d_micro. `keys = Nil` is
+    * [[ksTwoSample]]: no rows on empty input.
+    */
+  def ksTwoSampleBy(df: DataFrame, keys: Seq[String], valueCol: String,
+      groupCol: String, groupA: String, groupB: String): DataFrame = {
+    val nn = Keyed.guard(keys, Set("v", "ca", "cb", "b", "ba", "bb", "off_a",
+      "off_b", "cum_a", "cum_b", "n_a", "n_b", "d_micro", "at_value", "__ia",
+      "__rn", "__mn", "__mx"))
+    ksByCounts(valueCounts(df, keys, valueCol, groupCol, groupA, groupB, nn), keys)
+  }
+
+  /** KS over a (keys…, v, ca, cb) table with one row per (keys, v). */
+  private def ksByCounts(g: DataFrame, keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ks = keys.map(col)
+    val stats = g.groupBy(ks: _*)
+      .agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"),
+        sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
+    val bucketed = g.join(Keyed.side(stats, keys), keys)
+      .withColumn("b", expr("(v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
+      .drop("__mn", "__mx")
+    val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = bucketed.groupBy(ks :+ col("b"): _*)
+      .agg(sum(col("ca")).as("ba"), sum(col("cb")).as("bb"))
+      .withColumn("off_a", coalesce(sum(col("ba")).over(wOff), lit(0L)))
+      .withColumn("off_b", coalesce(sum(col("bb")).over(wOff), lit(0L)))
+      .select(ks :+ col("b") :+ col("off_a") :+ col("off_b"): _*)
+    val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wPick = Window.partitionBy(ks: _*)
+      .orderBy(col("d_micro").desc, col("v"))
+    bucketed.join(Keyed.side(offsets, keys), keys :+ "b")
+      .withColumn("cum_a", col("off_a") + sum(col("ca")).over(wLoc))
+      .withColumn("cum_b", col("off_b") + sum(col("cb")).over(wLoc))
+      .withColumn("d_micro",
+        expr("""CASE WHEN n_a = 0 OR n_b = 0 THEN 0
+                ELSE abs(cum_a * 1000000 DIV n_a - cum_b * 1000000 DIV n_b)
+                END"""))
+      .withColumn("__rn", row_number().over(wPick))
+      .filter(col("__rn") === 1)
+      .select(ks ++ Seq(col("v").as("at_value"), col("n_a"), col("n_b"),
+        col("cum_a"), col("cum_b"), col("d_micro")): _*)
+  }
 
   /** Population Stability Index between two groups' distributions of an
     * integer value — the banded drift score model-risk practice
@@ -1453,48 +1305,15 @@ object Profile {
     */
   def psi(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String, buckets: Int = 16): DataFrame =
-    psiFromCounts(df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb")),
-      buckets)
+    psiBy(df, Nil, valueCol, groupCol, groupA, groupB, buckets)
 
   /** [[psi]] over a PRE-AGGREGATED (v, ca, cb) distinct-value count
     * table — the SAME mergeable store [[ksTwoSampleFromCounts]] reads, so
     * one streaming value-count store feeds both drift monitors (counts
     * for the same value combine; NULL values excluded; bucket edges are
     * recomputed from the merged min/max at emit time). */
-  def psiFromCounts(counts: DataFrame, buckets: Int = 16): DataFrame = {
-    require(buckets >= 2 && buckets <= 1024,
-      s"buckets must be in [2, 1024], got $buckets")
-    val base = counts.where(col("v").isNotNull).groupBy(col("v"))
-      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-    val stats = base.agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
-    val g = base.crossJoin(broadcast(stats))
-      .withColumn("bucket",
-        expr(s"(v - __mn) DIV ((__mx - __mn) DIV $buckets + 1)"))
-      .groupBy(col("bucket"))
-      .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    val tot = g.agg(coalesce(sum(col("n_a")), lit(0L)).as("__ta"),
-      coalesce(sum(col("n_b")), lit(0L)).as("__tb"))
-    val terms = g.crossJoin(broadcast(tot)).crossJoin(broadcast(stats))
-      .select(col("bucket"),
-        expr(s"__mn + bucket * ((__mx - __mn) DIV $buckets + 1)").as("lo"),
-        col("n_a"), col("n_b"),
-        expr("n_a * 1000000 DIV __ta").as("share_a_micro"),
-        expr("n_b * 1000000 DIV __tb").as("share_b_micro"),
-        expr("""CASE WHEN n_a > 0 AND n_b > 0 THEN
-                  ROUND((CAST(n_a AS DOUBLE) / __ta - CAST(n_b AS DOUBLE) / __tb)
-                    * LN(CAST(n_a AS DOUBLE) * __tb / (CAST(n_b AS DOUBLE) * __ta)), 9)
-                END""").as("term9"))
-    val sc = terms.agg(
-      round(coalesce(sum(col("term9").cast(DecimalType(24, 9))),
-        lit(0).cast(DecimalType(24, 9))).cast("double"), 6).as("psi6"),
-      coalesce(sum(when((col("n_a") === 0L) =!= (col("n_b") === 0L), 1L)
-        .otherwise(0L)), lit(0L)).as("n_skipped"))
-    terms.crossJoin(broadcast(sc)) // buckets × 1
-  }
+  def psiFromCounts(counts: DataFrame, buckets: Int = 16): DataFrame =
+    psiByCounts(mergedValueCounts(counts), Nil, buckets)
 
   /** [[psi]] per key group — the drift slice dashboard sibling of
     * [[ksTwoSampleBy]] (q206): WHICH slice's distribution moved, in
@@ -1505,36 +1324,37 @@ object Profile {
     * determinism and skip contracts as [[psi]]. Output (one row per
     * (key, bucket) observed on either side): keys…, bucket, lo, n_a,
     * n_b, share_a_micro, share_b_micro, term9, psi6, n_skipped — the
-    * per-key scalars ride every row of their key.
+    * per-key scalars ride every row of their key. `keys = Nil` is
+    * [[psi]]: no rows on empty input.
     */
   def psiBy(df: DataFrame, keys: Seq[String], valueCol: String,
       groupCol: String, groupA: String, groupB: String,
       buckets: Int = 16): DataFrame = {
-    require(keys.nonEmpty, "psiBy needs at least one key (use psi)")
+    val nn = Keyed.guard(keys, Set("v", "ca", "cb", "bucket", "lo", "n_a",
+      "n_b", "share_a_micro", "share_b_micro", "term9", "psi6", "n_skipped",
+      "__ia", "__mn", "__mx", "__ta", "__tb"))
+    psiByCounts(valueCounts(df, keys, valueCol, groupCol, groupA, groupB, nn),
+      keys, buckets)
+  }
+
+  /** PSI over a (keys…, v, ca, cb) table with one row per (keys, v). */
+  private def psiByCounts(g0: DataFrame, keys: Seq[String],
+      buckets: Int): DataFrame = {
     require(buckets >= 2 && buckets <= 1024,
       s"buckets must be in [2, 1024], got $buckets")
-    val reserved = Set("v", "ca", "cb", "bucket", "lo", "n_a", "n_b",
-      "share_a_micro", "share_b_micro", "term9", "psi6", "n_skipped",
-      "__ia", "__mn", "__mx", "__ta", "__tb")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
     val ks = keys.map(col)
-    val g0 = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(ks :+ col(valueCol).cast("long").as("v") :+
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"): _*)
-      .where(col("v").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .groupBy(ks :+ col("v"): _*)
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
     val stats = g0.groupBy(ks: _*)
       .agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
-    val g = g0.join(stats, keys)
+    val g = g0.join(Keyed.side(stats, keys), keys)
       .withColumn("bucket",
         expr(s"(v - __mn) DIV ((__mx - __mn) DIV $buckets + 1)"))
       .groupBy(ks :+ col("bucket"): _*)
       .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
     val tot = g.groupBy(ks: _*)
-      .agg(sum(col("n_a")).as("__ta"), sum(col("n_b")).as("__tb"))
-    val terms = g.join(tot, keys).join(stats, keys)
+      .agg(coalesce(sum(col("n_a")), lit(0L)).as("__ta"),
+        coalesce(sum(col("n_b")), lit(0L)).as("__tb"))
+    val terms = g.join(Keyed.side(tot, keys), keys)
+      .join(Keyed.side(stats, keys), keys)
       .select(ks ++ Seq(col("bucket"),
         expr(s"__mn + bucket * ((__mx - __mn) DIV $buckets + 1)").as("lo"),
         col("n_a"), col("n_b"),
@@ -1549,7 +1369,7 @@ object Profile {
         lit(0).cast(DecimalType(24, 9))).cast("double"), 6).as("psi6"),
       coalesce(sum(when((col("n_a") === 0L) =!= (col("n_b") === 0L), 1L)
         .otherwise(0L)), lit(0L)).as("n_skipped"))
-    terms.join(sc, keys)
+    terms.join(Keyed.side(sc, keys), keys) // buckets × 1 per key
       .select(ks ++ Seq(col("bucket"), col("lo"), col("n_a"), col("n_b"),
         col("share_a_micro"), col("share_b_micro"), col("term9"),
         col("psi6"), col("n_skipped")): _*)
@@ -1578,12 +1398,8 @@ object Profile {
     */
   def jsDivergence(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String, buckets: Int = 16): DataFrame =
-    jsDivergenceFromCounts(df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb")),
-      buckets)
+    jsDivergenceFromCounts(
+      valueCounts(df, Nil, valueCol, groupCol, groupA, groupB, lit(true)), buckets)
 
   /** [[jsDivergence]] over the PRE-AGGREGATED (v, ca, cb) distinct-value
     * count store shared with [[ksTwoSampleFromCounts]] /
@@ -1591,8 +1407,7 @@ object Profile {
   def jsDivergenceFromCounts(counts: DataFrame, buckets: Int = 16): DataFrame = {
     require(buckets >= 2 && buckets <= 1024,
       s"buckets must be in [2, 1024], got $buckets")
-    val base = counts.where(col("v").isNotNull).groupBy(col("v"))
-      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
+    val base = mergedValueCounts(counts)
     val stats = base.agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
     val g = base.crossJoin(broadcast(stats))
       .withColumn("bucket",
@@ -1653,12 +1468,7 @@ object Profile {
     */
   def wasserstein1(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String): DataFrame =
-    wasserstein1FromCounts(df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb")))
+    wasserstein1By(df, Nil, valueCol, groupCol, groupA, groupB)
 
   /** [[wasserstein1]] over a PRE-AGGREGATED (v, ca, cb) distinct-value
     * count table — the THIRD reader of the SAME mergeable store
@@ -1673,49 +1483,75 @@ object Profile {
     * carried on the same bucket-total table, so no global sort and no
     * extra exchange anywhere.
     */
-  def wasserstein1FromCounts(counts: DataFrame): DataFrame = {
+  def wasserstein1FromCounts(counts: DataFrame): DataFrame =
+    w1ByCounts(mergedValueCounts(counts), Nil)
+
+  /** [[wasserstein1]] per key group — the how-FAR drift slice dashboard
+    * completing the keyed drift matrix ([[ksTwoSampleBy]] q206 = where,
+    * [[psiBy]] q214 = how much): WHICH slice's distribution moved, and
+    * by how many value units? Per-key two-phase machinery throughout —
+    * each key buckets its OWN min/max (the [[psiBy]] aliasing argument),
+    * offset/local/lead windows all partitioned by (keys)/(keys, bucket),
+    * the bucket-boundary successor rides the per-key bucket table, rank
+    * tables re-attach by keyed equi-joins — zero SinglePartition, no
+    * global sort. Same exactness and empty-side contracts as the global
+    * form. Output (one row per key): keys…, n_a, n_b, n_values,
+    * w1_micro. `keys = Nil` is [[wasserstein1]]: no rows on empty input.
+    */
+  def wasserstein1By(df: DataFrame, keys: Seq[String], valueCol: String,
+      groupCol: String, groupA: String, groupB: String): DataFrame = {
+    val nn = Keyed.guard(keys, Set("v", "ca", "cb", "b", "ba", "bb", "off_a",
+      "off_b", "cum_a", "cum_b", "n_a", "n_b", "n_values", "w1_micro", "__ia",
+      "__mn", "__mx", "__bmn", "__nxt", "__nv", "__term", "__area"))
+    w1ByCounts(valueCounts(df, keys, valueCol, groupCol, groupA, groupB, nn), keys)
+  }
+
+  /** W1 over a (keys…, v, ca, cb) table with one row per (keys, v). */
+  private def w1ByCounts(g: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val g = counts.where(col("v").isNotNull).groupBy(col("v"))
-      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-    val stats = g.agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
-    val bucketed = g.crossJoin(broadcast(stats))
+    val ks = keys.map(col)
+    val stats = g.groupBy(ks: _*)
+      .agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
+    val bucketed = g.join(Keyed.side(stats, keys), keys)
       .withColumn("b", expr("(v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
       .drop("__mn", "__mx")
-    val wOff = Window.orderBy(col("b"))
+    val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wNxt = Window.orderBy(col("b"))
-    val offsets = bucketed.groupBy(col("b"))
+    val wNxt = Window.partitionBy(ks: _*).orderBy(col("b"))
+    val offsets = bucketed.groupBy(ks :+ col("b"): _*)
       .agg(sum(col("ca")).as("ba"), sum(col("cb")).as("bb"),
         min(col("v")).as("__bmn"))
       .withColumn("off_a", coalesce(sum(col("ba")).over(wOff), lit(0L)))
       .withColumn("off_b", coalesce(sum(col("bb")).over(wOff), lit(0L)))
       .withColumn("__nxt", lead(col("__bmn"), 1).over(wNxt))
-      .select(col("b"), col("off_a"), col("off_b"), col("__nxt"))
-    val wLoc = Window.partitionBy(col("b")).orderBy(col("v"))
+      .select(ks ++ Seq(col("b"), col("off_a"), col("off_b"), col("__nxt")): _*)
+    val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLead = Window.partitionBy(col("b")).orderBy(col("v"))
-    val cum = bucketed.join(broadcast(offsets), "b")
+    val wLead = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("v"))
+    val cum = bucketed.join(Keyed.side(offsets, keys), keys :+ "b")
       .withColumn("cum_a", col("off_a") + sum(col("ca")).over(wLoc))
       .withColumn("cum_b", col("off_b") + sum(col("cb")).over(wLoc))
-      // Δv: in-bucket successor, else the next bucket's min (the global
+      // Δv: in-bucket successor, else the next bucket's min (each key's
       // max value gets NULL → Δ = 0 via the coalesce below)
       .withColumn("__nv", coalesce(lead(col("v"), 1).over(wLead), col("__nxt")))
-    val tot = g.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
-      count(lit(1)).as("n_values"))
-    cum.crossJoin(broadcast(tot))
+    val tot = g.groupBy(ks: _*)
+      .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
+        count(lit(1)).as("n_values"))
+    cum.join(Keyed.side(tot, keys), keys)
       .withColumn("__term",
         expr("""ABS(CAST(cum_a AS DECIMAL(38,0)) * n_b
                 - CAST(cum_b AS DECIMAL(38,0)) * n_a)
                 * (COALESCE(__nv, v) - v)"""))
+      .groupBy(ks: _*)
       .agg(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
         max(col("n_values")).as("n_values"),
         coalesce(sum(col("__term")), lit(0).cast(DecimalType(38, 0)))
           .as("__area"))
-      .select(col("n_a"), col("n_b"), col("n_values"),
+      .select(ks ++ Seq(col("n_a"), col("n_b"), col("n_values"),
         expr("""CASE WHEN n_a = 0 OR n_b = 0 THEN 0
                 ELSE CAST((CAST(1000000 AS DECIMAL(38,0)) * __area)
                   DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT) END""")
-          .as("w1_micro"))
+          .as("w1_micro")): _*)
       // empty store → zero rows (the ksTwoSampleFromCounts convention),
       // not a row of nulls
       .where(col("n_values").isNotNull)
@@ -1745,13 +1581,8 @@ object Profile {
     */
   def w1Attribution(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String, buckets: Int = 16): DataFrame =
-    w1AttributionFromCounts(df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb")),
-      buckets)
+    w1AttributionFromCounts(
+      valueCounts(df, Nil, valueCol, groupCol, groupA, groupB, lit(true)), buckets)
 
   /** [[w1Attribution]] over the PRE-AGGREGATED (v, ca, cb) distinct-value
     * count store — the FIFTH reader of the store KS/PSI/W1/JS share, so
@@ -1761,8 +1592,7 @@ object Profile {
     import org.apache.spark.sql.expressions.Window
     require(buckets >= 2 && buckets <= 1024,
       s"buckets must be in [2, 1024], got $buckets")
-    val g = counts.where(col("v").isNotNull).groupBy(col("v"))
-      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
+    val g = mergedValueCounts(counts)
     val stats = g.agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
     val bucketed = g.crossJoin(broadcast(stats))
       .withColumn("b", expr("(v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
@@ -1817,76 +1647,6 @@ object Profile {
           .as("w1_micro"))
   }
 
-  /** [[wasserstein1]] per key group — the how-FAR drift slice dashboard
-    * completing the keyed drift matrix ([[ksTwoSampleBy]] q206 = where,
-    * [[psiBy]] q214 = how much): WHICH slice's distribution moved, and
-    * by how many value units? Per-key two-phase machinery throughout —
-    * each key buckets its OWN min/max (the [[psiBy]] aliasing argument),
-    * offset/local/lead windows all partitioned by (keys)/(keys, bucket),
-    * the bucket-boundary successor rides the per-key bucket table, rank
-    * tables re-attach by keyed equi-joins — zero SinglePartition, no
-    * global sort. Same exactness and empty-side contracts as the global
-    * form. Output (one row per key): keys…, n_a, n_b, n_values,
-    * w1_micro.
-    */
-  def wasserstein1By(df: DataFrame, keys: Seq[String], valueCol: String,
-      groupCol: String, groupA: String, groupB: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(keys.nonEmpty, "wasserstein1By needs at least one key (use wasserstein1)")
-    val reserved = Set("v", "ca", "cb", "b", "ba", "bb", "off_a", "off_b",
-      "cum_a", "cum_b", "n_a", "n_b", "n_values", "w1_micro", "__ia",
-      "__mn", "__mx", "__bmn", "__nxt", "__nv", "__term", "__area")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    val ks = keys.map(col)
-    val g = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(ks :+ col(valueCol).cast("long").as("v") :+
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"): _*)
-      .where(col("v").isNotNull && ks.map(_.isNotNull).reduce(_ && _))
-      .groupBy(ks :+ col("v"): _*)
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
-    val stats = g.groupBy(ks: _*)
-      .agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
-    val bucketed = g.join(stats, keys)
-      .withColumn("b", expr("(v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-      .drop("__mn", "__mx")
-    val wOff = Window.partitionBy(ks: _*).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wNxt = Window.partitionBy(ks: _*).orderBy(col("b"))
-    val offsets = bucketed.groupBy(ks :+ col("b"): _*)
-      .agg(sum(col("ca")).as("ba"), sum(col("cb")).as("bb"),
-        min(col("v")).as("__bmn"))
-      .withColumn("off_a", coalesce(sum(col("ba")).over(wOff), lit(0L)))
-      .withColumn("off_b", coalesce(sum(col("bb")).over(wOff), lit(0L)))
-      .withColumn("__nxt", lead(col("__bmn"), 1).over(wNxt))
-      .select(ks ++ Seq(col("b"), col("off_a"), col("off_b"), col("__nxt")): _*)
-    val wLoc = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLead = Window.partitionBy(ks :+ col("b"): _*).orderBy(col("v"))
-    val cum = bucketed.join(offsets, keys :+ "b")
-      .withColumn("cum_a", col("off_a") + sum(col("ca")).over(wLoc))
-      .withColumn("cum_b", col("off_b") + sum(col("cb")).over(wLoc))
-      .withColumn("__nv", coalesce(lead(col("v"), 1).over(wLead), col("__nxt")))
-    val tot = g.groupBy(ks: _*)
-      .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
-        count(lit(1)).as("n_values"))
-    cum.join(tot, keys)
-      .withColumn("__term",
-        expr("""ABS(CAST(cum_a AS DECIMAL(38,0)) * n_b
-                - CAST(cum_b AS DECIMAL(38,0)) * n_a)
-                * (COALESCE(__nv, v) - v)"""))
-      .groupBy(ks: _*)
-      .agg(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
-        max(col("n_values")).as("n_values"),
-        coalesce(sum(col("__term")), lit(0).cast(DecimalType(38, 0)))
-          .as("__area"))
-      .select(ks ++ Seq(col("n_a"), col("n_b"), col("n_values"),
-        expr("""CASE WHEN n_a = 0 OR n_b = 0 THEN 0
-                ELSE CAST((CAST(1000000 AS DECIMAL(38,0)) * __area)
-                  DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT) END""")
-          .as("w1_micro")): _*)
-  }
-
   /** Mutual information (in nats) + normalized MI between two categorical
     * columns — the dependence STRENGTH dial complementing [[chiSquare]]'s
     * significance test: χ² asks "is there ANY association at this n", MI
@@ -1905,114 +1665,8 @@ object Profile {
     * Complete-case on both columns. Output (one row): n, n_a, n_b, mi6,
     * h_a6, h_b6, nmi6.
     */
-  def mutualInfo(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val obs = df.select(col(aCol).cast("string").as("a"),
-        col(bCol).cast("string").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull)
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("o"))
-    val ra = obs.groupBy(col("a")).agg(sum(col("o")).as("r"))
-    val cb = obs.groupBy(col("b")).agg(sum(col("o")).as("c"))
-    val tot = obs.agg(coalesce(sum(col("o")), lit(0L)).as("n"),
-      count_distinct(col("a")).as("n_a"), count_distinct(col("b")).as("n_b"))
-    def decSum9(c: Column): Column =
-      round(coalesce(sum(c.cast(DecimalType(24, 9))),
-        lit(0).cast(DecimalType(24, 9))).cast("double"), 6)
-    val mi = obs.join(ra, "a").join(cb, "b").crossJoin(broadcast(tot))
-      .select(expr("""ROUND(CAST(o AS DOUBLE) / n *
-        LN(CAST(o AS DOUBLE) * n / (CAST(r AS DOUBLE) * c)), 9)""").as("t"))
-      .agg(decSum9(col("t")).as("mi6"))
-    def entropy(cnts: DataFrame, cn: String, out: String): DataFrame =
-      cnts.crossJoin(broadcast(tot.select(col("n"))))
-        .select(expr(s"""ROUND(-(CAST($cn AS DOUBLE) / n) *
-          LN(CAST($cn AS DOUBLE) / n), 9)""").as("t"))
-        .agg(decSum9(col("t")).as(out))
-    tot.crossJoin(broadcast(mi))
-      .crossJoin(broadcast(entropy(ra, "r", "h_a6")))
-      .crossJoin(broadcast(entropy(cb, "c", "h_b6")))
-      .withColumn("nmi6",
-        expr("""CASE WHEN h_a6 <= 0.0 OR h_b6 <= 0.0 THEN 0.0
-                ELSE ROUND(mi6 / SQRT(h_a6 * h_b6), 6) END"""))
-      .select(col("n"), col("n_a"), col("n_b"), col("mi6"),
-        col("h_a6"), col("h_b6"), col("nmi6"))
-  }
-
-  /** [[kendallTauB]] per key group — the tie-aware association slice
-    * dashboard (is the length↔token relationship still monotone in EVERY
-    * language, or did one slice's re-tokenization break it?). Same
-    * exactness and coarse-score boundedness contract as the global form;
-    * the dense grid densifies per key (a keyed equi-join of the per-key
-    * axis tables — no cross join), every window partitioned by
-    * (keys, one axis), every aggregate and join keyed — zero
-    * SinglePartition. Complete-case on keys and both columns. Output
-    * (one row per key): keys…, n, conc, disc, tie_x_pairs, tie_y_pairs,
-    * tau_b6.
-    */
-  def kendallTauBBy(df: DataFrame, keys: Seq[String], xCol: String,
-      yCol: String): DataFrame = {
-    require(keys.nonEmpty, "kendallTauBBy needs at least one key (use kendallTauB)")
-    val reserved = Set("n", "conc", "disc", "tie_x_pairs", "tie_y_pairs",
-      "tau_b6", "__x", "__y", "__o", "__tx", "__ty", "__cyb", "__cya",
-      "__bb", "__ba", "__conc", "__disc", "__tx2", "__ty2")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
-    import org.apache.spark.sql.expressions.Window
-    val ks = keys.map(col)
-    val base = df.select(ks :+ col(xCol).cast("long").as("__x") :+
-        col(yCol).cast("long").as("__y"): _*)
-      .where(col("__x").isNotNull && col("__y").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
-    val cells = base.groupBy(ks ++ Seq(col("__x"), col("__y")): _*)
-      .agg(count(lit(1)).as("__o"))
-    val dx = cells.groupBy(ks :+ col("__x"): _*).agg(sum(col("__o")).as("__tx"))
-    val dy = cells.groupBy(ks :+ col("__y"): _*).agg(sum(col("__o")).as("__ty"))
-    // per-key dense grid: the axis tables join on the KEYS (equi), so a
-    // slice only densifies against its own values
-    val grid = dx.select(ks :+ col("__x"): _*)
-      .join(dy.select(ks :+ col("__y"): _*), keys)
-      .join(cells, keys ++ Seq("__x", "__y"), "left")
-      .withColumn("__o", coalesce(col("__o"), lit(0L)))
-    val wYup = Window.partitionBy(ks :+ col("__x"): _*).orderBy(col("__y"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wYdn = Window.partitionBy(ks :+ col("__x"): _*).orderBy(col("__y"))
-      .rowsBetween(1, Window.unboundedFollowing)
-    val slice = grid
-      .withColumn("__cyb", coalesce(sum(col("__o")).over(wYup), lit(0L)))
-      .withColumn("__cya", coalesce(sum(col("__o")).over(wYdn), lit(0L)))
-    val wXup = Window.partitionBy(ks :+ col("__y"): _*).orderBy(col("__x"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val dom = slice
-      .withColumn("__bb", coalesce(sum(col("__cyb")).over(wXup), lit(0L)))
-      .withColumn("__ba", coalesce(sum(col("__cya")).over(wXup), lit(0L)))
-    val sums = dom.groupBy(ks: _*).agg(
-      coalesce(sum(col("__o")), lit(0L)).as("n"),
-      coalesce(sum(col("__o").cast(DecimalType(38, 0)) * col("__bb")),
-        lit(0).cast(DecimalType(38, 0))).as("__conc"),
-      coalesce(sum(col("__o").cast(DecimalType(38, 0)) * col("__ba")),
-        lit(0).cast(DecimalType(38, 0))).as("__disc"))
-    val tiesX = dx.groupBy(ks: _*).agg(coalesce(
-      sum(col("__tx").cast(DecimalType(38, 0)) * (col("__tx") - 1)),
-      lit(0).cast(DecimalType(38, 0))).as("__tx2"))
-    val tiesY = dy.groupBy(ks: _*).agg(coalesce(
-      sum(col("__ty").cast(DecimalType(38, 0)) * (col("__ty") - 1)),
-      lit(0).cast(DecimalType(38, 0))).as("__ty2"))
-    sums.join(tiesX, keys).join(tiesY, keys)
-      .select(ks ++ Seq(col("n"),
-        expr("CAST(__conc AS BIGINT)").as("conc"),
-        expr("CAST(__disc AS BIGINT)").as("disc"),
-        expr("CAST(__tx2 DIV 2 AS BIGINT)").as("tie_x_pairs"),
-        expr("CAST(__ty2 DIV 2 AS BIGINT)").as("tie_y_pairs")): _*)
-      .withColumn("tau_b6", expr(
-        """CASE WHEN n < 2
-             OR CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)
-                - tie_x_pairs <= 0
-             OR CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)
-                - tie_y_pairs <= 0 THEN 0.0
-           ELSE ROUND(CAST(conc - disc AS DOUBLE) /
-             (SQRT(CAST(CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)
-                - tie_x_pairs AS DOUBLE)) *
-              SQRT(CAST(CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)
-                - tie_y_pairs AS DOUBLE))), 6) END"""))
-  }
+  def mutualInfo(df: DataFrame, aCol: String, bCol: String): DataFrame =
+    mutualInfoBy(df, Nil, aCol, bCol)
 
   /** [[mutualInfo]] per key group — the metadata-leakage triage SLICED
     * (the dial dashboards actually consume: MI of two metadata columns
@@ -2024,86 +1678,43 @@ object Profile {
     * re-joined on the keys — every aggregate and join keyed, zero
     * SinglePartition, no window. Complete-case on keys and both columns.
     * Output (one row per key): keys…, n, n_a, n_b, mi6, h_a6, h_b6, nmi6.
+    * `keys = Nil` is [[mutualInfo]]: one all-zero row on empty input.
     */
   def mutualInfoBy(df: DataFrame, keys: Seq[String], aCol: String,
       bCol: String): DataFrame = {
-    require(keys.nonEmpty, "mutualInfoBy needs at least one key (use mutualInfo)")
-    val reserved = Set("a", "b", "o", "r", "c", "n", "n_a", "n_b",
-      "mi6", "h_a6", "h_b6", "nmi6", "__t")
-    require(keys.forall(k => !reserved(k)),
-      s"key columns may not collide with internals: ${reserved.mkString("/")}")
+    val nn = Keyed.guard(keys, Set("a", "b", "o", "r", "c", "n", "n_a", "n_b",
+      "mi6", "h_a6", "h_b6", "nmi6", "__t"))
     val ks = keys.map(col)
     val obs = df.select(ks :+ col(aCol).cast("string").as("a") :+
         col(bCol).cast("string").as("b"): _*)
-      .where(col("a").isNotNull && col("b").isNotNull &&
-        ks.map(_.isNotNull).reduce(_ && _))
+      .where(col("a").isNotNull && col("b").isNotNull && nn)
       .groupBy(ks :+ col("a") :+ col("b"): _*).agg(count(lit(1)).as("o"))
     val ra = obs.groupBy(ks :+ col("a"): _*).agg(sum(col("o")).as("r"))
     val cb = obs.groupBy(ks :+ col("b"): _*).agg(sum(col("o")).as("c"))
     val tot = obs.groupBy(ks: _*).agg(
       coalesce(sum(col("o")), lit(0L)).as("n"),
       count_distinct(col("a")).as("n_a"), count_distinct(col("b")).as("n_b"))
+    val totN = Keyed.side(tot.select(ks :+ col("n"): _*), keys)
     def decSum9(c: Column): Column =
       round(coalesce(sum(c.cast(DecimalType(24, 9))),
         lit(0).cast(DecimalType(24, 9))).cast("double"), 6)
     val mi = obs.join(ra, keys :+ "a").join(cb, keys :+ "b")
-      .join(tot.select(ks :+ col("n"): _*), keys)
+      .join(totN, keys)
       .select(ks :+ expr("""ROUND(CAST(o AS DOUBLE) / n *
         LN(CAST(o AS DOUBLE) * n / (CAST(r AS DOUBLE) * c)), 9)""").as("__t"): _*)
       .groupBy(ks: _*).agg(decSum9(col("__t")).as("mi6"))
-    def entropyBy(cnts: DataFrame, cn: String, out: String): DataFrame =
-      cnts.join(tot.select(ks :+ col("n"): _*), keys)
+    def entropy(cnts: DataFrame, cn: String, out: String): DataFrame =
+      Keyed.side(cnts.join(totN, keys)
         .select(ks :+ expr(s"""ROUND(-(CAST($cn AS DOUBLE) / n) *
           LN(CAST($cn AS DOUBLE) / n), 9)""").as("__t"): _*)
-        .groupBy(ks: _*).agg(decSum9(col("__t")).as(out))
-    tot.join(mi, keys)
-      .join(entropyBy(ra, "r", "h_a6"), keys)
-      .join(entropyBy(cb, "c", "h_b6"), keys)
+        .groupBy(ks: _*).agg(decSum9(col("__t")).as(out)), keys)
+    tot.join(Keyed.side(mi, keys), keys)
+      .join(entropy(ra, "r", "h_a6"), keys)
+      .join(entropy(cb, "c", "h_b6"), keys)
       .withColumn("nmi6",
         expr("""CASE WHEN h_a6 <= 0.0 OR h_b6 <= 0.0 THEN 0.0
                 ELSE ROUND(mi6 / SQRT(h_a6 * h_b6), 6) END"""))
       .select(ks ++ Seq(col("n"), col("n_a"), col("n_b"), col("mi6"),
         col("h_a6"), col("h_b6"), col("nmi6")): _*)
-  }
-
-  /** [[ksTwoSample]] over a PRE-AGGREGATED (v, ca, cb) count table — the
-    * incremental form a streaming drift monitor maintains (the
-    * [[bucketDriftFromCounts]] contract). Rows with the same value are
-    * combined, so a delta store may carry duplicates. NULL values are
-    * EXCLUDED (complete-case): a null group would fold into every
-    * cumulative offset via NULLS-FIRST ordering yet never surface as an
-    * argmax candidate (the null-unsafe offsets join drops it), silently
-    * underreporting D when the gap sits at the null mass.
-    */
-  def ksTwoSampleFromCounts(counts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val g = counts.where(col("v").isNotNull).groupBy(col("v"))
-      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-    val stats = g.agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
-    val bucketed = g.crossJoin(broadcast(stats))
-      .withColumn("b", expr("(v - __mn) DIV ((__mx - __mn) DIV 1024 + 1)"))
-      .drop("__mn", "__mx")
-    val wOff = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("b"))
-      .agg(sum(col("ca")).as("ba"), sum(col("cb")).as("bb"))
-      .withColumn("off_a", coalesce(sum(col("ba")).over(wOff), lit(0L)))
-      .withColumn("off_b", coalesce(sum(col("bb")).over(wOff), lit(0L)))
-      .select(col("b"), col("off_a"), col("off_b"))
-    val wLoc = Window.partitionBy(col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = bucketed.join(broadcast(offsets), "b")
-      .withColumn("cum_a", col("off_a") + sum(col("ca")).over(wLoc))
-      .withColumn("cum_b", col("off_b") + sum(col("cb")).over(wLoc))
-    val tot = g.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("d_micro",
-        expr("""CASE WHEN n_a = 0 OR n_b = 0 THEN 0
-                ELSE abs(cum_a * 1000000 DIV n_a - cum_b * 1000000 DIV n_b)
-                END"""))
-      .orderBy(col("d_micro").desc, col("v"))
-      .limit(1)
-      .select(col("v").as("at_value"), col("n_a"), col("n_b"),
-        col("cum_a"), col("cum_b"), col("d_micro"))
   }
 }

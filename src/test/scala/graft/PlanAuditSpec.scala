@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
 
@@ -814,5 +816,86 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"collect() without a declared bound (add `// BOUND: <scale contract>`):\n" +
         offenders.mkString("\n"))
+  }
+
+  /** Every node of AQE's initial plan and of the plans cached under its
+    * in-memory scans (a persisted intermediate hides its exchanges behind
+    * an `InMemoryTableScan`). */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val top = p match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case q => q
+    }
+    top.collect { case n => n } ++
+      top.collect { case i: InMemoryTableScanExec => planNodes(i.relation.cachedPlan) }.flatten
+  }
+
+  test("global eval/drift forms keep their exchanges, SinglePartition exchanges and BNLJs") {
+    // (shuffle exchanges, of them SinglePartition, broadcast exchanges,
+    // BNLJs), recorded when each global form still had a body of its own;
+    // the global form is now its keyed form called with no keys, whose
+    // 1-row side tables are hinted broadcast (Keyed.side). q199 is one
+    // below on each count (parent 9, 4, 4, 3): its totals ride the min/max
+    // aggregate, as the keyed KS always did, instead of a second 1-row
+    // aggregate and crossJoin.
+    val pins = Seq(
+      "q196_binary_auc" -> (8, 4, 7, 6),
+      "q197_calibration" -> (3, 1, 3, 3),
+      "q199_ks_drift" -> (8, 3, 3, 2),
+      "q201_chi_square" -> (9, 1, 3, 2),
+      "q203_spearman" -> (15, 7, 8, 4),
+      "q205_auc_delong" -> (9, 4, 7, 6),
+      "q207_auc_compare" -> (21, 7, 15, 13),
+      "q210_avg_precision" -> (10, 5, 9, 8),
+      "q212_psi_drift" -> (17, 9, 9, 9),
+      "q215_mutual_info" -> (21, 7, 8, 6),
+      "q218_kendall_tau" -> (11, 3, 4, 3),
+      "q219_ap_ci" -> (35, 1, 9, 1),
+      "q225_trend_test" -> (2, 1, 0, 0),
+      "q228_w1_drift" -> (10, 5, 4, 3),
+      "q233_perm_test" -> (5, 4, 3, 3),
+      "q238_perm_test_mean" -> (5, 4, 3, 3))
+    // an in-memory scan of an already-materialized cache reports AQE's
+    // final partitioning (one coalesced partition reads as SinglePartition),
+    // which drops the exchange above it; so plan over a byte-identical copy
+    // of the tables, whose caches no earlier test can have materialized
+    val src = java.nio.file.Paths.get(sfDir)
+    val copy = java.nio.file.Files.createTempDirectory("planaudit-pins")
+    java.nio.file.Files.walk(src).forEach { f =>
+      val to = copy.resolve(src.relativize(f).toString)
+      if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(f, to)
+    }
+    pins.foreach { case (q, want) =>
+      val nodes = planNodes(SparkEntry.queries(q)(spark, copy.toString).queryExecution.executedPlan)
+      val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+      val got = (shuffles.size, shuffles.count(_.outputPartitioning == SinglePartition),
+        nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
+        nodes.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+      assert(got == want, s"$q plans (shuffles, SinglePartition, broadcasts, BNLJs) = $got, pinned $want")
+    }
+  }
+
+  test("split-spread queries plan no round-robin over a 32-split parquet copy") {
+    // Plans.ensureMinPartitions spreads a split-starved scan; over inputs
+    // that already carry enough splits the spread must vanish (the DSv2
+    // side is the windRetrieval case above). q219 spreads inside the
+    // bootstrap expansion, which sits under a persisted relation
+    val dir = java.nio.file.Files.createTempDirectory("planaudit-splits").toString
+    val one = java.nio.file.Files.createTempDirectory("planaudit-one").toString
+    Seq("orders", "events", "documents").foreach { t =>
+      val in = spark.read.parquet(graft.core.Tables.path(sfDir, t))
+      in.repartition(32).write.parquet(graft.core.Tables.path(dir, t))
+      in.coalesce(1).write.parquet(graft.core.Tables.path(one, t))
+      assert(spark.read.parquet(graft.core.Tables.path(dir, t)).rdd.getNumPartitions >= 32)
+    }
+    def plan(q: String, d: String): String =
+      SparkEntry.queries(q)(spark, d).queryExecution.executedPlan.toString
+    Seq("q23_range_join", "q142_interval_join", "q219_ap_ci").foreach { q =>
+      assert(!plan(q, dir).contains("RoundRobinPartitioning"),
+        s"$q re-spreads an input that already plans 32 splits")
+      assert(plan(q, one).contains("RoundRobinPartitioning"),
+        s"$q no longer spreads a single-split input")
+    }
   }
 }
