@@ -795,8 +795,10 @@ object LmOps {
     * fit in a Long difference (micro-unit metrics always do).
     *
     * num2 is carried as DECIMAL(38,0) (nPos·nNeg alone passes BIGINT near
-    * n = 10⁹; the oracle mirrors with HUGEINT). Degenerate inputs (no
-    * positives or no negatives) report auc_micro = 0 rather than NaN.
+    * n = 10⁹; the oracle mirrors with HUGEINT). Rows of one class only
+    * (no positives or no negatives) report auc_micro = 0 rather than NaN;
+    * an empty or all-NULL-score input reports one row of NULLs, counts
+    * included.
     *
     * Scale shape: shuffle volume is the distinct-score cardinality (for
     * micro-rounded bounded metrics ≤ 2·10⁶ + 1 rows), never the corpus;
@@ -1110,9 +1112,11 @@ object LmOps {
     * Integer sums ride DECIMAL(38,0) (p2 ≤ 2n ⇒ p·p2² ≤ 4n³); the final
     * SE/CI are round-6 doubles computed from the exact integers with the
     * IDENTICAL expression text in the oracle (same operand order ⇒ same
-    * doubles). Degenerate inputs (nPos < 2 or nNeg < 2) report se/CI 0.
-    * Output (one row): n, n_pos, n_neg, auc_micro, se6, lo6, hi6 (CI
-    * clamped to [0, 1]).
+    * doubles). Degenerate inputs (nPos < 2 or nNeg < 2) report se6 0 and
+    * lo6 = hi6 = the AUC; an empty or all-NULL-score input reports NULL
+    * counts, auc_micro and se6, with lo6 0.0 and hi6 1.0 (the clamps
+    * around the NULL estimate). Output (one row): n, n_pos, n_neg,
+    * auc_micro, se6, lo6, hi6 (CI clamped to [0, 1]).
     */
   def binaryAucSe(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
     binaryAucSeBy(df, Nil, scoreCol, labelCol)
@@ -1229,7 +1233,8 @@ object LmOps {
     * exact DECIMAL(38,0) sums per label class; SE and z are round-6
     * doubles computed from those integers with identical expression text
     * in the oracle. SE = 0 (identical scorers, or degenerate classes)
-    * reports z6 = 0.
+    * reports z6 = 0. An empty or all-NULL-score input reports NULL counts,
+    * AUCs and diff_micro with se6 = z6 = 0.0.
     *
     * Scale shape: two distinct-score maps (bounded like binaryAuc), two
     * hash joins of the rows against them (shuffle keys are the scores —

@@ -1284,7 +1284,8 @@ object Profile {
     * over buckets observed on BOTH sides — a one-sided bucket has an
     * infinite term, so it is excluded from the sum (the standard
     * epsilon-free treatment) and surfaced: its row stays (term9 NULL)
-    * and n_skipped counts them.
+    * and n_skipped counts them. A group with no rows at all makes every
+    * bucket one-sided and its own shares NULL (psi6 0).
     *
     * Determinism contract: each bucket term is a double computed with
     * IDENTICAL expression text in both engines, rounded to 9 decimals,
@@ -1358,8 +1359,9 @@ object Profile {
       .select(ks ++ Seq(col("bucket"),
         expr(s"__mn + bucket * ((__mx - __mn) DIV $buckets + 1)").as("lo"),
         col("n_a"), col("n_b"),
-        expr("n_a * 1000000 DIV __ta").as("share_a_micro"),
-        expr("n_b * 1000000 DIV __tb").as("share_b_micro"),
+        // a side with no rows has NULL shares, as DuckDB's `//` by zero
+        expr("n_a * 1000000 DIV NULLIF(__ta, 0)").as("share_a_micro"),
+        expr("n_b * 1000000 DIV NULLIF(__tb, 0)").as("share_b_micro"),
         expr("""CASE WHEN n_a > 0 AND n_b > 0 THEN
                   ROUND((CAST(n_a AS DOUBLE) / __ta - CAST(n_b AS DOUBLE) / __tb)
                     * LN(CAST(n_a AS DOUBLE) * __tb / (CAST(n_b AS DOUBLE) * __ta)), 9)

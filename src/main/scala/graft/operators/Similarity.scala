@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -91,12 +91,13 @@ object Similarity {
     * (λ = 1/2 here, so both factors are exact binary halves).
     *
     * Scale shape: [[cosineTopK]] bounds everything downstream at kCand
-    * rows per query — the pairwise sim table is kCand² per query and the
-    * greedy rounds unroll into kOut−1 window+join levels over those
-    * bounded frames, so cost is independent of corpus size once the
-    * candidate scan is done. Every arithmetic step is on 6-rounded
-    * doubles with exact-half λ, so the argmax chain replays
-    * bit-identically in the relational oracle.
+    * rows per query. Each candidate's vector joins once, one grouping
+    * collects each query's (neighbor_id, rel, v) rows, and one [[mmrPicks]]
+    * call per query runs every greedy round: O(kCand²) kernel work per
+    * query, no per-round plan, cache or checkpoint, so building the frame
+    * runs no Spark job. Every arithmetic step is on 6-rounded doubles
+    * with exact-half λ, so the argmax chain replays bit-identically in
+    * the relational oracle.
     *
     * Output: (query_id, neighbor_id, rel, max_sim, mmr, pick) — pick is
     * the selection round (1-based).
@@ -104,71 +105,67 @@ object Similarity {
   def mmrTopK(corpus: DataFrame, queries: DataFrame, kCand: Int, kOut: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(kOut >= 1 && kOut <= kCand, s"kOut $kOut must be in [1, $kCand]")
-    // both frames are read by every unrolled greedy round below — persist
-    // (query-scoped, kCand·|queries| and kCand²·|queries| rows) so the
-    // corpus-wide candidate scan runs ONCE, not once per round per branch
-    val cands = graft.core.CacheLife.scoped(
-      cosineTopK(corpus, queries, kCand, idCol, vecCol)
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim").as("rel"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val withVec = cands.join(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")), "neighbor_id")
-    // candidate-pairwise cosine, kCand² rows per query
-    val sims = graft.core.CacheLife.scoped(
-      withVec.select(col("query_id"), col("neighbor_id"), col("v"))
-        .join(withVec.select(col("query_id"), col("neighbor_id").as("other_id"),
-          col("v").as("w")), Seq("query_id"))
-        .filter(col("neighbor_id") =!= col("other_id"))
-        .select(col("query_id"), col("neighbor_id"), col("other_id"),
-          round(dot(col("v"), col("w"))
-            / (sqrt(norm2(col("v"))) * sqrt(norm2(col("w")))), 6).as("sim"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val wRel = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id").asc)
-    var selected = cands.withColumn("rn", row_number().over(wRel))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("neighbor_id"), col("rel"),
-        lit(0.0).as("max_sim"), lit(1).as("pick"))
-    // `state` = remaining candidates with their RUNNING max similarity to
-    // the picked set — the textbook incremental MMR update. Each round
-    // touches only the LAST pick's sim rows (left join vs a 1-row-per-
-    // query frame + `greatest`) instead of re-aggregating max(sim) over
-    // the whole picked set, which grew the per-round work linearly in t.
-    // Associativity of max over the rounded sims makes the running value
-    // bit-identical to the re-aggregated one. The initial −2.0 sits below
-    // the cosine range so a NEGATIVE best similarity survives the first
-    // greatest() (a 0.0 start silently clamped it — caught by the q140
-    // oracle); after round 2 every remaining candidate carries a real sim.
-    var state = cands.withColumn("max_sim", lit(-2.0))
-    var lastPick = selected.select(col("query_id"), col("neighbor_id").as("other_id"))
-    for (t <- 2 to kOut) {
-      val updated = state
-        .join(lastPick.withColumnRenamed("other_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_anti")
-        .join(sims.join(lastPick, Seq("query_id", "other_id"))
-          .select(col("query_id"), col("neighbor_id"), col("sim")),
-          Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("neighbor_id"), col("rel"),
-          greatest(col("max_sim"), coalesce(col("sim"), lit(-2.0))).as("max_sim"))
-        // `updated` is read three ways (pick window, next round's state,
-        // next anti-join) — truncate lineage HERE, once per round, so the
-        // plan stays linear in t (without it planning dominates wall time:
-        // measured 11.6 s → ~1 s at sf0.1). Same lazy-localCheckpoint
-        // pattern as ConnectedComponents; kCand·|queries| rows. The pick
-        // and selected-union stay lazy views over the checkpointed state.
-        .localCheckpoint(false)
-      val wMmr = Window.partitionBy(col("query_id"))
-        .orderBy((col("rel") * 0.5 - col("max_sim") * 0.5).desc,
-          col("neighbor_id").asc)
-      val pick = updated.withColumn("rn", row_number().over(wMmr))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("neighbor_id"), col("rel"),
-          col("max_sim"), lit(t).as("pick"))
-      selected = selected.unionByName(pick)
-      lastPick = pick.select(col("query_id"), col("neighbor_id").as("other_id"))
-      state = updated
+    val ansi = corpus.sparkSession.sessionState.conf.ansiEnabled
+    val picks = udf { (c: Seq[Row]) =>
+      mmrPicks(c.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))),
+        c.map(r => if (r.isNullAt(2)) null
+          else r.getSeq[Any](2).map(_.asInstanceOf[Number].doubleValue).toArray), kOut, ansi)
     }
-    selected.withColumn("mmr", roundHalfAway(col("rel") * 0.5 - col("max_sim") * 0.5, 6))
+    // sorted by neighbor_id, so the kernel's ties go to the lower index
+    val byQuery = cosineTopK(corpus, queries, kCand, idCol, vecCol)
+      .select(col("query_id"), col("neighbor_id"), col("cos_sim").as("rel"))
+      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")), "neighbor_id")
+      .groupBy(col("query_id"))
+      .agg(sort_array(collect_list(struct(col("neighbor_id"), col("rel"), col("v")))).as("c"))
+    val picked = col("c")(col("p._1"))
+    byQuery.select(col("query_id"), col("c"), explode(picks(col("c"))).as("p"))
+      .select(col("query_id"), picked("neighbor_id").as("neighbor_id"),
+        picked("rel").as("rel"), col("p._2").as("max_sim"), col("p._3").as("pick"))
+      .withColumn("mmr", roundHalfAway(col("rel") * 0.5 - col("max_sim") * 0.5, 6))
+  }
+
+  /** [[mmrTopK]]'s greedy rounds over one query's candidates in neighbor_id
+    * order — rel (None for NULL) and vector (null for NULL) each — as
+    * (candidate index, max_sim, pick), evaluated as Spark evaluates them:
+    *  - sim = round(dot(v, w) / (sqrt(dot(v, v))·sqrt(dot(w, w))), 6), dots
+    *    folded left to right; NULL for a NULL vector, a length mismatch or,
+    *    ANSI off, a zero divisor (ANSI on, that throws, as Spark does);
+    *  - max_sim starts at −2.0, below the cosine range, so a NEGATIVE best
+    *    similarity survives, and each round takes greatest(max_sim,
+    *    coalesce(sim to the last pick, −2.0));
+    *  - round 1 takes the largest rel (max_sim reported 0.0), later rounds
+    *    the largest rel·½ − max_sim·½, in Spark's descending order (NaN
+    *    first, NULL last, −0.0 level with 0.0), ties to the lower index,
+    *    until no candidate is left. */
+  private def mmrPicks(rel: Seq[Option[Double]], vecs: Seq[Array[Double]],
+      kOut: Int, ansi: Boolean): Seq[(Int, Double, Int)] = {
+    def dotD(a: Array[Double], b: Array[Double]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
+    def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+    val nrm = vecs.map(v => if (v == null) Double.NaN else math.sqrt(dotD(v, v)))
+    def sim(i: Int, j: Int): Double =
+      if (vecs(i) == null || vecs(j) == null || vecs(i).length != vecs(j).length) -2.0
+      else if (nrm(i) * nrm(j) != 0.0)
+        Gradients.roundHalfUp(dotD(vecs(i), vecs(j)) / (nrm(i) * nrm(j)), 6)
+      else if (ansi) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero")
+      else -2.0
+    val left = scala.collection.mutable.LinkedHashSet(rel.indices: _*)
+    val maxSim = Array.fill(rel.length)(-2.0)
+    (1 to math.min(kOut, rel.length)).foldLeft(List.empty[(Int, Double, Int)]) { (out, t) =>
+      out.headOption.foreach { case (last, _, _) =>
+        left.foreach { c => val s = sim(c, last); if (cmp(s, maxSim(c)) > 0) maxSim(c) = s }
+      }
+      def key(c: Int): Option[Double] = rel(c).map(r => if (t == 1) r else r * 0.5 - maxSim(c) * 0.5)
+      val best = left.reduce { (a, b) =>
+        (key(a), key(b)) match {
+          case (Some(x), Some(y)) => if (cmp(y, x) > 0) b else a
+          case (None, Some(_)) => b
+          case _ => a
+        }
+      }
+      left -= best
+      (best, if (t == 1) 0.0 else maxSim(best), t) :: out
+    }.reverse
   }
 
   /** `x` rounded to `digits` decimals as the DuckDB oracle rounds a DOUBLE:

@@ -13,13 +13,10 @@ import graft.operators.LmOps
 class EvalEdgeSpec extends SparkSpec {
   import EvalEdgeFixtures._
 
-  private sealed trait Outcome
-  private case class Rows(rows: String*) extends Outcome
-  /** The statistic fails at run time with a division by zero. */
-  private case object Thrown extends Outcome
+  private case class Rows(rows: String*)
 
-  /** statistic → (output columns, edge input → outcome). */
-  private val expected: Map[String, (String, Map[String, Outcome])] = Map(
+  /** statistic → (output columns, edge input → rows). */
+  private val expected: Map[String, (String, Map[String, Rows])] = Map(
     "binaryAuc" -> ("n,n_pos,n_neg,auc_micro,gini_micro", Map(
       "empty" -> Rows("null|null|null|null|null"),
       "allNull" -> Rows("null|null|null|null|null"),
@@ -93,7 +90,10 @@ class EvalEdgeSpec extends SparkSpec {
     "psi" -> ("bucket,lo,n_a,n_b,share_a_micro,share_b_micro,term9,psi6,n_skipped", Map(
       "empty" -> Rows(),
       "allNull" -> Rows(),
-      "oneClass" -> Thrown,
+      // one group only: every bucket is one-sided and group B's shares are
+      // NULL, the rows DuckDB's q212 SQL gives for the same input
+      "oneClass" -> Rows("0|1|5|0|416666|null|null|0.0|3", "1|4|3|0|250000|null|null|0.0|3",
+        "2|7|4|0|333333|null|null|0.0|3"),
       "oneValue" -> Rows("0|5|8|4|1000000|1000000|0.0|0.0|0"))),
     "wasserstein1" -> ("n_a,n_b,n_values,w1_micro", Map(
       "empty" -> Rows(),
@@ -111,17 +111,9 @@ class EvalEdgeSpec extends SparkSpec {
     val inputs = edgeInputs(spark)
     for ((name, f) <- globals; (input, df) <- inputs) {
       val (cols, outcomes) = expected(name)
-      outcomes(input) match {
-        case Thrown =>
-          // psi over a single group: share_b_micro divides by the empty
-          // side's zero total (ANSI DIV); pinned as it stands
-          val e = intercept[Exception](rowsOf(f(df)))
-          assert(e.getMessage.contains("DIVIDE_BY_ZERO"), s"$name/$input: $e")
-        case Rows(rows @ _*) =>
-          val out = f(df)
-          assert(out.columns.mkString(",") == cols, s"$name/$input columns")
-          assert(rowsOf(out) == rows, s"$name/$input")
-      }
+      val out = f(df)
+      assert(out.columns.mkString(",") == cols, s"$name/$input columns")
+      assert(rowsOf(out) == outcomes(input).rows, s"$name/$input")
     }
   }
 

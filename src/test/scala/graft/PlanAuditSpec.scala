@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -66,11 +67,10 @@ class PlanAuditSpec extends SparkSpec {
     // frames (plain totals × distinct counts × dup count) — bounded at
     // one row each by construction
     "q187_dataset_card",
-    // q140: the pick-1 candidate scan scores the corpus against the
-    // broadcast 3-query set — the audited q38 few-queries BNLJ shape
-    // (Similarity.cosineTopK). Visible again since the incremental MMR
-    // rewrite checkpoints only the per-round state, leaving the selected
-    // union (and round 1's candidate plan) lazy.
+    // q140: the candidate scan scores the corpus against the broadcast
+    // 3-query set — the audited q38 few-queries BNLJ shape
+    // (Similarity.cosineTopK); the greedy rounds run in one kernel call per
+    // query over the kCand-bounded candidates
     "q140_mmr_diversify",
     // q66: the per-stratum rate table crossJoins a broadcast grand-total
     // BOUNDED at 1 row (TextOps.mixtureEpochs)
@@ -221,6 +221,31 @@ class PlanAuditSpec extends SparkSpec {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.queryExecution.executedPlan.toString
   }
+
+  /** Runs `f` over a byte-identical copy of the tables in a new directory,
+    * deleted afterwards. An in-memory scan of an already-materialized cache
+    * reports AQE's final partitioning (one coalesced partition reads as
+    * SinglePartition), which drops the exchange above it; plans over a fresh
+    * copy read no cache that an earlier test or suite can have materialized,
+    * so exchange counts over it cannot pass on a warmed cache. */
+  private def withFreshTables[T](f: String => T): T = {
+    import java.nio.file.{Files, Path}
+    val src = java.nio.file.Paths.get(sfDir)
+    val copy = Files.createTempDirectory("planaudit-fresh")
+    def walk(root: Path): Seq[Path] = {
+      val s = Files.walk(root)
+      try s.toArray.toSeq.map(_.asInstanceOf[Path]) finally s.close()
+    }
+    walk(src).foreach { p =>
+      val to = copy.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+    try f(copy.toString) finally walk(copy).reverse.foreach(Files.delete)
+  }
+
+  /** `name`'s executed plan over fresh tables ([[withFreshTables]]). */
+  private def coldPlan(name: String): SparkPlan =
+    withFreshTables(d => SparkEntry.queries(name)(spark, d).queryExecution.executedPlan)
 
   test("no registered query plans a CartesianProduct") {
     SparkEntry.queries.keys.foreach { name =>
@@ -384,7 +409,7 @@ class PlanAuditSpec extends SparkSpec {
     // over the tiny bucket-count table. A regression to a bare global
     // row_number window would plan a second SinglePartition exchange over
     // the DATA — the 10M-row one-task cliff the operator exists to avoid.
-    val plan = planOf("q179_sorted_neighborhood")
+    val plan = coldPlan("q179_sorted_neighborhood").toString
     // every row_number window must partition by the range bucket — a bare
     // global row_number (empty partition spec) is the regression
     val rnSpecs = "row_number\\(\\) windowspecdefinition\\(([^,]*)".r
@@ -478,7 +503,7 @@ class PlanAuditSpec extends SparkSpec {
     // only SinglePartition exchange sits under the ≤257-row bucket-total
     // offset window. A regression to a bare global running-sum window
     // would put the corpus itself through one task.
-    val plan = planOf("q195_budget_select")
+    val plan = coldPlan("q195_budget_select").toString
     val single = """Exchange SinglePartition[^\[]*\[plan_id=(\d+)\]""".r
       .findAllMatchIn(plan).map(_.group(1)).toSet.size
     assert(single <= 1, s"q195 plans $single SinglePartition exchanges — " +
@@ -509,7 +534,7 @@ class PlanAuditSpec extends SparkSpec {
     Seq(("q196_binary_auc", "ng", 4), ("q199_ks_drift", "ca", 4),
         ("q210_avg_precision", "p", 5)).foreach {
       case (q, cumCol, maxSingle) =>
-        val plan = planOf(q)
+        val plan = coldPlan(q).toString
         val single = """Exchange SinglePartition[^\[]*\[plan_id=(\d+)\]""".r
           .findAllMatchIn(plan).map(_.group(1)).toSet.size
         assert(single <= maxSingle, s"$q plans $single SinglePartition exchanges — " +
@@ -525,32 +550,32 @@ class PlanAuditSpec extends SparkSpec {
     // q209: BOTH scorers' placement maps and the final covariance
     // aggregate are per-source — zero SinglePartition anywhere (the
     // binaryAucCompareBy contract; slices only add parallelism)
-    val p209 = planOf("q209_auc_compare_by_source")
+    val p209 = coldPlan("q209_auc_compare_by_source").toString
     assert(!p209.contains("Exchange SinglePartition"),
       "q209 plans a SinglePartition exchange — the keyed paired DeLong regressed")
     // q213: per-key AP — same zero-SinglePartition contract as q202/q209
-    assert(!planOf("q213_ap_by_source").contains("Exchange SinglePartition"),
+    assert(!coldPlan("q213_ap_by_source").toString.contains("Exchange SinglePartition"),
       "q213 plans a SinglePartition exchange — the keyed AP regressed")
     // q216: per-key AUC±CI — keyed placements, no row join, no
     // SinglePartition (the binaryAucSeBy contract)
-    assert(!planOf("q216_group_auc_ci").contains("Exchange SinglePartition"),
+    assert(!coldPlan("q216_group_auc_ci").toString.contains("Exchange SinglePartition"),
       "q216 plans a SinglePartition exchange — the keyed AUC-CI regressed")
     // q211: per-key bins + per-key Brier/ECE — same zero-SinglePartition
     // contract (calibrationReportBy has no window at all)
-    val p211 = planOf("q211_calibration_by_source")
+    val p211 = coldPlan("q211_calibration_by_source").toString
     assert(!p211.contains("Exchange SinglePartition"),
       "q211 plans a SinglePartition exchange — the keyed calibration regressed")
     assert(!p211.contains("Window"), "q211 must not plan a window")
     // q208: the returned frame is literal-built from the bounded collected
     // (source, bin) table — consuming it re-runs no corpus work (the
     // single-scan isotonic contract)
-    val p208 = planOf("q208_isotonic_by_source")
+    val p208 = coldPlan("q208_isotonic_by_source").toString
     assert(p208.contains("LocalTableScan") && !p208.contains("Exchange"),
       "q208 output is not literal-built from the collected bin table")
     // q217: per-key MI — keyed observed-cell tables and marginals only,
     // zero SinglePartition, no BNLJ (the q215 crossJoins become keyed
     // equi-joins in mutualInfoBy), no window
-    val p217 = planOf("q217_mutual_info_by_lang")
+    val p217 = coldPlan("q217_mutual_info_by_lang").toString
     assert(!p217.contains("Exchange SinglePartition"),
       "q217 plans a SinglePartition exchange — the keyed MI regressed")
     assert(!p217.contains("BroadcastNestedLoopJoin"),
@@ -559,7 +584,7 @@ class PlanAuditSpec extends SparkSpec {
     // q220: per-key AP±CI — the bootstrap resample id rides as one more
     // key through the same machinery; zero SinglePartition, zero BNLJ
     // (the global form q219 keeps the audited 1-row crossJoins instead)
-    val p220 = planOf("q220_ap_ci_by_source")
+    val p220 = coldPlan("q220_ap_ci_by_source").toString
     assert(!p220.contains("Exchange SinglePartition"),
       "q220 plans a SinglePartition exchange — the keyed AP-CI regressed")
     assert(!p220.contains("BroadcastNestedLoopJoin"),
@@ -567,7 +592,7 @@ class PlanAuditSpec extends SparkSpec {
     // q221: per-key τ-b — per-key dense grids via keyed equi-joins (the
     // global form q218 crossJoins instead), keyed windows, zero
     // SinglePartition, zero BNLJ
-    val p221 = planOf("q221_kendall_by_lang")
+    val p221 = coldPlan("q221_kendall_by_lang").toString
     assert(!p221.contains("Exchange SinglePartition"),
       "q221 plans a SinglePartition exchange — the keyed tau-b regressed")
     assert(!p221.contains("BroadcastNestedLoopJoin"),
@@ -575,7 +600,7 @@ class PlanAuditSpec extends SparkSpec {
     // q222: per-key χ² — per-key cell grids via keyed equi-joins (the
     // global form q201 crossJoins instead), no window, zero
     // SinglePartition, zero BNLJ
-    val p222 = planOf("q222_chi_square_by_lang")
+    val p222 = coldPlan("q222_chi_square_by_lang").toString
     assert(!p222.contains("Exchange SinglePartition"),
       "q222 plans a SinglePartition exchange — the keyed chi-square regressed")
     assert(!p222.contains("BroadcastNestedLoopJoin"),
@@ -585,7 +610,7 @@ class PlanAuditSpec extends SparkSpec {
     // (key) / (key, bucket)), keyed rank re-attach joins, zero
     // SinglePartition, zero BNLJ (the global form q203 crossJoins its
     // 1-row stats instead)
-    val p223 = planOf("q223_spearman_by_lang")
+    val p223 = coldPlan("q223_spearman_by_lang").toString
     assert(!p223.contains("Exchange SinglePartition"),
       "q223 plans a SinglePartition exchange — the keyed spearman regressed")
     assert(!p223.contains("BroadcastNestedLoopJoin"),
@@ -593,7 +618,7 @@ class PlanAuditSpec extends SparkSpec {
     // q230: per-key trend test — one keyed groupBy over the (key × band)
     // table then a keyed aggregate: no window, no join of any kind, zero
     // SinglePartition
-    val p230 = planOf("q230_trend_by_source")
+    val p230 = coldPlan("q230_trend_by_source").toString
     assert(!p230.contains("Exchange SinglePartition"),
       "q230 plans a SinglePartition exchange — the keyed trend regressed")
     assert(!p230.contains("BroadcastNestedLoopJoin") &&
@@ -603,7 +628,7 @@ class PlanAuditSpec extends SparkSpec {
     // q235: per-key randomization test — per-key coin thresholds attach
     // by keyed equi-joins (the global form q233 crossJoins 1-row frames
     // instead), keyed aggregates only, zero SinglePartition, zero BNLJ
-    val p235 = planOf("q235_perm_test_by_lang")
+    val p235 = coldPlan("q235_perm_test_by_lang").toString
     assert(!p235.contains("Exchange SinglePartition"),
       "q235 plans a SinglePartition exchange — the keyed perm test regressed")
     assert(!p235.contains("BroadcastNestedLoopJoin"),
@@ -611,7 +636,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p235.contains("Window"), "q235 must not plan a window")
     // q239: the mean twin of q235 — same keyed md5-coin machinery, per-
     // key thresholds by equi-join, zero SinglePartition, zero BNLJ
-    val p239 = planOf("q239_perm_test_mean_by_lang")
+    val p239 = coldPlan("q239_perm_test_mean_by_lang").toString
     assert(!p239.contains("Exchange SinglePartition"),
       "q239 plans a SinglePartition exchange — the keyed mean perm test regressed")
     assert(!p239.contains("BroadcastNestedLoopJoin"),
@@ -620,7 +645,7 @@ class PlanAuditSpec extends SparkSpec {
     // q232: per-key W1 — per-key min/max buckets, keyed offset/local/lead
     // windows, keyed totals join, zero SinglePartition, zero BNLJ (the
     // global form q228 crossJoins its 1-row frames instead)
-    val p232 = planOf("q232_w1_by_lang")
+    val p232 = coldPlan("q232_w1_by_lang").toString
     assert(!p232.contains("Exchange SinglePartition"),
       "q232 plans a SinglePartition exchange — the keyed W1 regressed")
     assert(!p232.contains("BroadcastNestedLoopJoin"),
@@ -628,7 +653,7 @@ class PlanAuditSpec extends SparkSpec {
     // q231: per-key bucketed AP-CI — the scoreBuckets min/max attaches by
     // a KEYED equi-join (per-key grids, not a global 1-row crossJoin), so
     // the keyed-machinery guarantees hold with the knob on too
-    val p231 = planOf("q231_ap_ci_bucketed")
+    val p231 = coldPlan("q231_ap_ci_bucketed").toString
     assert(!p231.contains("Exchange SinglePartition"),
       "q231 plans a SinglePartition exchange — the bucketed keyed AP-CI regressed")
     assert(!p231.contains("BroadcastNestedLoopJoin"),
@@ -818,6 +843,33 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  /** `body`'s value and the number of Spark jobs it ran, counted between two
+    * marker jobs: the listener bus is asynchronous, so the count is taken
+    * once the closing marker's start has been delivered. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(m: String): Unit = {
+      sc.setJobDescription(m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("jobsDuring-open")
+      val out = body
+      marker("jobsDuring-close")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains("jobsDuring-close") && System.nanoTime() < deadline) Thread.sleep(10)
+      val s = seen.toArray.toSeq
+      assert(s.contains("jobsDuring-close"), "the closing marker job never reached the listener")
+      (out, s.indexOf("jobsDuring-close") - s.indexOf("jobsDuring-open") - 1)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Every node of AQE's initial plan and of the plans cached under its
     * in-memory scans (a persisted intermediate hides its exchanges behind
     * an `InMemoryTableScan`). */
@@ -855,25 +907,31 @@ class PlanAuditSpec extends SparkSpec {
       "q228_w1_drift" -> (10, 5, 4, 3),
       "q233_perm_test" -> (5, 4, 3, 3),
       "q238_perm_test_mean" -> (5, 4, 3, 3))
-    // an in-memory scan of an already-materialized cache reports AQE's
-    // final partitioning (one coalesced partition reads as SinglePartition),
-    // which drops the exchange above it; so plan over a byte-identical copy
-    // of the tables, whose caches no earlier test can have materialized
-    val src = java.nio.file.Paths.get(sfDir)
-    val copy = java.nio.file.Files.createTempDirectory("planaudit-pins")
-    java.nio.file.Files.walk(src).forEach { f =>
-      val to = copy.resolve(src.relativize(f).toString)
-      if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(to)
-      else java.nio.file.Files.copy(f, to)
-    }
     pins.foreach { case (q, want) =>
-      val nodes = planNodes(SparkEntry.queries(q)(spark, copy.toString).queryExecution.executedPlan)
+      val nodes = planNodes(coldPlan(q))
       val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
       val got = (shuffles.size, shuffles.count(_.outputPartitioning == SinglePartition),
         nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
         nodes.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
       assert(got == want, s"$q plans (shuffles, SinglePartition, broadcasts, BNLJs) = $got, pinned $want")
     }
+  }
+
+  test("q140 builds without running a Spark job of its own and plans no checkpointed scan") {
+    // MMR's greedy rounds run in one kernel call per query; the unrolled
+    // rounds they replaced localCheckpoint-ed each round's state, which ran
+    // that round's stages while the frame was still being built
+    assert(jobsDuring(spark.sparkContext.parallelize(1 to 3).count())._2 == 1,
+      "the job count misses a job")
+    val (plan, jobs, readJobs) = withFreshTables { d =>
+      val readJobs = jobsDuring(graft.core.Tables.load(spark, d, "embeddings"))._2
+      val (df, n) = jobsDuring(SparkEntry.queries("q140_mmr_diversify")(spark, d))
+      (df.queryExecution.executedPlan, n, readJobs)
+    }
+    // reading a parquet table infers its schema in a job; q140 runs no other
+    assert(jobs == readJobs, s"building q140 ran $jobs Spark jobs, reading its table $readJobs")
+    val scans = planNodes(plan).collect { case r: RDDScanExec => r.nodeName }
+    assert(scans.isEmpty, s"q140 plans checkpointed scans: $scans")
   }
 
   test("split-spread queries plan no round-robin over a 32-split parquet copy") {
