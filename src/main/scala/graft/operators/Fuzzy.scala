@@ -148,16 +148,9 @@ object Fuzzy {
     * thresholded comparisons per task).
     */
   def blockedLevenshteinPairs(strings: DataFrame, blkCol: String,
-      strCol: String, maxDist: Int, hotBlockThreshold: Int = 5000): DataFrame = {
-    val a = strings.select(col(blkCol).as("__blk"), col(strCol).as("str_a")).distinct()
-    val b = strings.select(col(blkCol).as("__blk"), col(strCol).as("str_b")).distinct()
-    saltedBlockJoin(a, b, hotBlockThreshold)
-      .filter(col("str_a") < col("str_b"))
-      .withColumn("lev_dist", levenshtein(col("str_a"), col("str_b"), maxDist))
-      .filter(col("lev_dist") >= 0)
-      .select(col("str_a"), col("str_b"), col("lev_dist"),
-        round(expr("jaro_winkler(str_a, str_b)"), 6).as("jw_sim"))
-  }
+      strCol: String, maxDist: Int, hotBlockThreshold: Int = 5000): DataFrame =
+    levenshteinLinks(strings, strings, blkCol, strCol, maxDist,
+      hotBlockThreshold, col("str_a") < col("str_b"))
 
   /** Two-table record linkage — the A×B variant of
     * [[blockedLevenshteinPairs]]: rows of `left` and `right` (each with
@@ -168,10 +161,18 @@ object Fuzzy {
     * per side on the block key) and the same automatic hot-block salting.
     */
   def blockedLevenshteinJoin(left: DataFrame, right: DataFrame, blkCol: String,
-      strCol: String, maxDist: Int, hotBlockThreshold: Int = 5000): DataFrame = {
+      strCol: String, maxDist: Int, hotBlockThreshold: Int = 5000): DataFrame =
+    levenshteinLinks(left, right, blkCol, strCol, maxDist, hotBlockThreshold, lit(true))
+
+  /** The one body of both joins. `keep` filters the candidate pairs BEFORE
+    * the thresholded levenshtein, so it leads the join condition: the
+    * self-join's `str_a < str_b` skips half of the DP work. */
+  private def levenshteinLinks(left: DataFrame, right: DataFrame, blkCol: String,
+      strCol: String, maxDist: Int, hotBlockThreshold: Int, keep: Column): DataFrame = {
     val a = left.select(col(blkCol).as("__blk"), col(strCol).as("str_a")).distinct()
     val b = right.select(col(blkCol).as("__blk"), col(strCol).as("str_b")).distinct()
     saltedBlockJoin(a, b, hotBlockThreshold)
+      .filter(keep)
       .withColumn("lev_dist", levenshtein(col("str_a"), col("str_b"), maxDist))
       .filter(col("lev_dist") >= 0)
       .select(col("str_a"), col("str_b"), col("lev_dist"),
@@ -207,11 +208,6 @@ object Fuzzy {
       shiftleft(shiftright(col(hashCols(j / 64)), j % 64).bitwiseAND(lit(1L)), k)
     }.reduce(_ + _)
 
-  private def bandStructs(hashCols: Seq[String], bits: Int,
-      bands: Int): Column =
-    explode(array((0 until bands).map(bi =>
-      struct(lit(bi).as("bi"), bandValue(hashCols, bits, bands, bi).as("bv"))): _*))
-
   /** Explode each row into `bands` rows carrying (`__bi`, `__bv`): the
     * band index and the band's bit-INTERLEAVED value. All input columns
     * pass through — the shared banding of [[hammingNearDupPairs]] and the
@@ -219,22 +215,22 @@ object Fuzzy {
     * be computed identically across batches). */
   def bandedHashes(hashes: DataFrame, hashCol: String, bits: Int,
       bands: Int): DataFrame = {
-    require(bands <= bits, s"more bands ($bands) than bits ($bits)")
     require(bits <= 64, s"$bits bits exceed one word — use bandedHashesWide")
-    hashes.withColumn("__b", bandStructs(Seq(hashCol), bits, bands))
-      .withColumn("__bi", col("__b.bi"))
-      .withColumn("__bv", col("__b.bv"))
-      .drop("__b")
+    banded(hashes, Seq(hashCol), bits, bands)
   }
 
   /** Multi-word twin of [[bandedHashes]] for fingerprints spanning
     * several BIGINT columns — same band family (global bit j → band
     * j % bands), same output contract. */
   def bandedHashesWide(hashes: DataFrame, hashCols: Seq[String],
+      bands: Int): DataFrame =
+    banded(hashes, hashCols, 64 * hashCols.size, bands)
+
+  private def banded(hashes: DataFrame, hashCols: Seq[String], bits: Int,
       bands: Int): DataFrame = {
-    val bits = 64 * hashCols.size
     require(bands <= bits, s"more bands ($bands) than bits ($bits)")
-    hashes.withColumn("__b", bandStructs(hashCols, bits, bands))
+    hashes.withColumn("__b", explode(array((0 until bands).map(bi =>
+        struct(lit(bi).as("bi"), bandValue(hashCols, bits, bands, bi).as("bv"))): _*)))
       .withColumn("__bi", col("__b.bi"))
       .withColumn("__bv", col("__b.bv"))
       .drop("__b")

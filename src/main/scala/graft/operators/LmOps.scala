@@ -756,7 +756,7 @@ object LmOps {
     * score, map-side combinable. Complete-case on the score and, through
     * `nn` (the [[Keyed.guard]] filter), on the keys: an unscored row carries
     * no ranking information. */
-  private def scoreCounts(df: DataFrame, keys: Seq[String], scoreCol: String,
+  private[graft] def scoreCounts(df: DataFrame, keys: Seq[String], scoreCol: String,
       labelCol: String, nn: Column): DataFrame = {
     val ks = keys.map(col)
     df.select(ks :+ col(scoreCol).cast("long").as("score") :+

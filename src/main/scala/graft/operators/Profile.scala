@@ -1163,7 +1163,7 @@ object Profile {
     * monitors keep (KS, PSI, W1, JS and the W1 attribution all read it).
     * Complete-case on the value and, through `nn` (the [[Keyed.guard]]
     * filter), on the keys. */
-  private def valueCounts(df: DataFrame, keys: Seq[String], valueCol: String,
+  private[graft] def valueCounts(df: DataFrame, keys: Seq[String], valueCol: String,
       groupCol: String, groupA: String, groupB: String, nn: Column): DataFrame = {
     val ks = keys.map(col)
     df.filter(col(groupCol).isin(groupA, groupB))

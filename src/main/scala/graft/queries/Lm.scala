@@ -713,9 +713,9 @@ object Lm {
     * (dedup-adjacent: near-identical passages waste training-context
     * slots): greedily pick 5 of the cosine top-20 per query, each round
     * maximizing ½·rel − ½·max-sim-to-already-picked. Everything after
-    * the candidate scan is k-bounded per query (20² pairwise sims, four
-    * unrolled window+join rounds), so the diversification cost is
-    * independent of corpus size; the oracle replays the greedy argmax
+    * the candidate scan is k-bounded per query (20² pairwise sims, every
+    * greedy round in one kernel call per query), so the diversification
+    * cost is independent of corpus size; the oracle replays the greedy argmax
     * chain as a generated 5-level CTE cascade (the q137 pattern) on the
     * same 6-rounded doubles with exact-half λ.
     */

@@ -3,12 +3,37 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.storage.StorageLevel
+import graft.operators.{Kll, LmOps, Profile, Sketches}
 
 /** Structured Streaming surface (SURVEY.md §7.1 pipeline/): the reference is
   * strictly batch per-scene; this wraps the same transformations for
   * continuous ingestion — file-source micro-batches for scene Parquet dirs
   * and an event stream with watermarked tumbling windows + custom session
   * state via mapGroupsWithState.
+  *
+  * Every per-batch entry point starts through [[startBatches]]. The
+  * stateful ones keep their state in batch_id-partitioned store TABLES, not
+  * in a checkpoint, under one protocol per micro-batch N:
+  *  1. prune: delete store partitions below the retention horizon
+  *     N − `retainBatches` (nothing for [[Unbounded]]);
+  *  2. delta: build batch N's own store rows;
+  *  3. read: the committed partitions strictly before N (inside the
+  *     horizon) ∪ the delta;
+  *  4. emit: overwrite `outDir/batch_id=N` with what they compute;
+  *  5. admit: overwrite the store's own `batch_id=N` partition with the
+  *     delta.
+  * A retried batch N prunes the same partitions, reads the same ones (its
+  * own half-written partition is not strictly before N) and replaces,
+  * never duplicates, its output and store rows: exactly-once per batch.
+  * Per-batch cost is O(window), not O(stream length). Store paths resolve
+  * through the Hadoop FileSystem API, so stores may live on HDFS/S3 and
+  * compact with [[compactStore]]. The count-delta monitors (HLL, quantile,
+  * heavy hitters, AUC, AP, KS, PSI, W1, JS, χ², calibration, τ-b, isotonic,
+  * k-anonymity, bucket drift) are each a delta and an emit run by
+  * [[storeStep]]; the other stateful streams (near-dup, curation,
+  * line-dedup, packing, funnel, as-of, SCD2, …) spell the steps out over
+  * their own stores.
   */
 object Streaming {
 
@@ -28,7 +53,10 @@ object Streaming {
 
   /** `retainBatches` contract: positive sliding window or the explicit
     * [[Unbounded]] sentinel. 0 is rejected — it used to silently mean
-    * unbounded, the exact foot-gun a finite default exists to remove. */
+    * unbounded, the exact foot-gun a finite default exists to remove.
+    * Starters check it (and their other parameters) before the stream
+    * starts, so a bad argument never surfaces only inside the first
+    * micro-batch. */
   private def checkRetain(retainBatches: Int): Unit =
     require(retainBatches > 0 || retainBatches == Unbounded,
       s"retainBatches must be a positive window or Streaming.Unbounded (-1); got $retainBatches")
@@ -138,13 +166,8 @@ object Streaming {
     * and retention/compaction is an operational policy on the table (vs
     * a state store that grows inside a checkpoint forever).
     *
-    * Exactly-once under retries: every write (pairs, bucket rows, vector
-    * rows) lands in a hive-style `batch_id=<id>` partition that the batch
-    * OVERWRITES, and the store reads only partitions with a strictly
-    * smaller batch_id — so a failed/restarted micro-batch re-executes
-    * against exactly its original inputs and replaces (never duplicates)
-    * its own output. Store paths resolve through the Hadoop FileSystem
-    * API, so `storeDir` may live on HDFS/S3, not just the local disk.
+    * Store protocol (exactly-once under retries): [[Streaming]]; the
+    * pairs, bucket rows and vector rows are each batch_id-partitioned.
     *
     * Retention: `retainBatches` keeps a sliding window of that many
     * prior batches (default [[DefaultRetainBatches]]): older partitions
@@ -159,17 +182,10 @@ object Streaming {
       checkpoint: String, threshold: Double, planes: Int, bands: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
-    // fail fast: a bad retainBatches would otherwise only surface as a
-    // runtime crash inside the first foreachBatch
     checkRetain(retainBatches)
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNearDupBatch(batch, batchId, outDir, storeDir, threshold,
-          planes, bands, idCol, vecCol, retainBatches)
-      }
-      .start()
+    startBatches(vectors, checkpoint)(
+      processNearDupBatch(_, _, outDir, storeDir, threshold, planes, bands, idCol,
+        vecCol, retainBatches))
   }
 
   /** Committed rows of an idempotent batch-partitioned store table:
@@ -217,6 +233,34 @@ object Streaming {
           fs.delete(st.getPath, true)
       }
     }
+
+  /** The one stream starter: `step` runs on every micro-batch of `rows`
+    * (append mode), with progress in `checkpoint`. */
+  private def startBatches(rows: DataFrame, checkpoint: String)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(step)
+      .start()
+
+  /** One micro-batch N of a count-delta monitor under the store protocol
+    * (see [[Streaming]]): prune `store` to the `retainBatches` window,
+    * write `emit(committed ∪ delta)` to `outDir/batch_id=N`, then admit
+    * `delta` as the store's own partition. The delta is persisted because
+    * both the emit and the store write read it. */
+  private def storeStep(batchId: Long, store: String, outDir: String,
+      retainBatches: Int)(delta: DataFrame)(emit: DataFrame => DataFrame): Unit = {
+    val spark = delta.sparkSession
+    val horizon = horizonOf(batchId, retainBatches)
+    pruneStore(spark, store, horizon)
+    val mine = delta.persist(StorageLevel.MEMORY_AND_DISK)
+    emit(committedOr(spark, store, batchId, mine.limit(0), horizon).unionByName(mine))
+      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    mine.write.mode("overwrite").parquet(s"$store/batch_id=$batchId")
+    mine.unpersist()
+    ()
+  }
 
   /** One micro-batch of [[embeddingNearDupStream]] — package-private so the
     * idempotency contract (same batchId twice ⇒ identical store + pairs)
@@ -278,23 +322,16 @@ object Streaming {
     * holds every admitted band row inside the retention window; pass
     * [[Unbounded]] to make that window the whole stream).
     *
-    * Same exactly-once contract as [[embeddingNearDupStream]]: state is a
-    * batch_id-partitioned table, retries overwrite their own partition,
-    * store reads see only strictly-earlier batches.
+    * Store protocol: [[Streaming]].
     */
   def fingerprintNearDupStream(hashes: DataFrame, outDir: String,
       storeDir: String, checkpoint: String, bits: Int, bands: Int,
       maxHamming: Int, idCol: String = "media_id",
       hashCol: String = "dhash", retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    hashes.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processFingerprintBatch(batch, batchId, outDir, storeDir, bits,
-          bands, maxHamming, idCol, hashCol, retainBatches)
-      }
-      .start()
+    startBatches(hashes, checkpoint)(
+      processFingerprintBatch(_, _, outDir, storeDir, bits, bands, maxHamming,
+        idCol, hashCol, retainBatches))
   }
 
   private[graft] def processFingerprintBatch(batch: DataFrame, batchId: Long,
@@ -347,26 +384,18 @@ object Streaming {
     * and append to `outDir` as (doc_a, doc_b, jaccard) with doc_a the
     * earlier-seen side.
     *
-    * Same production shape, exactly-once contract, AND retention
-    * contract as [[embeddingNearDupStream]]: state in tables
-    * (`storeDir/bands`, `storeDir/shingles`), every write
-    * batch_id-partitioned and overwritten on retry, store reads only
-    * strictly-earlier partitions inside the `retainBatches` window
-    * (finite by default; [[Unbounded]] opts in to full history).
+    * Same production shape and retention as [[embeddingNearDupStream]],
+    * over the `storeDir/bands` and `storeDir/shingles` stores; store
+    * protocol: [[Streaming]].
     */
   def textNearDupStream(docs: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, threshold: Double, numHashes: Int = 16, rows: Int = 4,
       idCol: String = "doc_id", textCol: String = "text",
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processTextNearDupBatch(batch, batchId, outDir, storeDir, threshold,
-          numHashes, rows, idCol, textCol, retainBatches)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processTextNearDupBatch(_, _, outDir, storeDir, threshold, numHashes, rows,
+        idCol, textCol, retainBatches))
   }
 
   /** One micro-batch of [[textNearDupStream]] (see [[processNearDupBatch]]
@@ -423,13 +452,8 @@ object Streaming {
   def packStream(docs: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, seqLen: Int,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPackBatch(batch, batchId, outDir, storeDir, seqLen, idCol, textCol)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processPackBatch(_, _, outDir, storeDir, seqLen, idCol, textCol))
 
   /** One micro-batch of [[packStream]] — package-private for direct
     * idempotency testing (same batchId twice ⇒ identical output + store). */
@@ -476,16 +500,11 @@ object Streaming {
   def decontaminateStream(docs: DataFrame, evalHashes: DataFrame,
       outDir: String, checkpoint: String, minFrac: Double = 0.1,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextOps
-          .decontaminateAgainst(batch, evalHashes, minFrac, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      graft.operators.TextOps
+        .decontaminateAgainst(batch, evalHashes, minFrac, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
 
   /** Streaming WARC crawl ingest — the front door of the streaming
     * curation pipeline: watch a directory for landing `.warc.gz` crawl
@@ -574,13 +593,8 @@ object Streaming {
   def removeDupSpansStream(docs: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, n: Int = 10,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processRemoveSpansBatch(batch, batchId, outDir, storeDir, n, idCol, textCol)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processRemoveSpansBatch(_, _, outDir, storeDir, n, idCol, textCol))
 
   /** One micro-batch of [[removeDupSpansStream]] — package-private so the
     * idempotency and cross-batch contracts are directly testable. */
@@ -610,16 +624,11 @@ object Streaming {
   def dsirScoreStream(docs: DataFrame, weights: DataFrame,
       outDir: String, checkpoint: String, buckets: Int = 8192,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextOps
-          .dsirScoreAgainst(batch, weights, buckets, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      graft.operators.TextOps
+        .dsirScoreAgainst(batch, weights, buckets, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
 
   /** Streaming WEIGHTED sampling — the ingest-time twin of
     * TextOps.weightedSample, i.e. a distributed weighted reservoir: the
@@ -635,14 +644,8 @@ object Streaming {
   def weightedSampleStream(docs: DataFrame, weight: Column, k: Int,
       outDir: String, storeDir: String, checkpoint: String,
       idCol: String = "doc_id"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processWeightedSampleBatch(batch, batchId, weight, k, outDir,
-          storeDir, idCol)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processWeightedSampleBatch(_, _, weight, k, outDir, storeDir, idCol))
 
   /** One micro-batch of [[weightedSampleStream]] — package-private for
     * direct idempotency testing. */
@@ -702,15 +705,9 @@ object Streaming {
       idCol: String = "doc_id", textCol: String = "text",
       retainBatches: Int = Unbounded): StreamingQuery = {
     checkRetain(retainBatches)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCurationBatch(batch, batchId, evalHashes, outDir, storeDir,
-          jaccardThreshold, contamMinFrac, sampleRates, defaultRate, idCol,
-          textCol, retainBatches)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processCurationBatch(_, _, evalHashes, outDir, storeDir, jaccardThreshold,
+        contamMinFrac, sampleRates, defaultRate, idCol, textCol, retainBatches))
   }
 
   /** One micro-batch of [[curationDecisionStream]] — package-private for
@@ -821,14 +818,8 @@ object Streaming {
   def bloomDedupStream(docs: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, expectedKeys: Long = 10000000L, fpp: Double = 0.01,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBloomBatch(batch, batchId, outDir, storeDir, expectedKeys,
-          fpp, idCol, textCol)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processBloomBatch(_, _, outDir, storeDir, expectedKeys, fpp, idCol, textCol))
 
   /** One micro-batch of [[bloomDedupStream]] — package-private for direct
     * idempotency testing. */
@@ -880,14 +871,8 @@ object Streaming {
       checkpoint: String, idCol: String = "doc_id", textCol: String = "text",
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processLineDedupBatch(batch, batchId, outDir, storeDir, idCol,
-          textCol, retainBatches)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processLineDedupBatch(_, _, outDir, storeDir, idCol, textCol, retainBatches))
   }
 
   /** One micro-batch of [[lineDedupStream]] — package-private for direct
@@ -942,74 +927,52 @@ object Streaming {
     * mergeability that SketchesSpec proves for shards is exactly what makes
     * the streaming state a table of bounded size (keys × 512 rows per
     * batch, compactable like every other store via [[compactStore]]).
-    * Output at `outDir/batch_id=N`: (key, est_distinct) running snapshot.
+    * Store protocol: [[Streaming]], unbounded. Output at
+    * `outDir/batch_id=N`: (key, est_distinct) running snapshot.
     */
   def hllDistinctStream(docs: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, keyCol: String = "source",
       valueCol: String = "tok"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processHllBatch(batch, batchId, outDir, storeDir, keyCol, valueCol)
-      }
-      .start()
+    startBatches(docs, checkpoint)(
+      processHllBatch(_, _, outDir, storeDir, keyCol, valueCol))
 
   /** One micro-batch of [[hllDistinctStream]] — package-private for direct
     * idempotency testing. */
   private[graft] def processHllBatch(batch: DataFrame, batchId: Long,
-      outDir: String, storeDir: String, keyCol: String, valueCol: String): Unit = {
-    import graft.operators.Sketches
-    val spark = batch.sparkSession
-    val mine = Sketches.hllRegisters(
-      batch.select(col(keyCol), col(valueCol)), col(valueCol), Seq(keyCol))
-    val prior = committedOr(spark, s"$storeDir/registers", batchId, mine.limit(0))
-    val merged = prior.unionByName(mine)
-      .groupBy(col(keyCol), col("bucket")).agg(max(col("reg")).as("reg"))
-    Sketches.hllEstimate(merged, Seq(keyCol))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/registers/batch_id=$batchId")
-    ()
-  }
+      outDir: String, storeDir: String, keyCol: String, valueCol: String): Unit =
+    storeStep(batchId, s"$storeDir/registers", outDir, Unbounded)(
+      Sketches.hllRegisters(batch.select(col(keyCol), col(valueCol)),
+        col(valueCol), Seq(keyCol))) { all =>
+      Sketches.hllEstimate(all.groupBy(col(keyCol), col("bucket"))
+        .agg(max(col("reg")).as("reg")), Seq(keyCol))
+    }
 
   /** Streaming per-key quantile monitor — the ingest-time twin of the
     * batch KLL queries (q176/q177): every micro-batch sketches its own
     * rows (`kll_sketch`), appends the sketch row per key to a
     * batch_id-partitioned store, and emits quantiles of EVERYTHING seen
     * so far by `kll_merge`-ing the store — the data itself is never
-    * re-read, only O(k·log) sketch longs per (key, batch). Replay-
-    * idempotent via the same committed-batch store discipline as
-    * [[hllDistinctStream]]; compactable with [[compactStore]] (re-merging
-    * compacted sketch rows is exactly kll_merge's contract).
+    * re-read, only O(k·log) sketch longs per (key, batch). Store
+    * protocol: [[Streaming]], unbounded; compactable with [[compactStore]]
+    * (re-merging compacted sketch rows is exactly kll_merge's contract).
     */
   def quantileMonitorStream(rows: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, keyCol: String, valueCol: String,
       k: Int = 256, qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processQuantileBatch(batch, batchId, outDir, storeDir, keyCol,
-          valueCol, k, qs)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processQuantileBatch(_, _, outDir, storeDir, keyCol, valueCol, k, qs))
 
   /** One micro-batch of [[quantileMonitorStream]] — package-private for
     * direct idempotency testing. */
   private[graft] def processQuantileBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, keyCol: String, valueCol: String,
-      k: Int, qs: Seq[Double]): Unit = {
-    val spark = batch.sparkSession
-    val mine = batch.groupBy(col(keyCol))
-      .agg(expr(s"kll_sketch($valueCol, $k)").as("sk"))
-    val prior = committedOr(spark, s"$storeDir/sketches", batchId, mine.limit(0))
-    val merged = prior.unionByName(mine)
-      .groupBy(col(keyCol)).agg(expr("kll_merge(sk)").as("sk"))
-    graft.operators.Kll.quantilesFromSketch(merged, Seq(keyCol), "sk", qs)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/sketches/batch_id=$batchId")
-    ()
-  }
+      k: Int, qs: Seq[Double]): Unit =
+    storeStep(batchId, s"$storeDir/sketches", outDir, Unbounded)(
+      batch.groupBy(col(keyCol))
+        .agg(expr(s"kll_sketch($valueCol, $k)").as("sk"))) { all =>
+      Kll.quantilesFromSketch(all.groupBy(col(keyCol))
+        .agg(expr("kll_merge(sk)").as("sk")), Seq(keyCol), "sk", qs)
+    }
 
   /** Streaming heavy hitters — the ingest-time twin of the batch exact
     * Misra–Gries pass (`Sketches.exactHeavyHitters`, q178), built on the
@@ -1028,50 +991,33 @@ object Streaming {
     * must beat n_b/k in some batch and so survive that batch's summary),
     * and `guaranteed = cnt_lb·k > n_total` marks tokens PROVEN heavy from
     * the lower bound alone. Output at `outDir/batch_id=N`:
-    * (tok, cnt_lb, n_total, guaranteed).
-    *
-    * Same exactly-once and retention contracts as the near-dup stores:
-    * reads see strictly-earlier partitions inside the window, writes
-    * overwrite their own partition, store size is O(window·k).
+    * (tok, cnt_lb, n_total, guaranteed). Store protocol: [[Streaming]];
+    * store size is O(window·k).
     */
   def heavyHittersStream(rows: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, tokCol: String = "tok", k: Int = 256,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processHeavyHittersBatch(batch, batchId, outDir, storeDir, tokCol,
-          k, retainBatches)
-      }
-      .start()
+    require(k >= 2, s"heavy hitters needs k >= 2, got $k")
+    startBatches(rows, checkpoint)(
+      processHeavyHittersBatch(_, _, outDir, storeDir, tokCol, k, retainBatches))
   }
 
   /** One micro-batch of [[heavyHittersStream]] — package-private for
     * direct superset/idempotency testing. */
   private[graft] def processHeavyHittersBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, tokCol: String, k: Int,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/mg", horizon)
-    val mine = mgSummary(batch, tokCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/mg", batchId, mine.limit(0), horizon)
-      .unionByName(mine)
-    // window total rides the null-token sentinel rows; 1-row broadcast
-    val totalDf = all.where(col("tok").isNull)
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_total"))
-    all.where(col("tok").isNotNull)
-      .groupBy(col("tok")).agg(sum(col("cnt")).as("cnt_lb"))
-      .join(broadcast(totalDf), lit(true), "left")
-      .withColumn("guaranteed", col("cnt_lb") * k > col("n_total"))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/mg/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/mg", outDir, retainBatches)(
+      mgSummary(batch, tokCol, k)) { all =>
+      // window total rides the null-token sentinel rows; 1-row broadcast
+      val totalDf = all.where(col("tok").isNull)
+        .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_total"))
+      all.where(col("tok").isNotNull)
+        .groupBy(col("tok")).agg(sum(col("cnt")).as("cnt_lb"))
+        .join(broadcast(totalDf), lit(true), "left")
+        .withColumn("guaranteed", col("cnt_lb") * k > col("n_total"))
+    }
 
   /** Misra–Gries summary of one batch as (tok, cnt) rows — ≤ k−1
     * candidate rows with `true − n/k ≤ cnt ≤ true`, plus the batch total
@@ -1141,97 +1087,51 @@ object Streaming {
       checkpoint: String, scoreCol: String = "score", labelCol: String = "y",
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAucBatch(batch, batchId, outDir, storeDir, scoreCol,
-          labelCol, retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processAucBatch(_, _, outDir, storeDir, scoreCol, labelCol, retainBatches))
   }
 
   /** One micro-batch of [[aucMonitorStream]] — package-private for direct
     * idempotency testing. */
   private[graft] def processAucBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, scoreCol: String, labelCol: String,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = batch
-      .select(col(scoreCol).cast("long").as("score"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .groupBy(col("score"))
-      .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.LmOps.binaryAucFromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      LmOps.scoreCounts(batch, Nil, scoreCol, labelCol, lit(true)))(
+      LmOps.binaryAucFromCounts)
 
   /** Streaming average-precision monitor — the PR-metric twin of
     * [[aucMonitorStream]] over the IDENTICAL (score, p, ng)
     * distinct-score count-delta store shape (`LmOps.binaryApFromCounts`
     * reads what `binaryAucFromCounts` reads): per batch, the exact
     * per-threshold-floor AP plus the prevalence baseline over every
-    * committed batch in the retention window. Same state bound,
-    * retention and replay contracts. Output at `outDir/batch_id=N`: the
+    * committed batch in the retention window. Same state bound; store
+    * protocol: [[Streaming]]. Output at `outDir/batch_id=N`: the
     * one-row (n, n_pos, n_neg, ap_micro, prevalence_micro) snapshot.
     */
   def apMonitorStream(rows: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, scoreCol: String = "score", labelCol: String = "y",
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processApBatch(batch, batchId, outDir, storeDir, scoreCol,
-          labelCol, retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processApBatch(_, _, outDir, storeDir, scoreCol, labelCol, retainBatches))
   }
 
   /** One micro-batch of [[apMonitorStream]] — package-private for direct
     * idempotency testing. */
   private[graft] def processApBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, scoreCol: String, labelCol: String,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = batch
-      .select(col(scoreCol).cast("long").as("score"),
-        when(col(labelCol).cast("long") === 1L, 1L).otherwise(0L).as("__y"))
-      .groupBy(col("score"))
-      .agg(sum(col("__y")).as("p"), sum(lit(1L) - col("__y")).as("ng"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.LmOps.binaryApFromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      LmOps.scoreCounts(batch, Nil, scoreCol, labelCol, lit(true)))(
+      LmOps.binaryApFromCounts)
 
   /** Streaming two-sample KS drift monitor — the ingest-time twin of the
     * batch `Profile.ksTwoSample` (q199): per-batch (v, ca, cb)
     * distinct-value count deltas in a batch_id-partitioned store, emit =
     * exact D over every committed batch in the retention window via
-    * `Profile.ksTwoSampleFromCounts`. Same state bound, retention and
-    * replay contracts as [[aucMonitorStream]]. Rows whose group is
+    * `Profile.ksTwoSampleFromCounts`. Same state bound as
+    * [[aucMonitorStream]]; store protocol: [[Streaming]]. Rows whose group is
     * neither `groupA` nor `groupB` are ignored. Output at
     * `outDir/batch_id=N`: the one-row (at_value, n_a, n_b, cum_a, cum_b,
     * d_micro) snapshot.
@@ -1241,14 +1141,9 @@ object Streaming {
       groupA: String, groupB: String,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processKsBatch(batch, batchId, outDir, storeDir, valueCol, groupCol,
-          groupA, groupB, retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processKsBatch(_, _, outDir, storeDir, valueCol, groupCol, groupA, groupB,
+        retainBatches))
   }
 
   /** One micro-batch of [[ksMonitorStream]] — package-private for direct
@@ -1256,36 +1151,18 @@ object Streaming {
   private[graft] def processKsBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, valueCol: String, groupCol: String,
       groupA: String, groupB: String,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = batch
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.Profile.ksTwoSampleFromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      Profile.valueCounts(batch, Nil, valueCol, groupCol, groupA, groupB, lit(true)))(
+      Profile.ksTwoSampleFromCounts)
 
   /** Streaming PSI drift monitor — the mass-weighted twin of
     * [[ksMonitorStream]] over the IDENTICAL (v, ca, cb) distinct-value
     * count-delta store shape (`Profile.psiFromCounts` reads what
     * `ksTwoSampleFromCounts` reads): per batch, exact PSI over every
     * committed batch in the retention window, bucket edges recomputed
-    * from the merged min/max at emit. Same state bound, retention and
-    * replay contracts as the KS monitor. Output at `outDir/batch_id=N`:
+    * from the merged min/max at emit. Same state bound as the KS monitor;
+    * store protocol: [[Streaming]]. Output at `outDir/batch_id=N`:
     * the per-bucket (bucket, lo, n_a, n_b, share_a_micro, share_b_micro,
     * term9, psi6, n_skipped) report.
     */
@@ -1294,14 +1171,11 @@ object Streaming {
       groupA: String, groupB: String, buckets: Int = 16,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPsiBatch(batch, batchId, outDir, storeDir, valueCol, groupCol,
-          groupA, groupB, buckets, retainBatches)
-      }
-      .start()
+    require(buckets >= 2 && buckets <= 1024,
+      s"buckets must be in [2, 1024], got $buckets")
+    startBatches(rows, checkpoint)(
+      processPsiBatch(_, _, outDir, storeDir, valueCol, groupCol, groupA, groupB,
+        buckets, retainBatches))
   }
 
   /** One micro-batch of [[psiMonitorStream]] — package-private for direct
@@ -1309,28 +1183,10 @@ object Streaming {
   private[graft] def processPsiBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, valueCol: String, groupCol: String,
       groupA: String, groupB: String, buckets: Int = 16,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = batch
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.Profile.psiFromCounts(all, buckets)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      Profile.valueCounts(batch, Nil, valueCol, groupCol, groupA, groupB, lit(true)))(
+      Profile.psiFromCounts(_, buckets))
 
   /** CUSUM change ALARM over a streaming per-batch statistic — the "page
     * now" layer on top of the monitor family: every monitor emits a
@@ -1352,14 +1208,10 @@ object Streaming {
       allowance: Long, threshold: Long,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCusumBatch(batch.sparkSession, statOf(batch), batchId,
-          outDir, storeDir, target, allowance, threshold, retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint) { (batch, batchId) =>
+      processCusumBatch(batch.sparkSession, statOf(batch), batchId,
+        outDir, storeDir, target, allowance, threshold, retainBatches)
+    }
   }
 
   /** One micro-batch of [[cusumAlarmStream]] — package-private for direct
@@ -1405,7 +1257,7 @@ object Streaming {
     * (`Profile.wasserstein1FromCounts`): one value-count store now feeds
     * all three drift dials — max CDF gap (KS: where), mass-weighted
     * total (PSI: how much), and CDF area (W1: how far, in value units).
-    * Same retention and replay contracts. Output at
+    * Store protocol: [[Streaming]]. Output at
     * `outDir/batch_id=N`: one row — n_a, n_b, n_values, w1_micro.
     */
   def w1MonitorStream(rows: DataFrame, outDir: String, storeDir: String,
@@ -1413,14 +1265,9 @@ object Streaming {
       groupA: String, groupB: String,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processW1Batch(batch, batchId, outDir, storeDir, valueCol, groupCol,
-          groupA, groupB, retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processW1Batch(_, _, outDir, storeDir, valueCol, groupCol, groupA, groupB,
+        retainBatches))
   }
 
   /** One micro-batch of [[w1MonitorStream]] — package-private for direct
@@ -1428,36 +1275,18 @@ object Streaming {
   private[graft] def processW1Batch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, valueCol: String, groupCol: String,
       groupA: String, groupB: String,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = batch
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.Profile.wasserstein1FromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      Profile.valueCounts(batch, Nil, valueCol, groupCol, groupA, groupB, lit(true)))(
+      Profile.wasserstein1FromCounts)
 
   /** Streaming Jensen–Shannon drift monitor — the FOURTH reader of the
     * (v, ca, cb) distinct-value count-delta store
     * ([[ksMonitorStream]]/[[psiMonitorStream]]/[[w1MonitorStream]]):
     * the BOUNDED dial — every term finite (one-sided buckets contribute
     * share·ln2, no exclusions), total in [0, ln 2], so one alert
-    * threshold transfers across streams. Same retention and replay
-    * contracts. Output at `outDir/batch_id=N`: per-bucket rows with the
+    * threshold transfers across streams. Store protocol: [[Streaming]].
+    * Output at `outDir/batch_id=N`: per-bucket rows with the
     * js6 scalar riding each.
     */
   def jsMonitorStream(rows: DataFrame, outDir: String, storeDir: String,
@@ -1465,14 +1294,11 @@ object Streaming {
       groupA: String, groupB: String, buckets: Int = 16,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processJsBatch(batch, batchId, outDir, storeDir, valueCol, groupCol,
-          groupA, groupB, buckets, retainBatches)
-      }
-      .start()
+    require(buckets >= 2 && buckets <= 1024,
+      s"buckets must be in [2, 1024], got $buckets")
+    startBatches(rows, checkpoint)(
+      processJsBatch(_, _, outDir, storeDir, valueCol, groupCol, groupA, groupB,
+        buckets, retainBatches))
   }
 
   /** One micro-batch of [[jsMonitorStream]] — package-private for direct
@@ -1480,27 +1306,10 @@ object Streaming {
   private[graft] def processJsBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, valueCol: String, groupCol: String,
       groupA: String, groupB: String, buckets: Int = 16,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // the processCurationBatch lesson
-    val mine = batch
-      .filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).cast("long").as("v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-      .groupBy(col("v"))
-      .agg(sum(col("__ia")).as("ca"), sum(lit(1L) - col("__ia")).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.Profile.jsDivergenceFromCounts(all, buckets)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      Profile.valueCounts(batch, Nil, valueCol, groupCol, groupA, groupB, lit(true)))(
+      Profile.jsDivergenceFromCounts(_, buckets))
 
   /** Streaming χ² independence monitor — the CATEGORICAL drift twin
     * completing the monitor trio ([[aucMonitorStream]] for ranking,
@@ -1508,8 +1317,8 @@ object Streaming {
     * contingency count deltas in a batch_id-partitioned store, emit =
     * exact χ² + Cramér's V over every committed batch in the retention
     * window via `Profile.chiSquareFromCounts`. State is bounded by the
-    * |A|·|B| observed-cell cardinality inside the window. Same retention
-    * and replay contracts as the other monitors. Output at
+    * |A|·|B| observed-cell cardinality inside the window. Store protocol:
+    * [[Streaming]]. Output at
     * `outDir/batch_id=N`: the one-row (n, n_a, n_b, dof, chi2_micro,
     * cramers_v) snapshot.
     */
@@ -1517,39 +1326,19 @@ object Streaming {
       checkpoint: String, aCol: String, bCol: String,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processChiSquareBatch(batch, batchId, outDir, storeDir, aCol, bCol,
-          retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processChiSquareBatch(_, _, outDir, storeDir, aCol, bCol, retainBatches))
   }
 
   /** One micro-batch of [[chiSquareMonitorStream]] — package-private for
     * direct idempotency testing. */
   private[graft] def processChiSquareBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, aCol: String, bCol: String,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = batch
-      .select(col(aCol).cast("string").as("a"), col(bCol).cast("string").as("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.Profile.chiSquareFromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      batch.select(col(aCol).cast("string").as("a"), col(bCol).cast("string").as("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("o")))(
+      Profile.chiSquareFromCounts)
 
   /** Streaming probability-calibration monitor — the ingest-time twin of
     * the batch `LmOps.calibrationReport` (q197), completing the monitor
@@ -1560,7 +1349,7 @@ object Streaming {
     * retention window via `LmOps.calibrationReportFromCounts`. State is
     * ≤ `bins` rows per batch — the smallest store of the four. `bins`
     * must stay constant for the life of the store (it defines bin ids).
-    * Same retention and replay contracts as [[aucMonitorStream]]. Output
+    * Store protocol: [[Streaming]]. Output
     * at `outDir/batch_id=N`: the per-bin (bin, n, n_pos, conf_micro,
     * acc_micro, brier_micro, ece_micro) report.
     */
@@ -1569,38 +1358,20 @@ object Streaming {
       labelCol: String = "y", bins: Int = 10,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCalibrationBatch(batch, batchId, outDir, storeDir,
-          probMicroCol, labelCol, bins, retainBatches)
-      }
-      .start()
+    require(bins >= 2, s"bins must be >= 2, got $bins")
+    startBatches(rows, checkpoint)(
+      processCalibrationBatch(_, _, outDir, storeDir, probMicroCol, labelCol, bins,
+        retainBatches))
   }
 
   /** One micro-batch of [[calibrationMonitorStream]] — package-private for
     * direct idempotency testing. */
   private[graft] def processCalibrationBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, probMicroCol: String, labelCol: String,
-      bins: Int, retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write —
-    // without it each action re-scans and re-aggregates the batch (the
-    // processCurationBatch lesson)
-    val mine = graft.operators.LmOps
-      .calibrationBinCounts(batch, probMicroCol, labelCol, bins)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.LmOps.calibrationReportFromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      bins: Int, retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      LmOps.calibrationBinCounts(batch, probMicroCol, labelCol, bins))(
+      LmOps.calibrationReportFromCounts)
 
   /** Streaming Kendall-τ-b association monitor — the ingest-time twin of
     * the batch `Profile.kendallTauB` (q218), extending the monitor family
@@ -1613,48 +1384,28 @@ object Streaming {
     * stores ride), bounded at the |X|×|Y| cell count by the operator's
     * coarse-score contract, never the row count. Emit = the exact batch
     * statistic over every committed batch in the retention window via
-    * `kendallTauBFromCounts`. Same retention and replay contracts as
-    * [[ksMonitorStream]]. Output at `outDir/batch_id=N`: one row —
-    * n, conc, disc, tie_x_pairs, tie_y_pairs, tau_b6.
+    * `kendallTauBFromCounts`. Store protocol: [[Streaming]]. Output at
+    * `outDir/batch_id=N`: one row — n, conc, disc, tie_x_pairs,
+    * tie_y_pairs, tau_b6.
     */
   def tauMonitorStream(rows: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, xCol: String, yCol: String,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processTauBatch(batch, batchId, outDir, storeDir, xCol, yCol,
-          retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processTauBatch(_, _, outDir, storeDir, xCol, yCol, retainBatches))
   }
 
   /** One micro-batch of [[tauMonitorStream]] — package-private for direct
     * idempotency testing. */
   private[graft] def processTauBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, xCol: String, yCol: String,
-      retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit union and the store write
-    // (the processCurationBatch lesson)
-    val mine = batch
-      .select(col(xCol).cast("long").as("__x"),
-        col(yCol).cast("long").as("__y"))
-      .where(col("__x").isNotNull && col("__y").isNotNull)
-      .groupBy(col("__x"), col("__y")).agg(count(lit(1)).as("__o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    graft.operators.Profile.kendallTauBFromCounts(all)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      batch.select(col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
+        .where(col("__x").isNotNull && col("__y").isNotNull)
+        .groupBy(col("__x"), col("__y")).agg(count(lit(1)).as("__o")))(
+      Profile.kendallTauBFromCounts)
 
   /** Streaming isotonic-calibration monitor — the ingest-time twin of the
     * batch `LmOps.isotonicCalibrate` (q204), completing the batch↔stream
@@ -1665,7 +1416,7 @@ object Streaming {
     * deltas to ≤ `bins` rows, runs PAV driver-side (a no-op at that
     * size — the q204 bounded-collect contract), and writes the fitted
     * step literal-built. `bins` must stay constant for the life of the
-    * store. Same retention and replay contracts as [[aucMonitorStream]].
+    * store. Store protocol: [[Streaming]].
     * Output at `outDir/batch_id=N`: (bin, n, n_pos, conf_micro,
     * iso_micro) with iso_micro non-decreasing in bin.
     */
@@ -1674,49 +1425,32 @@ object Streaming {
       labelCol: String = "y", bins: Int = 32,
       retainBatches: Int = DefaultRetainBatches): StreamingQuery = {
     checkRetain(retainBatches)
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processIsotonicBatch(batch, batchId, outDir, storeDir,
-          probMicroCol, labelCol, bins, retainBatches)
-      }
-      .start()
+    require(bins >= 2, s"bins must be >= 2, got $bins")
+    startBatches(rows, checkpoint)(
+      processIsotonicBatch(_, _, outDir, storeDir, probMicroCol, labelCol, bins,
+        retainBatches))
   }
 
   /** One micro-batch of [[isotonicMonitorStream]] — package-private for
     * direct idempotency testing. */
   private[graft] def processIsotonicBatch(batch: DataFrame, batchId: Long,
       outDir: String, storeDir: String, probMicroCol: String, labelCol: String,
-      bins: Int, retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    // persist: `mine` feeds BOTH the emit collect and the store write
-    // (the processCalibrationBatch lesson)
-    val mine = graft.operators.LmOps
-      .calibrationBinCounts(batch, probMicroCol, labelCol, bins)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = committedOr(spark, s"$storeDir/counts", batchId, mine.limit(0),
-      horizon).unionByName(mine)
-    // merged per-bin counts → bounded collect (≤ bins rows) → driver PAV
-    // → literal-built emit (the q204 single-scan contract: joining the
-    // uncached agg plan back would re-run the merge)
-    // BOUND: one row per calibration bin — ≤ bins rows
-    val rows = all.groupBy(col("bin"))
-      .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
-        sum(col("spm")).as("__spm"))
-      .withColumn("conf_micro", expr("__spm DIV n"))
-      .select(col("bin"), col("n"), col("n_pos"), col("conf_micro"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    graft.operators.LmOps.isotonicFromCollected(spark, rows,
-      graft.operators.LmOps.pavFit(rows.map(t => (t._1, t._2, t._3))))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    mine.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    mine.unpersist()
-    ()
-  }
+      bins: Int, retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      LmOps.calibrationBinCounts(batch, probMicroCol, labelCol, bins)) { all =>
+      // merged per-bin counts → bounded collect (≤ bins rows) → driver PAV
+      // → literal-built emit (the q204 single-scan contract: joining the
+      // uncached agg plan back would re-run the merge)
+      // BOUND: one row per calibration bin — ≤ bins rows
+      val rows = all.groupBy(col("bin"))
+        .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
+          sum(col("spm")).as("__spm"))
+        .select(col("bin"), col("n"), col("n_pos"), expr("__spm DIV n").as("conf_micro"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      LmOps.isotonicFromCollected(all.sparkSession, rows,
+        LmOps.pavFit(rows.map(t => (t._1, t._2, t._3))))
+    }
 
   /** Streaming ordered-funnel progress — the ingest-time twin of the batch
     * Funnel.steps operator. Per-entity step-completion times live in a
@@ -1735,14 +1469,9 @@ object Streaming {
       checkpoint: String, stepTypes: Seq[String],
       entityCol: String = "user_id", tsCol: String = "ts",
       typeCol: String = "event_type"): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processFunnelBatch(batch, batchId, outDir, storeDir, stepTypes,
-          entityCol, tsCol, typeCol)
-      }
-      .start()
+    startBatches(events, checkpoint)(
+      processFunnelBatch(_, _, outDir, storeDir, stepTypes, entityCol, tsCol,
+        typeCol))
 
   /** One micro-batch of [[funnelStream]] — package-private for direct
     * idempotency testing. */
@@ -1807,14 +1536,8 @@ object Streaming {
   def scd2Stream(changes: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, keyCol: String = "user_id", tsCol: String = "ts",
       tieCol: String = "event_id", valueCol: String = "event_type"): StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processScd2Batch(batch, batchId, outDir, storeDir,
-          keyCol, tsCol, tieCol, valueCol)
-      }
-      .start()
+    startBatches(changes, checkpoint)(
+      processScd2Batch(_, _, outDir, storeDir, keyCol, tsCol, tieCol, valueCol))
 
   /** One micro-batch of [[scd2Stream]] — package-private for direct
     * idempotency testing. */
@@ -1863,14 +1586,9 @@ object Streaming {
       direction: String = "backward", tolerance: Long = Long.MaxValue,
       retainBatches: Int = Unbounded): StreamingQuery = {
     checkRetain(retainBatches)
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAsOfBatch(batch, batchId, outDir, storeDir, isLeft, keyCol,
-          tsCol, rightOrd, payload, direction, tolerance, retainBatches)
-      }
-      .start()
+    startBatches(events, checkpoint)(
+      processAsOfBatch(_, _, outDir, storeDir, isLeft, keyCol, tsCol, rightOrd,
+        payload, direction, tolerance, retainBatches))
   }
 
   /** One micro-batch of [[asOfStream]] — package-private for direct
@@ -1925,44 +1643,32 @@ object Streaming {
     * (map-side combinable) and the audit re-sums |QI-combos|-sized delta
     * partitions, so per-batch cost is O(batch + combos·batches), never
     * O(history rows); compact the store with [[compactStore]] on the same
-    * schedule as the near-dup band stores. Replay-idempotent: deltas land
-    * in an overwrite-on-retry `batch_id` partition and `committedOr`
-    * reads strictly earlier ones.
+    * schedule as the near-dup band stores. Store protocol: [[Streaming]],
+    * unbounded.
     */
   def kAnonymityStream(rows: DataFrame, outDir: String, storeDir: String,
       checkpoint: String, qiCols: Seq[String], k: Long): StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processKAnonymityBatch(batch, batchId, outDir, storeDir, qiCols, k)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processKAnonymityBatch(_, _, outDir, storeDir, qiCols, k))
 
   /** One micro-batch of [[kAnonymityStream]] — package-private for direct
     * idempotency testing. */
   private[graft] def processKAnonymityBatch(batch: DataFrame, batchId: Long,
-      outDir: String, storeDir: String, qiCols: Seq[String], k: Long): Unit = {
-    val spark = batch.sparkSession
-    val delta = batch.groupBy(qiCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows")).persist()
-    delta.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    val all = committedOr(spark, s"$storeDir/counts", batchId, delta.limit(0))
-      .unionByName(delta)
-    all.groupBy(qiCols.map(col): _*)
-      .agg(sum(col("n_rows")).as("n_rows"))
-      .withColumn("is_risky", col("n_rows") < k)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    delta.unpersist()
-    ()
-  }
+      outDir: String, storeDir: String, qiCols: Seq[String], k: Long): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, Unbounded)(
+      batch.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("n_rows"))) { all =>
+      all.groupBy(qiCols.map(col): _*)
+        .agg(sum(col("n_rows")).as("n_rows"))
+        .withColumn("is_risky", col("n_rows") < k)
+    }
 
   /** Streaming distribution-drift monitor — batch `Profile.bucketDrift`
     * running continuously: every micro-batch emits the bucket-share
     * total-variation report of everything seen so far against a STATIC
     * reference snapshot (the training distribution). Same count-delta
     * store as [[kAnonymityStream]] — per-batch cost O(batch + buckets ×
-    * window), compactable with [[compactStore]]; replay-idempotent.
+    * window), compactable with [[compactStore]]; store protocol:
+    * [[Streaming]].
     * `reference` must carry the same single bucket column.
     * `retainBatches` bounds the comparison to a sliding window of recent
     * batches (finite by default — for drift this is usually also the
@@ -1976,14 +1682,9 @@ object Streaming {
     checkRetain(retainBatches)
     val refCounts = reference.groupBy(col(bucketCol))
       .agg(count(lit(1)).as("n_rows")).persist()
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBucketDriftBatch(batch, batchId, refCounts, outDir, storeDir,
-          bucketCol, retainBatches)
-      }
-      .start()
+    startBatches(rows, checkpoint)(
+      processBucketDriftBatch(_, _, refCounts, outDir, storeDir, bucketCol,
+        retainBatches))
   }
 
   /** One micro-batch of [[bucketDriftStream]] — package-private for direct
@@ -1991,21 +1692,13 @@ object Streaming {
     * n_rows) reference. */
   private[graft] def processBucketDriftBatch(batch: DataFrame, batchId: Long,
       refCounts: DataFrame, outDir: String, storeDir: String,
-      bucketCol: String, retainBatches: Int = DefaultRetainBatches): Unit = {
-    val spark = batch.sparkSession
-    val horizon = horizonOf(batchId, retainBatches)
-    pruneStore(spark, s"$storeDir/counts", horizon)
-    val delta = batch.groupBy(col(bucketCol))
-      .agg(count(lit(1)).as("n_rows")).persist()
-    delta.write.mode("overwrite").parquet(s"$storeDir/counts/batch_id=$batchId")
-    val seen = committedOr(spark, s"$storeDir/counts", batchId, delta.limit(0), horizon)
-      .unionByName(delta)
-      .groupBy(col(bucketCol)).agg(sum(col("n_rows")).as("n_rows"))
-    graft.operators.Profile.bucketDriftFromCounts(seen, refCounts, bucketCol)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    delta.unpersist()
-    ()
-  }
+      bucketCol: String, retainBatches: Int = DefaultRetainBatches): Unit =
+    storeStep(batchId, s"$storeDir/counts", outDir, retainBatches)(
+      batch.groupBy(col(bucketCol)).agg(count(lit(1)).as("n_rows"))) { all =>
+      Profile.bucketDriftFromCounts(
+        all.groupBy(col(bucketCol)).agg(sum(col("n_rows")).as("n_rows")),
+        refCounts, bucketCol)
+    }
 
   /** Compact a batch_id-partitioned near-dup store table: merge every
     * partition with batch_id ≤ `upTo` into the single partition
@@ -2057,13 +1750,8 @@ object Streaming {
   def sceneRecipe(spark: SparkSession, inDir: String, outDir: String, checkpoint: String)(
       recipe: DataFrame => DataFrame): StreamingQuery = {
     val schema = spark.read.parquet(inDir).schema
-    spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        recipe(batch).write.mode("append").parquet(outDir)
-      }
-      .start()
+    startBatches(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, _) => recipe(batch).write.mode("append").parquet(outDir)
+    }
   }
 }

@@ -1705,4 +1705,126 @@ class IoStreamingSpec extends SparkSpec {
     assert(storeRows <= batches.length.toLong * k,
       s"store holds $storeRows rows — summaries are not pruned to k")
   }
+
+  test("monitor starters reject k, buckets and bins before the stream starts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("failfast").toString
+    def scored = MemoryStream[(Long, Long)].toDF().toDF("pm", "y")
+    val starts: Seq[(String, String => Any)] = Seq(
+      "heavyHittersStream(k = 1)" -> (ckpt => Streaming.heavyHittersStream(
+        MemoryStream[String].toDF().toDF("tok"), s"$dir/out", s"$dir/store",
+        ckpt, "tok", k = 1)),
+      "psiMonitorStream(buckets = 1)" -> (ckpt => Streaming.psiMonitorStream(
+        MemoryStream[(Long, String)].toDF().toDF("v", "g"), s"$dir/out",
+        s"$dir/store", ckpt, "v", "g", "ref", "live", buckets = 1)),
+      "calibrationMonitorStream(bins = 1)" -> (ckpt =>
+        Streaming.calibrationMonitorStream(scored, s"$dir/out", s"$dir/store",
+          ckpt, "pm", "y", bins = 1)))
+    starts.zipWithIndex.foreach { case ((name, start), i) =>
+      val ckpt = s"$dir/ckpt$i"
+      intercept[IllegalArgumentException](start(ckpt))
+      assert(!new java.io.File(ckpt).exists, s"$name created its checkpoint")
+    }
+    assert(!new java.io.File(s"$dir/store").exists)
+  }
+
+  test("count-delta monitors at retainBatches = 2: batch 3 emits the batch operator over batches 1-3, store keeps batch_id >= 1") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, count, lit}
+    import graft.operators.{LmOps, Profile}
+    // four batches of different sizes whose distributions move with the
+    // batch index, so a window over batches 1-3 differs from all four
+    def h(i: Int): Long = (i.toLong * 2654435761L) % 1000003L
+    def ids(b: Int) = (b * 400) until (b * 400 + 150 + 40 * b)
+    def scores(b: Int): DataFrame = ids(b).map { i =>
+      val s = h(i) % 37L + b
+      (if (i % 17 == 0) None else Some(s), if (s * 3 % 7 > 2) 1L else 0L)
+    }.toDF("score", "y")
+    def values(b: Int): DataFrame = ids(b).flatMap { i =>
+      val v = h(i) % 40L
+      Seq((if (i % 19 == 0) None else Some(v), "ref"),
+        (Some(v + 3L * b), "live"), (Some(v), "other"))
+    }.toDF("v", "g")
+    def cats(b: Int): DataFrame = ids(b).map { i =>
+      val q = h(i) % 12L
+      (s"s${q % 3}", if ((q / 3 + i % 2 + b) % 2 == 0) "en" else "fr")
+    }.toDF("src", "lang")
+    def probs(b: Int): DataFrame = ids(b).map { i =>
+      val pm = h(i) % 1000001L
+      (pm, if ((pm / 997L + i % 5 + b) % 11L > 4L) 1L else 0L)
+    }.toDF("pm", "y")
+    def cells(b: Int): DataFrame = ids(b).map { i =>
+      val x = h(i) % 9L
+      (x, if (h(i) % 13L == 5L) 8L - x else (h(i) >> 2) % 3L + x * (b % 2))
+    }.toDF("xv", "yv")
+    def toks(b: Int): DataFrame = ids(b).map { i =>
+      if (i % 4 == 0) s"hot${b % 2}" else if (i % 9 == 1) "warm" else s"t${h(i) % 60}"
+    }.toDF("tok")
+    def buckets(b: Int): DataFrame = ids(b).map(i => h(i) % (3L + b)).toDF("bucket")
+    val ref = Seq(0L, 1L, 1L, 2L, 3L, 4L, 5L).toDF("bucket")
+    val refCounts = ref.groupBy(col("bucket")).agg(count(lit(1)).as("n_rows"))
+    val k = 4
+    // heavy hitters emits merged summaries, not exact counts: its batch
+    // operator is the monitor over a fresh store fed only batches 1-3
+    def hhOver(bs: Seq[DataFrame]): DataFrame = {
+      val d = Files.createTempDirectory("hhwindow").toString
+      bs.zipWithIndex.foreach { case (b, id) =>
+        Streaming.processHeavyHittersBatch(b, id.toLong, s"$d/out", s"$d/store",
+          "tok", k, Streaming.Unbounded)
+      }
+      spark.read.parquet(s"$d/out/batch_id=${bs.length - 1}")
+    }
+    type Step = (DataFrame, Long, String, String) => Unit
+    val monitors: Seq[(String, String, Int => DataFrame, Step, DataFrame => DataFrame)] = Seq(
+      ("heavy hitters", "mg", toks,
+        (b, id, o, s) => Streaming.processHeavyHittersBatch(b, id, o, s, "tok", k, 2),
+        _ => hhOver((1 to 3).map(toks))),
+      ("AUC", "counts", scores,
+        (b, id, o, s) => Streaming.processAucBatch(b, id, o, s, "score", "y", 2),
+        LmOps.binaryAuc(_, "score", "y")),
+      ("AP", "counts", scores,
+        (b, id, o, s) => Streaming.processApBatch(b, id, o, s, "score", "y", 2),
+        LmOps.binaryAp(_, "score", "y")),
+      ("KS", "counts", values,
+        (b, id, o, s) => Streaming.processKsBatch(b, id, o, s, "v", "g", "ref", "live", 2),
+        Profile.ksTwoSample(_, "v", "g", "ref", "live")),
+      ("PSI", "counts", values,
+        (b, id, o, s) => Streaming.processPsiBatch(b, id, o, s, "v", "g", "ref", "live", 8, 2),
+        Profile.psi(_, "v", "g", "ref", "live", 8)),
+      ("W1", "counts", values,
+        (b, id, o, s) => Streaming.processW1Batch(b, id, o, s, "v", "g", "ref", "live", 2),
+        Profile.wasserstein1(_, "v", "g", "ref", "live")),
+      ("JS", "counts", values,
+        (b, id, o, s) => Streaming.processJsBatch(b, id, o, s, "v", "g", "ref", "live", 8, 2),
+        Profile.jsDivergence(_, "v", "g", "ref", "live", 8)),
+      ("chi-square", "counts", cats,
+        (b, id, o, s) => Streaming.processChiSquareBatch(b, id, o, s, "src", "lang", 2),
+        Profile.chiSquare(_, "src", "lang")),
+      ("calibration", "counts", probs,
+        (b, id, o, s) => Streaming.processCalibrationBatch(b, id, o, s, "pm", "y", 10, 2),
+        LmOps.calibrationReport(_, "pm", "y", 10)),
+      ("tau-b", "counts", cells,
+        (b, id, o, s) => Streaming.processTauBatch(b, id, o, s, "xv", "yv", 2),
+        Profile.kendallTauB(_, "xv", "yv")),
+      ("isotonic", "counts", probs,
+        (b, id, o, s) => Streaming.processIsotonicBatch(b, id, o, s, "pm", "y", 16, 2),
+        LmOps.isotonicCalibrate(_, "pm", "y", 16)),
+      ("bucket drift", "counts", buckets,
+        (b, id, o, s) => Streaming.processBucketDriftBatch(b, id, refCounts, o, s, "bucket", 2),
+        Profile.bucketDrift(_, ref, "bucket")))
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    monitors.foreach { case (name, sub, data, step, batchOp) =>
+      val dir = Files.createTempDirectory("retain2").toString
+      (0 to 3).foreach(b => step(data(b), b.toLong, s"$dir/out", s"$dir/store"))
+      val streamed = rowsOf(spark.read.parquet(s"$dir/out/batch_id=3"))
+      val want = rowsOf(batchOp((1 to 3).map(data).reduce(_ unionByName _)))
+      assert(streamed.nonEmpty, s"$name: empty emit")
+      assert(streamed == want, s"$name: streamed=$streamed\nwant=$want")
+      val kept = new java.io.File(s"$dir/store/$sub").listFiles().map(_.getName)
+        .filter(_.startsWith("batch_id=")).map(_.stripPrefix("batch_id=").toLong).toSet
+      assert(kept == Set(1L, 2L, 3L), s"$name: store holds batch_ids $kept")
+    }
+  }
 }

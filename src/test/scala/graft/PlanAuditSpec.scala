@@ -819,6 +819,26 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("only Streaming.startBatches starts a stream or registers foreachBatch") {
+    // one starter, so the writeStream/checkpoint/foreachBatch block is
+    // written once and every per-batch entry point goes through it
+    val starts = """\.\s*(foreachBatch|writeStream)\b""".r
+    val home = mainRoot.resolve("streaming/Streaming.scala").toFile
+    val sources = mainSources
+    assert(sources.contains(home), s"$home not found")
+    val starter = """(?s)private def startBatches\(.*?\.start\(\)""".r
+    val homeTxt = java.nio.file.Files.readString(home.toPath)
+    assert(starter.findFirstIn(homeTxt).exists(starts.findAllIn(_).size == 2),
+      "startBatches no longer starts the stream itself")
+    val offenders = sources.filter { f =>
+      val txt = java.nio.file.Files.readString(f.toPath)
+      starts.findFirstIn(if (f == home) starter.replaceFirstIn(txt, "") else txt).nonEmpty
+    }.map(_.getPath)
+    assert(offenders.isEmpty,
+      s".writeStream or .foreachBatch outside Streaming.startBatches:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("every driver collect in library code declares its bound") {
     // r19 verdict: driver-side collects are acceptable at 100 TB only
     // while their row bounds hold — so every `.collect()` in the library
